@@ -819,7 +819,7 @@ def catalog_refresh_mview(
         for alias, tname in mv["tables"].items():
             snapshot_sql_register(
                 spark, alias, state[tname]["root"],
-                version=state[tname]["version"], defer=True,
+                version=state[tname]["version"],
             )
         df = spark.sql(mv["sql"])
         m = snapshot_commit(df, mv["root"], mode="overwrite")
@@ -977,8 +977,7 @@ def catalog_read(
                     "table at this catalog version"
                 )
             snapshot_sql_register(
-                spark, alias, tpin["root"], version=tpin["version"],
-                defer=True,
+                spark, alias, tpin["root"], version=tpin["version"]
             )
         return spark.sql(vdef["sql"])
     return snapshot_read(spark, pin["root"], version=pin["version"])

@@ -1883,6 +1883,7 @@ def _read_pinned(
         )
         groups.setdefault((sj, tids), []).append(rel)
     parts = []
+    tomb_keys: dict = {}
     for (sj, tids), group in sorted(groups.items()):
         written = StructType.fromJson(json.loads(sj))
         df = spark.read.schema(written).parquet(
@@ -1902,7 +1903,17 @@ def _read_pinned(
         history = manifest.get("column_history", {})
         for i in tids:
             t = tombs[i]
-            keys = spark.read.parquet(*[os.path.join(root, f) for f in t["files"]])
+            if i not in tomb_keys:
+                # one read per tombstone, shared by every group it covers:
+                # inferring a schema is a Spark job, and positional delete
+                # files always hold (file, pos), so those skip it
+                reader = spark.read
+                if t.get("kind") == "positional":
+                    reader = reader.schema("file STRING, pos LONG")
+                tomb_keys[i] = reader.parquet(
+                    *[os.path.join(root, f) for f in t["files"]]
+                )
+            keys = tomb_keys[i]
             if t.get("kind") == "positional":
                 cond = (df["__file"] == keys["file"]) & (df["__pos"] == keys["pos"])
                 df = df.join(F.broadcast(keys), on=cond, how="left_anti")

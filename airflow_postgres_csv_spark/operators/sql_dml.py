@@ -156,8 +156,8 @@ def _resolve(spark: SparkSession, name: str, tables: dict | None) -> str:
 def _source_df(spark: SparkSession, query: str):
     """An INSERT/MERGE source: a full query (SELECT/WITH/TABLE/VALUES,
     possibly parenthesized) or a bare table name. Runs through
-    ``spark.sql`` so registered snapshot views keep their fresh-relation
-    pruning semantics."""
+    ``spark.sql`` so registered snapshot views in it get the statement
+    hook's file pruning."""
     q = query.strip()
     while q.startswith("(") and q.endswith(")"):
         # strip only a TRUE outer wrap — "(a) UNION (b)" closes its first

@@ -2737,15 +2737,16 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# SQL-addressable snapshot tables (round 9,
-# sources/snapshot_batch.py::snapshot_sql_register): raw spark.sql TEXT
-# names two snapshot tables — orders pinned at version 1 (time travel
-# through the view) and customer at latest — and joins them with a
-# selective range predicate. The views are named logical plans over the
-# batch data source, so the WHERE conjuncts reach pushFilters and prune
-# the range-clustered commits exactly as the DataFrame path does
-# (plan-pinned in tests/test_snapshot_batch_source.py); the oracle
-# reconstructs the pinned version arithmetically.
+# SQL-addressable snapshot tables (sources/snapshot_batch.py::
+# snapshot_sql_register): raw spark.sql TEXT names two snapshot tables —
+# orders pinned at version 1 (time travel through the view) and customer
+# at latest — and joins them with a selective range predicate. The views
+# are native pinned scans (the same plan as snapshot_read); the session's
+# spark.sql hook reads the range Catalyst pushed into the orders scan,
+# prunes the range-clustered commits through _plan_scan and re-plans the
+# statement over the kept files (plan-pinned in
+# tests/test_snapshot_batch_source.py); the oracle reconstructs the pinned
+# version arithmetically.
 # ---------------------------------------------------------------------------
 
 
@@ -2764,9 +2765,6 @@ def snapshot_sql_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     snapshot_commit(orders.where(F.col("o_orderkey") % 3 != 0), o_root)
     snapshot_commit(customer, c_root)
-    # the default registration prunes AND stays reuse-safe: the session
-    # statement hook re-registers a fresh relation per statement (see
-    # snapshot_sql_register's upstream scan-cache contract)
     snapshot_sql_register(spark, "snap_orders_v1", o_root, version=1)
     snapshot_sql_register(spark, "snap_customer", c_root)
     return spark.sql(

@@ -1,34 +1,34 @@
-"""Batch Python Data Source over snapshot tables, with filter-pushdown
-file skipping: ``spark.read.format("snapshot_table").load(root)``.
+"""Snapshot tables behind Spark's two read surfaces: the
+``snapshot_table`` batch data source and SQL views for raw ``spark.sql``
+text.
 
-The operator API (``snapshot_read`` / ``snapshot_scan`` /
-``snapshot_lookup``) asks the CALLER to say which predicate should prune
-files. This source moves that decision where it belongs on a 100 TB
-cluster — inside the scan: Spark's planner hands the WHERE clause's
-conjuncts to ``pushFilters`` (Python Data Source API, Spark 4.1), the
-source intersects them into per-column ranges, and ``partitions()``
-plans the file set through the SAME hierarchical pruning the operators
-use (commit-level ranges from the root manifest → per-file zone maps
-from the sidecars of surviving commits → per-file Bloom probes for
-equality predicates on indexed columns). A plain
-``spark.sql("SELECT ... WHERE ts BETWEEN ...")`` over the source prunes
-files with no operator-specific plumbing at all.
+``spark.read.format("snapshot_table").load(root)`` is the explicit
+Python Data Source (Spark 4.1). Spark's planner hands the WHERE clause's
+conjuncts to ``pushFilters``; the source intersects them into per-column
+ranges, and ``partitions()`` plans the file set through the SAME
+hierarchical pruning the operators use (commit-level ranges from the root
+manifest → per-file zone maps from the sidecars of surviving commits →
+per-file Bloom probes for equality predicates on indexed columns).
+Pruning is file-granular, so EVERY pushed filter is also returned to
+Spark for post-scan evaluation — a false-positive file costs a scan,
+never a wrong row. Executors read surviving files with pyarrow, align
+each file to the version's pinned schema (default-fill for added columns,
+cast for widened ones, rename lineage) and apply the manifest's
+merge-on-read tombstones as Arrow masks. ``df.write.format(
+"snapshot_table")`` stages one parquet file per task and publishes them
+through the same atomic manifest link as the operator API.
 
-Correctness contract: pruning is file-granular, so EVERY pushed filter
-is also returned to Spark for post-scan evaluation (the API's
-partial-pushdown form) — a false-positive file costs a scan, never a
-wrong row. Executors read surviving files with pyarrow, align each
-file to the version's pinned schema (default-fill for columns added by
-later schema evolution, cast for widened columns), and apply the
-manifest's merge-on-read tombstones as Arrow masks (equality keys and
-positional (file, row) deletes) — the same semantics as
-``snapshots._read_pinned``, checked against it by tests and by the
-``snapshot_source_pruned`` registry oracle.
+``snapshot_sql_register`` names a snapshot (or catalog-pinned) table in
+``spark.sql`` text. Its view is the NATIVE pinned scan
+(``snapshots._read_pinned``: the JVM vectorized parquet reader,
+tombstones as broadcast anti-joins) — no Python worker reads a row. File
+pruning for SQL text comes from Catalyst: a ``spark.sql`` hook reads the
+filters Catalyst pushed into each parquet scan of a registered view,
+plans them through ``_plan_scan`` and the Bloom probes, and re-plans the
+statement once over the union of the files its scans of that view keep.
 
-Scale notes: planning stays driver-side and O(root manifest + surviving
-sidecars), exactly like the operator path; per-partition work ships as
-plain picklable strings (paths + schema JSONs), and each task touches
-only its one data file plus the (small) delete files that apply to it.
+Scale: planning stays driver-side and O(root manifest + surviving
+sidecars) on both surfaces, exactly like the operator path.
 """
 
 from __future__ import annotations
@@ -37,6 +37,8 @@ import json
 import os
 from typing import Iterator
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -85,6 +87,17 @@ class SnapshotBatchPartition(InputPartition):
         self.defaults_json = defaults_json
         self.tomb_specs_json = tomb_specs_json
         self.history_json = history_json
+
+
+def _local_root(root: str) -> str:
+    """SQL DDL (CREATE TABLE ... USING snapshot_table) normalizes the
+    path option to a file: URI; the manifest layer wants a plain local
+    path."""
+    if root.startswith("file:"):
+        from urllib.parse import unquote, urlparse
+
+        root = unquote(urlparse(root).path)
+    return root
 
 
 def _resolve_table(options: dict) -> tuple[str, int | None]:
@@ -149,13 +162,7 @@ def _resolve_table(options: dict) -> tuple[str, int | None]:
             "snapshot_table requires a path (load(root)) or a catalog/table "
             "option pair"
         )
-    if root.startswith("file:"):
-        # SQL DDL (CREATE TABLE ... USING snapshot_table) normalizes the
-        # path option to a file: URI; the manifest layer wants a plain
-        # local path
-        from urllib.parse import unquote, urlparse
-
-        root = unquote(urlparse(root).path)
+    root = _local_root(root)
     if branch := options.get("branch"):
         # a branch IS a root (operators/branches.py) — resolve the name
         # so WAP quarantine triage and in-flight branch state are
@@ -189,25 +196,97 @@ def _tighten(rng: tuple, lo, hi) -> tuple:
     return (clo, chi)
 
 
+def _filter_ranges(filters, cols=None) -> tuple[dict, list]:
+    """Intersect the usable conjuncts (``=``, ``<``, ``<=``, ``>``, ``>=``,
+    ``IN`` on one top-level column, restricted to ``cols`` when given)
+    into per-column ranges, plus the equality pairs the Bloom probes take.
+    Other filters contribute nothing — pruning only ever narrows."""
+    ranges: dict[str, tuple] = {}
+    eq: list[tuple[str, object]] = []
+    for f in filters:
+        attr = getattr(f, "attribute", None)
+        col = attr[0] if attr and len(attr) == 1 else None
+        if col is None or (cols is not None and col not in cols):
+            continue
+        if isinstance(f, EqualTo):
+            lo = hi = f.value
+            eq.append((col, f.value))
+        elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
+            lo, hi = f.value, _INF
+        elif isinstance(f, (LessThan, LessThanOrEqual)):
+            lo, hi = -_INF, f.value
+        elif isinstance(f, In) and f.value:
+            try:
+                lo, hi = min(f.value), max(f.value)
+            except TypeError:
+                continue
+        else:
+            continue
+        ranges[col] = _tighten(ranges.get(col, (-_INF, _INF)), lo, hi)
+    return ranges, eq
+
+
+def _planned_files(root: str, m: dict, ranges: dict, eq: list) -> list[str]:
+    """The pinned files of manifest ``m`` that can hold a row matching
+    ``ranges`` and the ``eq`` pairs: ``_plan_scan``'s commit-range and
+    zone-map pruning, then a Bloom probe per equality on an indexed
+    column (one sidecar read per surviving commit, not per file)."""
+    if ranges:
+        kept = S._plan_scan(root, m, ranges)["kept_files"]
+    else:
+        kept = list(m["files"])
+    cfg = m.get("bloom") or {}
+    probes = [(c, v) for c, v in eq if c in cfg.get("cols", [])]
+    if not probes:
+        return kept
+    out = []
+    sidecars: dict[str, dict] = {}
+    for rel in kept:
+        cid = S._commit_of(rel)
+        if cid not in sidecars:
+            sidecars[cid] = S._load_sidecar(root, m, cid)
+        blooms = sidecars[cid].get("blooms", {}).get(rel, {})
+        drop = False
+        for c, v in probes:
+            words = blooms.get(c)
+            try:
+                if words is not None and not S._bloom_might_contain(
+                    words, v, cfg["m"], cfg["k"]
+                ):
+                    drop = True
+                    break
+            except (TypeError, ValueError):
+                pass  # unprobeable key type: keep the file
+        if not drop:
+            out.append(rel)
+    return out
+
+
+def _pinned_manifest(options: dict) -> tuple[str, dict]:
+    """``(table_root, manifest)`` of the version the options address
+    (latest when unpinned)."""
+    root, version = _resolve_table(options)
+    if version is None:
+        versions = S.snapshot_versions(root)
+        if not versions:
+            raise FileNotFoundError(f"no snapshot versions at {root}")
+        version = versions[-1]
+    return root, S._load_manifest(root, version)
+
+
 class SnapshotBatchReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
         # option("pushdown", "false"): plan the FULL pinned file list
         # regardless of pushed filters. Spark's Python-data-source scan
         # cache (PythonDataSourceV2.readInfo, Spark 4.1) is keyed per
         # RELATION, not per query's pushed filters — a relation reused
-        # across statements (a temp view, a saved DataFrame) serves every
-        # later filterless plan whatever partition list the LAST pushdown
+        # across queries (a saved DataFrame) serves every later
+        # filterless plan whatever partition list the LAST pushdown
         # computed, silently dropping files. Disabling partition pruning
         # makes every cached plan identical (the full list), so reuse is
         # always exact; Spark still re-evaluates all filters row-level.
         self._pushdown = str(options.get("pushdown", "true")).lower() != "false"
-        self._root, version = _resolve_table(options)
-        versions = S.snapshot_versions(self._root)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot versions at {self._root}")
-        self._manifest = S._load_manifest(
-            self._root, version if version is not None else versions[-1]
-        )
+        self._root, self._manifest = _pinned_manifest(options)
         # predicate state accumulated by pushFilters
         self._ranges: dict[str, tuple] = {}
         self._eq: list[tuple[str, object]] = []
@@ -217,83 +296,24 @@ class SnapshotBatchReader(DataSourceReader):
         # REPLACE, never accumulate: the engine hands each planning pass
         # its complete conjunct set, and the reader instance OUTLIVES one
         # query — Spark caches the relation (and its planner-worker twin)
-        # across every query that references a saved DataFrame or temp
-        # view. Accumulated state would intersect one query's ranges into
-        # the next query's scan and silently drop rows (caught by the SQL
-        # temp-view pins in tests/test_snapshot_batch_source.py).
-        self._ranges = {}
-        self._eq = []
-        if not self._pushdown:
-            yield from filters
-            return
-        cols = {f.name for f in self._schema().fields}
-        for f in filters:
-            attr = getattr(f, "attribute", None)
-            col = attr[0] if attr and len(attr) == 1 else None
-            usable = col in cols
-            if usable and isinstance(f, EqualTo):
-                self._ranges[col] = _tighten(
-                    self._ranges.get(col, (-_INF, _INF)), f.value, f.value
-                )
-                self._eq.append((col, f.value))
-            elif usable and isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                self._ranges[col] = _tighten(
-                    self._ranges.get(col, (-_INF, _INF)), f.value, _INF
-                )
-            elif usable and isinstance(f, (LessThan, LessThanOrEqual)):
-                self._ranges[col] = _tighten(
-                    self._ranges.get(col, (-_INF, _INF)), -_INF, f.value
-                )
-            elif usable and isinstance(f, In) and f.value:
-                try:
-                    lo, hi = min(f.value), max(f.value)
-                except TypeError:
-                    lo = hi = None
-                if lo is not None:
-                    self._ranges[col] = _tighten(
-                        self._ranges.get(col, (-_INF, _INF)), lo, hi
-                    )
-            # file-granular pruning only: Spark must still evaluate every
-            # filter on the survivors' rows
-            yield f
+        # across every query over a saved DataFrame. Accumulated state
+        # would intersect one query's ranges into the next query's scan
+        # and silently drop rows.
+        self._ranges, self._eq = {}, []
+        if self._pushdown:
+            self._ranges, self._eq = _filter_ranges(
+                filters, {f.name for f in self._schema().fields}
+            )
+        # file-granular pruning only: Spark must still evaluate every
+        # filter on the survivors' rows
+        yield from filters
 
     def _schema(self) -> StructType:
         return StructType.fromJson(json.loads(self._manifest["schema"]))
 
     def planned_files(self) -> list[str]:
         """The surviving file list (exposed for tests / introspection)."""
-        m = self._manifest
-        if self._ranges:
-            kept = S._plan_scan(self._root, m, self._ranges)["kept_files"]
-        else:
-            kept = list(m["files"])
-        cfg = m.get("bloom") or {}
-        probes = [
-            (c, v) for c, v in self._eq if c in cfg.get("cols", [])
-        ]
-        if not probes:
-            return kept
-        out = []
-        sidecars: dict[str, dict] = {}  # one JSON read per commit, not per file
-        for rel in kept:
-            cid = S._commit_of(rel)
-            if cid not in sidecars:
-                sidecars[cid] = S._load_sidecar(self._root, m, cid)
-            blooms = sidecars[cid].get("blooms", {}).get(rel, {})
-            drop = False
-            for c, v in probes:
-                words = blooms.get(c)
-                try:
-                    if words is not None and not S._bloom_might_contain(
-                        words, v, cfg["m"], cfg["k"]
-                    ):
-                        drop = True
-                        break
-                except (TypeError, ValueError):
-                    pass  # unprobeable key type: keep the file
-            if not drop:
-                out.append(rel)
-        return out
+        return _planned_files(self._root, self._manifest, self._ranges, self._eq)
 
     def partitions(self) -> list[SnapshotBatchPartition]:
         m = self._manifest
@@ -381,6 +401,10 @@ class SnapshotBatchReader(DataSourceReader):
             else:
                 arrays.append(pa.array([defaults.get(f.name)] * n, type=f.type))
         aligned = pa.table(arrays, schema=target)
+        # every spec's mask indexes the UNFILTERED file: a positional
+        # delete addresses the row's position in the file, which a
+        # filter applied by an earlier spec would shift
+        drop = None
         for spec in json.loads(partition.tomb_specs_json):
             if spec["kind"] == "positional":
                 pos_tbl = pa.concat_tables(
@@ -402,7 +426,9 @@ class SnapshotBatchReader(DataSourceReader):
                 mask = pc.is_in(
                     col, value_set=keys.combine_chunks().cast(col.type)
                 )
-            aligned = aligned.filter(pc.invert(mask))
+            drop = mask if drop is None else pc.or_(drop, mask)
+        if drop is not None:
+            aligned = aligned.filter(pc.invert(drop))
         yield from aligned.to_batches()
 
 
@@ -546,8 +572,7 @@ def register_snapshot_table(spark) -> None:
     # registration keeps the source usable from any session.
     # Registration is memoized per session: `dataSource.register`
     # cloudpickles and ships the class on every call (~0.25 s of pure
-    # driver latency), and the statement hook re-registers relations per
-    # statement — without the memo every SQL statement paid it again.
+    # driver latency).
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     if getattr(spark, "_snapshot_table_registered", False):
         return
@@ -555,77 +580,25 @@ def register_snapshot_table(spark) -> None:
     spark._snapshot_table_registered = True
 
 
-def _register_view_relation(spark, name: str, spec: dict, pushdown: bool):
-    """(Re-)register temp view ``name`` over a FRESH relation — each
-    ``load()`` is its own ``PythonDataSourceV2`` instance, so its scan
-    cache starts empty (the fresh-relation safety unit)."""
-    register_snapshot_table(spark)
-    reader = spark.read.format("snapshot_table").option(
-        "pushdown", "true" if pushdown else "false"
+# ---------------------------------------------------------------------------
+# SQL views: native pinned scans, pruned per statement from Catalyst's
+# pushed filters
+# ---------------------------------------------------------------------------
+
+# the sources.Filter classes Catalyst's filter translation produces that
+# _filter_ranges can use, by JVM simple class name
+_JVM_FILTERS = {
+    c.__name__: c
+    for c in (
+        EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, In
     )
-    if spec.get("catalog") is not None:
-        reader = reader.option("catalog", spec["catalog"]).option(
-            "table", spec.get("table") or name
-        )
-        if spec.get("catalog_version") is not None:
-            reader = reader.option(
-                "catalogVersion", str(spec["catalog_version"])
-            )
-        df = reader.load()
-    else:
-        if spec.get("version") is not None:
-            reader = reader.option("version", str(spec["version"]))
-        if spec.get("branch") is not None:
-            reader = reader.option("branch", spec["branch"])
-        df = reader.load(spec["root"])
-    df.createOrReplaceTempView(name)
-    return df
-
-
-def _count_python_scans(plan, ident, counts) -> bool:
-    """Bump per-instance counts for every PythonTable scan LEAF of one
-    plan tree; True as soon as any instance is seen twice.
-    ``DataSourceV2ScanRelation`` is a leaf node, so ``collectLeaves``
-    (ONE py4j round trip for the whole tree) replaces the per-node
-    children()/apply() recursion that dominated this check's cost."""
-    leaves = plan.collectLeaves()
-    for i in range(leaves.length()):
-        node = leaves.apply(i)
-        if node.getClass().getSimpleName() == "DataSourceV2ScanRelation":
-            tbl = node.relation().table()
-            if tbl.getClass().getSimpleName() == "PythonTable":
-                h = ident(tbl)
-                counts[h] = counts.get(h, 0) + 1
-                if counts[h] > 1:
-                    return True
-    return False
-
-
-def _has_repeated_python_scan(spark, df) -> bool:
-    """True iff some Python-data-source TABLE INSTANCE is scanned more
-    than once in ``df``'s optimized plan (children AND subquery plans).
-
-    That is exactly the shape the per-relation scan cache cannot serve
-    exactly: each scan's pushFilters overwrites the one shared readInfo
-    (``PythonDataSourceV2.setReadInfo``), so the last planner pass's
-    partition list would feed every scan of the relation. Single-scan
-    statements over a fresh relation are always exact — the cache has
-    one writer (that scan's own pushdown) or none."""
-    counts: dict[int, int] = {}
-    ident = spark._jvm.java.lang.System.identityHashCode
-    root = df._jdf.queryExecution().optimizedPlan()
-    if _count_python_scans(root, ident, counts):
-        return True
-    # subqueriesAll is recursive (nested subqueries included) — one
-    # round trip for the list, then leaves-only per subquery plan
-    subs = root.subqueriesAll()
-    for i in range(subs.length()):
-        if _count_python_scans(subs.apply(i), ident, counts):
-            return True
-    return False
+}
 
 
 def _sql_views(spark) -> dict:
+    """This session's view registry: name -> spec (the addressing
+    arguments of ``snapshot_sql_register``, plus the resolved root,
+    manifest, full-list DataFrame and state token of the registration)."""
     reg = getattr(spark, "_snapshot_sql_views", None)
     if reg is None:
         reg = {}
@@ -633,63 +606,151 @@ def _sql_views(spark) -> dict:
     return reg
 
 
-def _sql_reuse(spark) -> dict:
-    """Per-view reuse fingerprints: view -> {"sql", "state"} of the LAST
-    statement that registered its relation. A repeated statement whose
-    text AND table-state token both match skips the fresh-relation
-    re-registration entirely — the relation's scan cache already holds
-    exactly that statement's partitions."""
-    reg = getattr(spark, "_snapshot_sql_reuse", None)
-    if reg is None:
-        reg = {}
-        spark._snapshot_sql_reuse = reg
-    return reg
-
-
 def _spec_state(spec: dict):
-    """A cheap token of the table state a version-unpinned relation
-    resolves to NOW (one directory listing — ~1000x cheaper than a
-    re-registration): latest snapshot version, or the catalog head for
-    catalog-routed views. None = never reuse (branch heads and errors
-    are conservatively fresh)."""
+    """A cheap token of the table state the view resolves to NOW (one
+    directory listing): the pin itself, or the latest version of an
+    unpinned root or branch, or the catalog head for catalog-routed
+    views. None (unresolvable) never matches a registration."""
     try:
         if spec.get("catalog") is not None:
-            if spec.get("catalog_version") is not None:
-                return ("cat", spec["catalog_version"])
-            from airflow_postgres_csv_spark.operators.catalog_txn import (
-                catalog_versions,
+            cv = spec.get("catalog_version")
+            if cv is None:
+                from airflow_postgres_csv_spark.operators.catalog_txn import (
+                    catalog_versions,
+                )
+
+                vs = catalog_versions(spec["catalog"])
+                cv = vs[-1] if vs else None
+            return ("cat", cv)
+        root = _local_root(spec["root"])
+        if spec.get("branch") is not None:
+            from airflow_postgres_csv_spark.operators.branches import (
+                _branch_root,
             )
 
-            vs = catalog_versions(spec["catalog"])
-            return ("cat", vs[-1] if vs else None)
-        if spec.get("branch") is not None:
-            return None
+            root = _branch_root(root, spec["branch"])
         if spec.get("version") is not None:
-            return ("v", spec["version"])
-        from airflow_postgres_csv_spark.operators.snapshots import (
-            snapshot_versions,
-        )
-
-        vs = snapshot_versions(spec["root"])
+            return ("v", S.resolve_version(root, spec["version"]))
+        vs = S.snapshot_versions(root)
         return ("v", vs[-1] if vs else None)
     except Exception:
         return None
 
 
-def _install_sql_hook(spark) -> None:
-    """Give raw ``spark.sql`` text fresh-relation semantics for the
-    pruning views in this session's registry (the Python-side analog of
-    a catalog plugin — Python data sources have no session-catalog
-    extension point in Spark 4.1).
+def _register(spark, name: str, spec: dict, rels: list[str] | None = None):
+    """(Re-)register temp view ``name`` as the native pinned scan of
+    ``spec``'s table: over ``rels`` when given (one statement's kept
+    files), else over the full pinned file list — resolved now and kept
+    in ``spec`` together with the state token it was resolved at."""
+    if rels is None:
+        state = _spec_state(spec)  # before resolving: a racing commit
+        # moves the token past this registration, never behind it
+        root, m = _pinned_manifest({**spec, "table": spec["table"] or name})
+        df = S._read_pinned(spark, root, m, m["files"])
+        spec.update(state=state, table_root=root, manifest=m, df=df)
+    else:
+        df = S._read_pinned(spark, spec["table_root"], spec["manifest"], rels)
+    df.createOrReplaceTempView(name)
+    return df
 
-    Before a statement that names a registered view runs, the view is
-    re-registered over a FRESH relation (empty scan cache); after
-    planning, if the statement scans the same table instance twice
-    (self-join with asymmetric filters, an optimizer-duplicated CTE, a
-    scalar subquery over the same view — shapes the shared cache cannot
-    serve exactly), the view is swapped to a full-list relation and the
-    statement replans: pruned when provably safe, never wrong.
-    Statements naming no registered view pass straight through."""
+
+def _scan_filters(spark, df) -> list[tuple[str, list]]:
+    """``(first file path, usable pushed filters)`` for every parquet scan
+    of ``df``'s physical plan, adaptive and subquery plans included. The
+    filters are the scan's ``dataFilters`` — the conjuncts every row it
+    returns must satisfy — as Catalyst translates them for data sources,
+    converted to ``pyspark.sql.datasource`` filters; only literal values
+    a zone map or Bloom probe can compare survive."""
+    dss = getattr(
+        getattr(
+            spark._jvm.org.apache.spark.sql.execution.datasources,
+            "DataSourceStrategy$",
+        ),
+        "MODULE$",
+    )
+    out = []
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        plan = todo.pop()
+        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            plan = plan.inputPlan()
+        leaves = plan.collectLeaves()
+        for i in range(leaves.length()):
+            leaf = leaves.apply(i)
+            kind = leaf.getClass().getSimpleName()
+            if kind == "AdaptiveSparkPlanExec":
+                todo.append(leaf)
+            if kind != "FileSourceScanExec":
+                continue
+            rel = leaf.relation()
+            path = rel.location().rootPaths().head().toUri().getPath()
+            pushed = dss.selectFilters(rel, leaf.dataFilters())._2()
+            filters = []
+            for j in range(pushed.length()):
+                jf = pushed.apply(j)
+                cls = _JVM_FILTERS.get(jf.getClass().getSimpleName())
+                if cls is None:
+                    continue
+                vals = tuple(jf.values()) if cls is In else (jf.value(),)
+                if all(isinstance(v, (bool, int, float, str)) for v in vals):
+                    filters.append(
+                        cls((jf.attribute(),), vals if cls is In else vals[0])
+                    )
+            out.append((path, filters))
+        # recursive over nested subqueries; each subquery plan's own
+        # adaptive leaves are expanded when popped. One subquery shared by
+        # a filter and its scan's dataFilters is listed once per use
+        subs = plan.subqueriesAll().distinct()
+        for i in range(subs.length()):
+            todo.append(subs.apply(i))
+    return out
+
+
+def _statement_files(spark, df, views: dict) -> dict[str, list[str]]:
+    """view name -> the pinned files the statement's scans of that view
+    can match, for each view where that is fewer than all of them. A scan
+    reads a view's data when its files lie under the view's ``data/``
+    directory and are not tombstone files; the union over all such scans
+    keeps every file any of them needs, so one re-plan serves self-joins,
+    CTEs and subqueries."""
+    scans = _scan_filters(spark, df)
+    out = {}
+    for name, spec in views.items():
+        root, m = spec["table_root"], spec["manifest"]
+        abs_root = os.path.abspath(root)
+        data_dir = os.path.join(abs_root, "data") + os.sep
+        tombs = {
+            os.path.join(abs_root, f)
+            for t in m.get("tombstones", [])
+            for f in t["files"]
+        }
+        mine = [
+            f for path, f in scans if path.startswith(data_dir) and path not in tombs
+        ]
+        kept: set[str] = set()
+        for filters in mine:
+            ranges, eq = _filter_ranges(filters)
+            if not ranges:  # this scan needs every file
+                break
+            kept.update(_planned_files(root, m, ranges, eq))
+        else:
+            if mine and len(kept) < len(m["files"]):
+                out[name] = [f for f in m["files"] if f in kept]
+    return out
+
+
+def _install_sql_hook(spark) -> None:
+    """Wrap ``spark.sql`` so statements naming a registered view read only
+    the files their filters can match (the Python-side analog of a
+    catalog plugin). Per statement naming a view: re-register an unpinned
+    view whose table moved since its registration, run the statement,
+    and if its scans of the view keep fewer files than the pinned list
+    (``_statement_files``), re-plan it once over the kept files. The full
+    list is registered again before returning, so derived views,
+    ``spark.table`` handles and later statements start from it. The
+    returned DataFrame's analyzed plan holds its own file list — there is
+    no shared scan cache a later statement could poison. Statements
+    naming no registered view pass straight through."""
     if getattr(spark, "_snapshot_sql_hook", None) is not None:
         return
     import re as _re
@@ -709,53 +770,23 @@ def _install_sql_hook(spark) -> None:
         ]
         if not hit:
             return orig_sql(sqlQuery, *args, **kwargs)
-        # a statement that CREATES something over a registered view (a
-        # derived temp view, CTAS, CACHE) pins THIS statement's relation
-        # beyond the statement — later statements over the derived name
-        # bypass the hook, so the pinned relation must be the always-safe
-        # full list (pruning is lost through derived objects, exactness
-        # is not)
-        derives = bool(
-            _re.search(r"\b(CREATE|CACHE)\b", sqlQuery, _re.IGNORECASE)
-        )
         with lock:
-            reuse = _sql_reuse(spark)
-            if not derives and not args and not kwargs:
-                # repeated-identical-statement fast path: same text, same
-                # table state -> the current relation's scan cache holds
-                # exactly this statement's partitions; skip the fresh
-                # registration (saves the dominant per-statement cost)
-                states = {n: _spec_state(views[n]) for n in hit}
-                if all(
-                    (ent := reuse.get(n)) is not None
-                    and states[n] is not None
-                    and ent["sql"] == sqlQuery
-                    and ent["state"] == states[n]
-                    and spark.catalog.tableExists(n)
-                    for n in hit
-                ):
-                    return orig_sql(sqlQuery, *args, **kwargs)
-            else:
-                # derived objects and PARAMETERIZED statements (args bind
-                # different literals into the same text -> different
-                # pushed filters) never take or record the fast path
-                states = {}
             reg_errs: dict[str, Exception] = {}
             for n in hit:
+                state = _spec_state(views[n])
+                if state is not None and state == views[n]["state"]:
+                    continue
                 try:
-                    _register_view_relation(
-                        spark, n, views[n], pushdown=not derives
-                    )
+                    _register(spark, n, views[n])
                 except Exception as exc:
                     # the table root is gone (a torn-down scratch dir):
-                    # the view is dead either way — unregister so a
+                    # the view is dead either way — unregister it so a
                     # statement that merely MENTIONS the name (a column,
-                    # a string literal) is not poisoned by the registry.
-                    # Keep the ORIGINAL error: the statement would
-                    # otherwise surface a generic TABLE_OR_VIEW_NOT_FOUND
-                    # for the alias with the dead-root cause lost
-                    # (ADVICE r11 low, diagnosability).
+                    # a string literal) is not poisoned by the registry,
+                    # and keep the ORIGINAL error for statements that
+                    # read it
                     views.pop(n, None)
+                    spark.catalog.dropTempView(n)
                     reg_errs[n] = exc
             try:
                 df = orig_sql(sqlQuery, *args, **kwargs)
@@ -769,58 +800,33 @@ def _install_sql_hook(spark) -> None:
                             f"because its table failed to register: {cause}"
                         ) from exc
                 raise
-            # Scan-cache poisoning guard: some OPTIMIZER RULES duplicate a
-            # single-referenced scan subtree without a second textual
-            # occurrence (runtime bloom-filter injection clones the
-            # creation side; future rules may differ), so a textual
-            # "name appears once, no WITH" test is NOT a sound reason to
-            # skip the plan-level check (ADVICE r11 medium). After the
-            # leaf-based rewrite the check costs a handful of py4j calls
-            # on the already-built optimized plan (~10 ms/statement
-            # measured, vs ~1.6 s for the old per-node recursion), so it
-            # runs UNCONDITIONALLY — correctness backstop first.
-            if not derives and _has_repeated_python_scan(spark, df):
-                for n in hit:
-                    if n in views:
-                        _register_view_relation(
-                            spark, n, views[n], pushdown=False
-                        )
-                df = orig_sql(sqlQuery, *args, **kwargs)
-            if not derives:
-                for n in hit:
-                    if n in views and states.get(n) is not None:
-                        reuse[n] = {"sql": sqlQuery, "state": states[n]}
-            return df
-
-    orig_table = spark.table
-
-    def table_hook(tableName):
-        views = _sql_views(spark)
-        if tableName in views:
-            with lock:
-                _sql_reuse(spark).pop(tableName, None)
-                try:
-                    # a handle the caller may save and reuse across
-                    # differently-filtered queries: give it its own
-                    # always-safe full-list relation (pruning stays on
-                    # the statement path, where freshness is managed)
-                    return _register_view_relation(
-                        spark, tableName, views[tableName], pushdown=False
-                    )
-                except Exception:
-                    views.pop(tableName, None)
-        return orig_table(tableName)
+            try:
+                keep = _statement_files(
+                    spark, df, {n: views[n] for n in hit if n in views}
+                )
+            except (Py4JError, PySparkException):
+                # pruning is an optimization: a plan this pass cannot
+                # read (a streaming join, a planner error the action will
+                # report) keeps the full pinned list, which is exact
+                keep = {}
+            if not keep:
+                return df
+            try:
+                for n, rels in keep.items():
+                    _register(spark, n, views[n], rels)
+                return orig_sql(sqlQuery, *args, **kwargs)
+            finally:
+                for n in keep:
+                    views[n]["df"].createOrReplaceTempView(n)
 
     spark.sql = sql_hook
-    spark.table = table_hook
     spark._snapshot_sql_hook = sql_hook
 
 
 def snapshot_sql_unregister(spark, name: str) -> None:
-    """Drop ``name`` from the pruning registry and the temp-view catalog
+    """Drop ``name`` from the view registry and the temp-view catalog
     (the statement hook stays installed but no longer touches it)."""
     _sql_views(spark).pop(name, None)
-    _sql_reuse(spark).pop(name, None)
     spark.catalog.dropTempView(name)
 
 
@@ -834,69 +840,57 @@ def snapshot_sql_register(
     catalog: str | None = None,
     table: str | None = None,
     catalog_version: int | None = None,
-    pushdown: bool = True,
-    defer: bool = False,
 ):
     """Make a snapshot (or catalog-pinned) table addressable by NAME in
-    raw ``spark.sql`` text: plans the scan through the ``snapshot_table``
-    batch data source and registers it as a session temp view, so SQL
-    queries over the view inherit the full lakehouse read path —
-    manifest-pinned files, MOR tombstone masks, schema evolution
-    defaults, and time travel.
+    raw ``spark.sql`` text, as a session temp view over the version's
+    native pinned scan (``snapshots._read_pinned``, the same plan as
+    ``snapshot_read``): manifest-pinned files read by the JVM vectorized
+    parquet reader, MOR tombstones as broadcast anti-joins, schema
+    evolution defaults and rename lineage, time travel.
 
-    ``pushdown=True`` (the default) gives SQL text the same
-    partition-level file pruning as the DataFrame path, made SAFE BY
-    CONSTRUCTION against the upstream scan-cache hazard: Spark's
-    Python-data-source scan cache (``PythonDataSourceV2.readInfo``,
-    Spark 4.1) is per RELATION and not keyed on the pushed filters, so
-    a long-lived view pinning one relation would serve a filterless
-    statement the PREVIOUS statement's pruned partition list.
-    Registration therefore installs a session statement hook
-    (``_install_sql_hook``) that re-registers the view over a fresh
-    relation before each statement naming it — each statement owns its
-    cache — and falls back to an unpruned relation for the one shape a
-    fresh relation cannot fix (the same table instance scanned twice in
-    ONE statement with divergent filters: asymmetric self-joins,
-    optimizer-duplicated CTEs, scalar subqueries over the view — the
-    last scan's ``setReadInfo`` would feed both). Pruned when provably
-    safe, exact always; ``pushdown=False`` opts out of the hook and
-    pins a plain full-list view.
-
-    The same cache reuse contract applies to SAVED DataFrames from
-    ``spark.read.format("snapshot_table").load(root)`` — including the
-    DataFrame this function returns: a saved object pins one relation,
-    so run differently-filtered queries over fresh ``load()`` calls /
-    ``spark.sql`` statements (cheap — planning is O(manifest)), not
-    over one long-lived DataFrame handle. Statements that CREATE a
-    derived object over the view (a temp view, CTAS, CACHE TABLE) pin
-    an always-safe full-list relation instead, since later statements
-    over the derived name bypass the hook.
+    SQL text gets the same file pruning as ``snapshot_scan`` and the
+    data source. The session's ``spark.sql`` hook (``_install_sql_hook``)
+    looks, after Catalyst has planned a statement naming the view, at the
+    filters Catalyst pushed into each parquet scan of the view's files,
+    plans them through ``_plan_scan`` (commit ranges, zone maps) and the
+    Bloom probes, and re-plans the statement once over the kept files if
+    fewer than the full pinned list survive. A statement that scans the
+    view more than once (self-join, CTE, subquery, an optimizer-injected
+    runtime filter) reads the UNION of its scans' kept files; every
+    filter still applies row-level, so pruning never changes a result.
+    The driver-side cost at scale is unchanged from the data source:
+    O(root manifest + surviving sidecars) per pruned statement, and a
+    statement with no usable range or equality costs no metadata read.
+    Views, CTAS and CACHE over the name, and ``spark.table(name)``
+    handles, read the full pinned list (they outlive the statement).
 
     Addressing mirrors the reader options: ``root`` (+ optional
     ``version`` int or tag, + optional ``branch`` name — WAP quarantine
     triage and in-flight transaction state in plain SQL) reads one
-    table directly;
-    ``catalog=..., table=...`` (+ optional ``catalog_version``) resolves
-    through a catalog pin so several registered views see ONE
-    transaction's mutually-consistent world. Pass an explicit
-    ``version``/``catalog_version`` for a stable pin — an unpinned view
-    re-resolves the latest version each time the source replans.
+    table directly; ``catalog=..., table=...`` (+ optional
+    ``catalog_version``) resolves through a catalog pin so several
+    registered views see ONE transaction's mutually-consistent world.
+    An unpinned view follows its table: before each statement naming it,
+    the hook compares a one-listing state token and re-registers the
+    view when a commit (or catalog version) landed since.
 
-    Returns the registered DataFrame (the same object ``spark.table(name)``
-    yields). Iceberg analog: ``spark.table("cat.db.t")`` via a session
-    catalog plugin; the reference has no SQL surface of its own (it
-    delegates to Postgres — reference operators.py:80).
+    Returns the registered DataFrame (what ``spark.table(name)`` yields).
+    Iceberg analog: ``spark.table("cat.db.t")`` via a session catalog
+    plugin; the reference has no SQL surface of its own (it delegates to
+    Postgres — reference operators.py:80).
     """
     if catalog is None and root is None:
         raise ValueError(
             "snapshot_sql_register requires root= or catalog=/table="
         )
+    views = _sql_views(spark)
+    views.pop(name, None)
     if catalog is not None and table is not None:
         # a catalog VIEW registers as its RESOLVED DataFrame (stored SQL
         # over the pinned base tables of the addressed catalog version) —
         # spark.sql text over the name then works like any other view;
-        # the base-table registrations inside catalog_read inherit the
-        # same pruning-hook safety
+        # the base-table registrations inside catalog_read get the same
+        # statement-level pruning
         from airflow_postgres_csv_spark.operators.catalog_txn import (
             _is_view,
             catalog_read,
@@ -915,7 +909,6 @@ def snapshot_sql_register(
                 spark, catalog, table, catalog_version=catalog_version
             )
             df.createOrReplaceTempView(name)
-            _sql_views(spark).pop(name, None)
             return df
     spec = {
         "root": root,
@@ -925,17 +918,7 @@ def snapshot_sql_register(
         "table": table,
         "catalog_version": catalog_version,
     }
-    _sql_reuse(spark).pop(name, None)  # new spec: stale fingerprint dies
-    if pushdown:
-        _sql_views(spark)[name] = spec
-        _install_sql_hook(spark)
-        if defer:
-            # the statement hook registers a FRESH relation before every
-            # statement naming the view anyway, so an eager registration
-            # here would be built only to be replaced — callers that
-            # ignore the returned DataFrame (catalog view / mview
-            # resolution) skip straight to the hook's registration
-            return None
-    else:
-        _sql_views(spark).pop(name, None)
-    return _register_view_relation(spark, name, spec, pushdown=pushdown)
+    df = _register(spark, name, spec)
+    views[name] = spec
+    _install_sql_hook(spark)
+    return df
