@@ -78,8 +78,7 @@ def ngram_jaccard_pairs(
     jaccard = common / (|A| + |B| - common) → filter ≥ threshold.
 
     Only documents sharing ≥1 shingle ever meet, so the complexity is
-    Σ_bucket |bucket|², not N² — the scalable exact-verification kernel
-    that MinHash candidates also run through.
+    Σ_bucket |bucket|², not N².
 
     Plan shape (one shuffle-join + one agg, no size-lookup joins): the
     distinct shingle set is built as an *array projection* per document
@@ -185,23 +184,7 @@ def jaccard_prefix_pairs(
     arrays. The per-doc array pack is materialized once (`localCheckpoint`)
     because both the prefix path and the verification path consume it.
     """
-    packed = (
-        df.select(
-            id_col,
-            F.explode(
-                F.transform(
-                    F.array(F.array_distinct(X.token_ngrams(text_col, n))),
-                    lambda a: F.struct(F.size(a).alias("n"), a.alias("shs")),
-                )
-            ).alias("_p"),
-        )
-        .select(
-            id_col,
-            F.col("_p.n").alias("n_shingles"),
-            F.transform("_p.shs", lambda s: F.xxhash64(s)).alias("shs"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    packed = _shingle_hashes(df, id_col, text_col, n).localCheckpoint(eager=False)
     sh = packed.select(
         id_col, "n_shingles", F.explode("shs").alias("shingle")
     ).repartition(F.col("shingle"))
@@ -268,6 +251,37 @@ def jaccard_prefix_pairs(
         )
         .select("id_a", "id_b")
     )
+    return _verify_jaccard(cands, packed, id_col, threshold)
+
+
+def _shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, n_shingles, shs): each document's distinct n-gram shingles as
+    an array of their xxhash64 keys, with the set size. The shingle
+    set and its size are packed into ONE struct emitted by a generator,
+    so tokenize→ngram runs once per document (see
+    :func:`ngram_jaccard_pairs`)."""
+    return df.select(
+        id_col,
+        F.explode(
+            F.transform(
+                F.array(F.array_distinct(X.token_ngrams(text_col, n))),
+                lambda a: F.struct(F.size(a).alias("n"), a.alias("shs")),
+            )
+        ).alias("_p"),
+    ).select(
+        id_col,
+        F.col("_p.n").alias("n_shingles"),
+        F.transform("_p.shs", lambda s: F.xxhash64(s)).alias("shs"),
+    )
+
+
+def _verify_jaccard(
+    cands: DataFrame, packed: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs (id_a, id_b): each side's
+    :func:`_shingle_hashes` row is attached by id, and the overlap is
+    ``size(array_intersect)`` — O(|A|+|B|) per pair, no shingle-level
+    join. Same keys and arithmetic as :func:`ngram_jaccard_pairs`."""
     a = packed.select(
         F.col(id_col).alias("id_a"), F.col("n_shingles").alias("n_a"), F.col("shs").alias("shs_a")
     )
@@ -376,15 +390,16 @@ def minhash_near_dup_pairs(
 ) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline with exact-Jaccard verification.
 
-    candidates (band bucket join, distinct pairs) → verify with the exact
-    shingle-join jaccard restricted to candidate pairs. False positives are
-    filtered by verification; false negatives bounded by the band curve.
+    candidates (band bucket join, distinct pairs) → exact Jaccard of each
+    candidate pair. False positives are filtered by verification; false
+    negatives bounded by the band curve.
 
-    The exact-jaccard pass runs only over documents that appear in at least
-    one candidate pair (semi-join on the candidate id set), so verification
-    cost is proportional to the candidate set LSH produced — not a full
-    corpus self-join. A pair's jaccard depends only on its own two shingle
-    sets, so restricting the input leaves every surviving value unchanged.
+    Verification attaches each document's distinct xxhash64 shingle array
+    to the candidate pairs by id and intersects the two arrays
+    (:func:`_verify_jaccard`, shared with :func:`jaccard_prefix_pairs`):
+    O(|A|+|B|) per candidate pair, never a shingle-level self-join, and
+    the same keys and arithmetic as :func:`ngram_jaccard_pairs`, so every
+    value is unchanged.
     """
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
     bb = minhash_band_buckets(sig, id_col, num_hashes, bands)
@@ -396,19 +411,9 @@ def minhash_near_dup_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    cand_ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .unionByName(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
+    return _verify_jaccard(
+        cand, _shingle_hashes(df, id_col, text_col, shingle_n), id_col, threshold
     )
-    exact = ngram_jaccard_pairs(
-        df.join(cand_ids, id_col, "left_semi"),
-        id_col,
-        text_col,
-        n=shingle_n,
-        threshold=threshold,
-    )
-    return cand.join(exact, ["id_a", "id_b"]).select("id_a", "id_b", "jaccard")
 
 
 def simhash_bits(
@@ -434,7 +439,10 @@ def simhash_bits(
     near-dup blocking (two docs within Hamming distance < banks must agree
     exactly on ≥1 bank, pigeonhole) — are bit-slices of it. Computed as
     ``num_bits`` conditional-sum aggregates in one shuffle; the nibble
-    array is materialized once per token, not per bit.
+    array is materialized once per token, not per bit. Every output column
+    is built as ONE SQL expression string: composing the 64 aggregates and
+    the 64-term OR chain through Column methods costs a py4j round trip
+    per method call (thousands per call of this operator).
     """
     from airflow_postgres_csv_spark.operators.localframe import (
         spread_small_input,
@@ -457,35 +465,31 @@ def simhash_bits(
     )
     sums = toks.groupBy(id_col).agg(
         *[
-            F.sum(
-                F.when(
-                    F.expr(
-                        f"((shiftright(element_at(nibs, {b // 4 + 1}), {b % 4})"
-                        " & 1) = 1)"
-                    ),
-                    1,
-                ).otherwise(-1)
-            ).alias(f"s_{b}")
+            F.expr(
+                f"sum(CASE WHEN ((shiftright(element_at(nibs, {b // 4 + 1}), {b % 4})"
+                f" & 1) = 1) THEN 1 ELSE -1 END) AS s_{b}"
+            )
             for b in range(num_bits)
         ]
     )
-    bits = F.array(*[(F.col(f"s_{b}") > 0).cast("int") for b in range(num_bits)])
-    sig = None
-    for b in range(num_bits):
-        term = F.shiftleft((F.col(f"s_{b}") > 0).cast("long"), b)
-        sig = term if sig is None else sig.bitwiseOR(term)
-    out = sums.select(id_col, bits.alias("bits"), sig.alias("sig"))
+    bits = ", ".join(f"CAST(s_{b} > 0 AS INT)" for b in range(num_bits))
+    sig = " | ".join(f"shiftleft(CAST(s_{b} > 0 AS BIGINT), {b})" for b in range(num_bits))
     per_bank = num_bits // banks
-    for k in range(banks):
-        # bank k = its contiguous bit-slice of the packed signature
-        out = out.withColumn(
-            f"bank_{k}",
-            (
-                F.shiftrightunsigned("sig", k * per_bank)
-                .bitwiseAND(F.lit((1 << per_bank) - 1))
-            ).cast("int"),
-        )
-    return out
+    # bank k = its contiguous bit-slice of the packed signature
+    return sums.select(
+        id_col, F.expr(f"array({bits}) AS bits"), F.expr(f"{sig} AS sig")
+    ).select(
+        id_col,
+        "bits",
+        "sig",
+        *[
+            F.expr(
+                f"CAST(shiftrightunsigned(sig, {k * per_bank})"
+                f" & {(1 << per_bank) - 1} AS INT) AS bank_{k}"
+            )
+            for k in range(banks)
+        ],
+    )
 
 
 def simhash_near_dup_pairs(
@@ -502,11 +506,8 @@ def simhash_near_dup_pairs(
     bank_value), never all-pairs.
     """
     sh = simhash_bits(df, id_col, text_col, banks=banks)
-    bank_structs = F.array(
-        *[
-            F.struct(F.lit(k).alias("bank_idx"), F.col(f"bank_{k}").alias("bank_val"))
-            for k in range(banks)
-        ]
+    bank_structs = ", ".join(
+        f"named_struct('bank_idx', {k}, 'bank_val', bank_{k})" for k in range(banks)
     )
     # Explicit repartition on the join key: in the sort-merge regime (a
     # corpus too big for AQE to broadcast one side — the 100 TB case) both
@@ -519,13 +520,8 @@ def simhash_near_dup_pairs(
     # instruction per candidate (measured 3× end-to-end at sf0.1 vs the
     # zip_with fold over bit arrays).
     blocked = (
-        sh.select(id_col, "sig", F.explode(bank_structs).alias("bk"))
-        .select(
-            id_col,
-            "sig",
-            F.col("bk.bank_idx").alias("bank_idx"),
-            F.col("bk.bank_val").alias("bank_val"),
-        )
+        sh.select(id_col, "sig", F.expr(f"explode(array({bank_structs})) AS bk"))
+        .select(id_col, "sig", "bk.*")
         .repartition("bank_idx", "bank_val")
     )
     a = blocked.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"), "bank_idx", "bank_val")
@@ -547,20 +543,25 @@ def simhash_near_dup_pairs(
     )
 
 
-def cosine_expr(a: str | Column, b: str | Column) -> Column:
-    """Cosine similarity between two array<float> columns, computed as a
-    sequential double fold (engine-portable, deterministic)."""
-    ac = F.col(a) if isinstance(a, str) else a
-    bc = F.col(b) if isinstance(b, str) else b
+def _fold_sql(body: str, a: str, b: str) -> str:
+    """SQL text of a sequential double fold over two arrays, element
+    expression ``body`` of (x, y)."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> {body}), 0D, (acc, v) -> acc + v)"
 
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: (p.cast("double") * q.cast("double"))),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
 
-    return dot(ac, bc) / F.sqrt(dot(ac, ac) * dot(bc, bc))
+def _dot_sql(a: str, b: str) -> str:
+    """:func:`cosine_expr`'s dot product as SQL text: the same doubles in
+    the same fold order, so a score assembled from it is bit-identical."""
+    return _fold_sql("CAST(x AS DOUBLE) * CAST(y AS DOUBLE)", a, b)
+
+
+def cosine_expr(a: str, b: str) -> Column:
+    """Cosine similarity between two named array<float> columns, computed
+    as a sequential double fold (engine-portable, deterministic). Built
+    as one SQL string: one py4j round trip instead of one per Column
+    method and lambda."""
+    a, b = f"`{a}`", f"`{b}`"
+    return F.expr(f"{_dot_sql(a, b)} / sqrt({_dot_sql(a, a)} * {_dot_sql(b, b)})")
 
 
 def embedding_near_dup_pairs(

@@ -43,9 +43,12 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     at real scale (input splits >= cores) this is a no-op, so the extra
     exchange is never paid where it wouldn't help. Apply AFTER projecting
     to the columns the kernel needs, so only those bytes shuffle (§2.3).
+    The partition count is read from the JVM plan's RDD, so no Python RDD
+    or pickling hop is built (``df.rdd`` would); for a scan that is
+    planning only, and a plan with exchanges runs them, as before.
     """
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
+    if df._jdf.rdd().getNumPartitions() < par:
         return df.repartition(par)
     return df
 

@@ -17,17 +17,20 @@
 - Hyperplanes are generated from a fixed seed and inlined as literal
   arrays into the plan (tiny: n_planes × dim floats), so executors need no
   side-channel broadcast.
+- Persisted-index search runs no Python worker: the quantizer models ride
+  a one-row broadcast relation, and query probe ranking and PQ
+  reconstruction are JVM expressions over it. Python workers (Arrow UDFs)
+  run only for corpus-side coding (build, append, ``*_topk`` corpora).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
-from airflow_postgres_csv_spark.operators.dedup import cosine_expr
+from airflow_postgres_csv_spark.operators.dedup import _dot_sql, _fold_sql, cosine_expr
 
 __all__ = [
     "topk_cosine_bruteforce",
@@ -86,12 +89,7 @@ def topk_cosine_bruteforce(
     )
     if partial_topk:
         scored = _local_topk(scored, query_id_col, k)
-    w = W.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _top_rows(scored, query_id_col, k)
 
 
 def radius_cosine_search(
@@ -262,12 +260,7 @@ def lsh_bucket_topk(
         )
         .distinct()  # multiprobe/tables can hit the same pair repeatedly
     )
-    w = W.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _top_rows(scored, query_id_col, k)
 
 
 def ivf_centroids(
@@ -318,15 +311,17 @@ def _kmeans_fit(X: "np.ndarray", k: int, iters: int, rng) -> "np.ndarray":
 
 
 def _cell_ranking_udf(centroids: list[list[float]]):
-    """Vectorized coarse-quantizer assignment: pandas_udf ``vec ->
+    """Corpus-side coarse-quantizer assignment: pandas_udf ``vec ->
     array<int>`` of cell ids ordered by ascending squared distance.
 
     One Arrow batch computes all B×n_cells distances with the
     ``|x-c|² = |x|² - 2x·c + |c|²`` expansion (a single matmul) and
-    argsorts per row — replacing n_cells interpreted Catalyst folds with
-    literal-inlined centroids. The centroid matrix travels in the task
-    closure (n_cells × dim floats — tiny at any corpus scale). Ties are
-    broken by cell id (stable argsort on (d2, cell)), deterministic.
+    argsorts per row: at N corpus rows numpy's matmul throughput beats
+    any per-row Catalyst fold. The centroid matrix travels in the task
+    closure (n_cells × dim floats). Ties are broken by cell id (stable
+    argsort on (d2, cell)). Only corpus-side coding (build, append,
+    ``_ivfpq_code``, ``ivf_topk``'s corpus) runs this in Python workers;
+    query-side probe ranking is the JVM :func:`_probe_cells`.
     """
     C = np.asarray(centroids, dtype=np.float64)
     c_norms = (C**2).sum(axis=1)
@@ -341,6 +336,121 @@ def _cell_ranking_udf(centroids: list[list[float]]):
         return pd.Series([row.astype("int32").tolist() for row in order])
 
     return ranking
+
+
+def _model_table(
+    spark: SparkSession,
+    centroids: list[list[float]] | None = None,
+    codebooks: list[list[list[float]]] | None = None,
+) -> DataFrame:
+    """One-row relation carrying the quantizer models as arrays —
+    ``_cents array<array<double>>`` and/or ``_books
+    array<array<array<double>>>`` — for a broadcast cross join. Built
+    through one Arrow batch: inlining the models as literals costs a
+    py4j call per element and grows every plan with the model."""
+    from airflow_postgres_csv_spark.operators.localframe import arrow_local_df
+
+    cols = {"_cents array<array<double>>": centroids,
+            "_books array<array<array<double>>>": codebooks}
+    cols = {ddl: v for ddl, v in cols.items() if v is not None}
+    return arrow_local_df(spark, [tuple(cols.values())], ", ".join(cols))
+
+
+def _pq_reconstruct(rows: DataFrame, model: DataFrame, id_col: str) -> DataFrame:
+    """(id, [cell,] _rec): each coded row's PQ reconstruction, computed
+    once per row in the JVM against the broadcast :func:`_model_table` —
+    the concatenation of each subspace's codebook entry, plus
+    ``centroid[cell]`` when ``rows`` carry a cell (IVF-PQ residual
+    codes). The same doubles the numpy decoder produced."""
+    rec = "flatten(transform(pq_codes, (c, j) -> _books[j][c]))"
+    keep = [id_col]
+    if "cell" in rows.columns:
+        rec, keep = f"zip_with(_cents[cell], {rec}, (x, y) -> x + y)", [id_col, "cell"]
+    return rows.crossJoin(F.broadcast(model)).select(*keep, F.expr(rec).alias("_rec"))
+
+
+def _query_side(
+    queries: DataFrame, id_col: str, vec_col: str, query_id_col: str
+) -> DataFrame:
+    """(query_id, _qvec, _qn): each query vector with its squared norm,
+    folded once per query instead of once per scored pair."""
+    return queries.select(
+        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
+    ).withColumn("_qn", F.expr(_dot_sql("_qvec", "_qvec")))
+
+
+def _probe_cells(q: DataFrame, model: DataFrame, n_probe: int) -> DataFrame:
+    """Query-side probe ranking in the JVM: ``q`` (with ``_qvec``) gains
+    one row per probed ``cell`` — its ``n_probe`` nearest centroids by a
+    squared-L2 fold, ``array_sort``-ed on (distance, cell id). The query
+    set is tiny, so a per-query fold against the broadcast ``_cents``
+    beats a Python-worker round trip."""
+    dist = _fold_sql("(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)", "_qvec", "c")
+    ranked = (
+        f"slice(array_sort(transform(_cents, (c, i) -> "
+        f"struct({dist} AS d, i AS cell))), 1, {int(n_probe)})"
+    )
+    return q.crossJoin(F.broadcast(model.select("_cents"))).select(
+        *q.columns, F.expr(f"explode(transform({ranked}, p -> p.cell)) AS cell")
+    )
+
+
+def _top_rows(
+    scored: DataFrame, query_id_col: str, k: int, score: str = "cosine",
+    rank: str = "rank",
+) -> DataFrame:
+    """(query_id, neighbor_id, score, rank): the ``k`` best rows per query
+    by (``score`` desc, neighbor_id), numbered in ``rank``."""
+    return scored.withColumn(
+        rank,
+        F.expr(
+            f"row_number() OVER (PARTITION BY `{query_id_col}`"
+            f" ORDER BY `{score}` DESC, neighbor_id)"
+        ),
+    ).filter(f"`{rank}` <= {int(k)}").select(query_id_col, "neighbor_id", score, rank)
+
+
+def _adc_rerank(
+    rec: DataFrame,
+    q: DataFrame,
+    vectors: DataFrame,
+    k: int,
+    rerank_factor: int,
+    id_col: str,
+    query_id_col: str,
+    q_probes: DataFrame | None = None,
+) -> DataFrame:
+    """PQ serving tail shared by every PQ searcher. ``rec`` holds one
+    reconstruction ``_rec`` per coded row (asymmetric distance
+    computation, Jégou et al. 2011); its squared norm is folded once per
+    row, so each (row, query) pair — joined to ``q_probes`` on ``cell``,
+    or every query ``q`` — costs one dot fold. The ``k·rerank_factor``
+    best per query are then reranked exactly against ``vectors``
+    (neighbor_id, _nvec)."""
+    rec = rec.withColumn("_rn", F.expr(_dot_sql("_rec", "_rec")))
+    pairs = (
+        rec.crossJoin(F.broadcast(q)) if q_probes is None
+        else rec.join(F.broadcast(q_probes), "cell")
+    )
+    approx = pairs.filter(F.col(id_col) != F.col(query_id_col)).select(
+        query_id_col,
+        F.col(id_col).alias("neighbor_id"),
+        F.expr(f"{_dot_sql('_rec', '_qvec')} / sqrt(_rn * _qn)").alias("_approx"),
+    )
+    cand = _top_rows(
+        approx, query_id_col, k * rerank_factor, "_approx", "_r"
+    ).select(query_id_col, "neighbor_id")
+    # candidates are Q·k·rerank rows: broadcast them against the vectors
+    exact = (
+        vectors.join(F.broadcast(cand), "neighbor_id")
+        .join(F.broadcast(q), query_id_col)
+        .select(
+            query_id_col,
+            "neighbor_id",
+            cosine_expr("_nvec", "_qvec").alias("cosine"),
+        )
+    )
+    return _top_rows(exact, query_id_col, k)
 
 
 def ivf_topk(
@@ -361,23 +471,35 @@ def ivf_topk(
     Complexity per query is O(n_probe/n_cells · N) instead of O(N); the
     probed-cell equi-join is the same shuffle shape as a plain key join, so
     it scales exactly like any bucketed join. Recall is tuned by n_probe
-    (probing all cells degenerates to exact search).
+    (probing all cells degenerates to exact search). The corpus is
+    assigned by the Arrow ranking kernel, the queries by the JVM
+    :func:`_probe_cells`.
     """
     if centroids is None:
         centroids = ivf_centroids(corpus, n_cells=n_cells, id_col=id_col, vec_col=vec_col)
     ranking = _cell_ranking_udf(centroids)
     c_cells = corpus.select(
-        id_col, vec_col, F.element_at(ranking(vec_col), 1).alias("_cell")
+        id_col, vec_col, F.element_at(ranking(vec_col), 1).alias("cell")
     )
-    q_probes = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("_qvec"),
-        F.explode(F.slice(ranking(vec_col), 1, n_probe)).alias("_cell"),
+    q_probes = _probe_cells(
+        _query_side(queries, id_col, vec_col, query_id_col),
+        _model_table(corpus.sparkSession, centroids),
+        n_probe,
     )
-    from airflow_postgres_csv_spark.operators.dedup import cosine_expr
+    return _ivf_rerank(c_cells, q_probes, k, id_col, vec_col, query_id_col)
 
+
+def _ivf_rerank(
+    cells: DataFrame,
+    q_probes: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Exact cosine rerank of the vectors in each query's probed cells."""
     scored = (
-        c_cells.join(F.broadcast(q_probes), "_cell")
+        cells.join(F.broadcast(q_probes), "cell")
         .filter(F.col(id_col) != F.col(query_id_col))
         .select(
             query_id_col,
@@ -385,12 +507,7 @@ def ivf_topk(
             cosine_expr(vec_col, "_qvec").alias("cosine"),
         )
     )
-    w = W.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _top_rows(scored, query_id_col, k)
 
 
 # ---------------------------------------------------------------------------
@@ -460,26 +577,6 @@ def _pq_encode_udf(codebooks: list[list[list[float]]]):
         return pd.Series([row.tolist() for row in codes])
 
     return encode
-
-
-def _pq_decode_udf(codebooks: list[list[list[float]]]):
-    """Vectorized decoder ``codes -> array<double>``: concatenate the m
-    codebook entries — the reconstruction whose distance to a query IS the
-    ADC estimate."""
-    B = np.asarray(codebooks, dtype=np.float64)
-    m, _, dsub = B.shape
-
-    @F.pandas_udf("array<double>")
-    def decode(codes: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype=object)
-        C = np.asarray([np.asarray(c, dtype=np.int64) for c in codes])
-        out = np.empty((C.shape[0], m * dsub))
-        for j in range(m):
-            out[:, j * dsub : (j + 1) * dsub] = B[j][C[:, j]]
-        return pd.Series([row.tolist() for row in out])
-
-    return decode
 
 
 def pq_encode(
@@ -879,6 +976,26 @@ def ivf_index_append(
     )
 
 
+def _pinned_index(
+    spark: SparkSession, index_root: str, version: int | None, kind: str, label: str
+) -> tuple[dict, DataFrame]:
+    """(model metadata, coded table) of the pinned index generation — one
+    manifest read; raises unless it is a ``kind`` index."""
+    from airflow_postgres_csv_spark.operators.snapshots import (
+        _load_manifest,
+        snapshot_read,
+        snapshot_versions,
+    )
+
+    v = version if version is not None else snapshot_versions(index_root)[-1]
+    meta = _load_manifest(index_root, v).get("ann_index") or {}
+    if meta.get("kind") != kind:
+        raise ValueError(
+            f"{index_root} v{v} is not {label} index (ann_index={meta.get('kind')!r})"
+        )
+    return meta, snapshot_read(spark, index_root, version=v)
+
+
 def ivf_search_index(
     spark: SparkSession,
     index_root: str,
@@ -891,48 +1008,18 @@ def ivf_search_index(
     version: int | None = None,
 ) -> DataFrame:
     """Search a persisted IVF index: the centroids come from the pinned
-    manifest (one JSON read — NO training job, no corpus-side UDF), the
-    query side ranks its ``n_probe`` cells (a tiny Arrow batch), and the
-    probed-cell equi-join + exact rerank run against the stored
-    assignment. Same output contract as :func:`ivf_topk`."""
-    from airflow_postgres_csv_spark.operators.snapshots import (
-        _load_manifest,
-        snapshot_read,
-        snapshot_versions,
+    manifest (one JSON read — NO training job, no Python worker), the
+    query side ranks its ``n_probe`` cells in the JVM
+    (:func:`_probe_cells`), and the probed-cell equi-join + exact rerank
+    run against the stored assignment. Same output contract as
+    :func:`ivf_topk`."""
+    meta, coded = _pinned_index(spark, index_root, version, "ivf", "an IVF")
+    q_probes = _probe_cells(
+        _query_side(queries, id_col, vec_col, query_id_col),
+        _model_table(spark, meta["centroids"]),
+        n_probe,
     )
-
-    v = version if version is not None else snapshot_versions(index_root)[-1]
-    meta = _load_manifest(index_root, v).get("ann_index") or {}
-    if meta.get("kind") != "ivf":
-        raise ValueError(
-            f"{index_root} v{v} is not an IVF index (ann_index={meta.get('kind')!r})"
-        )
-    ranking = _cell_ranking_udf(meta["centroids"])
-    coded = snapshot_read(spark, index_root, version=v)
-    q_probes = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("_qvec"),
-        F.explode(F.slice(ranking(vec_col), 1, n_probe)).alias("cell"),
-    )
-    from airflow_postgres_csv_spark.operators.dedup import cosine_expr
-
-    scored = (
-        coded.join(F.broadcast(q_probes), "cell")
-        .filter(F.col("vec_id") != F.col(query_id_col))
-        .select(
-            query_id_col,
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_expr("embedding", "_qvec").alias("cosine"),
-        )
-    )
-    w = W.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _ivf_rerank(coded, q_probes, k, "vec_id", "embedding", query_id_col)
 
 
 def pq_build_index(
@@ -1033,63 +1120,21 @@ def pq_search_index(
     version: int | None = None,
 ) -> DataFrame:
     """Search a persisted PQ index: codebooks from the pinned manifest
-    (no training job), ADC scoring against decoded STORED codes (the
+    (no training job), ADC scoring against the STORED codes (the
     corpus-side encoder never runs), exact rerank on the candidates'
-    true vectors. Same output contract as :func:`pq_topk`."""
-    from airflow_postgres_csv_spark.operators.snapshots import (
-        _load_manifest,
-        snapshot_read,
-        snapshot_versions,
-    )
-
-    v = version if version is not None else snapshot_versions(index_root)[-1]
-    meta = _load_manifest(index_root, v).get("ann_index") or {}
-    if meta.get("kind") != "pq":
-        raise ValueError(
-            f"{index_root} v{v} is not a PQ index (ann_index={meta.get('kind')!r})"
-        )
-    decode = _pq_decode_udf(meta["codebooks"])
-    coded = snapshot_read(spark, index_root, version=v)
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
-    )
-    approx = (
-        coded.select("vec_id", decode(F.col("pq_codes")).alias("_recon"))
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col(query_id_col))
-        .select(
-            query_id_col,
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_expr("_recon", "_qvec").alias("_approx"),
-        )
-    )
-    w = W.partitionBy(query_id_col).orderBy(
-        F.col("_approx").desc(), F.col("neighbor_id")
-    )
-    cand = (
-        approx.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select(query_id_col, "neighbor_id")
-    )
-    exact = (
-        coded.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_nvec")
-        )
-        .join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            cosine_expr("_nvec", "_qvec").alias("cosine"),
-        )
-    )
-    w2 = W.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
+    true vectors. Each coded row is reconstructed once, in the JVM,
+    against the broadcast codebooks (:func:`_model_table`) — no Python
+    worker runs. Same output contract as :func:`pq_topk`."""
+    meta, coded = _pinned_index(spark, index_root, version, "pq", "a PQ")
+    return _adc_rerank(
+        _pq_reconstruct(
+            coded.select("vec_id", "pq_codes"),
+            _model_table(spark, codebooks=meta["codebooks"]),
+            "vec_id",
+        ),
+        _query_side(queries, id_col, vec_col, query_id_col),
+        coded.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_nvec")),
+        k, rerank_factor, "vec_id", query_id_col,
     )
 
 
@@ -1276,73 +1321,31 @@ def ivfpq_search_index(
     candidates (column pruning × commit-level cell pruning is the whole
     point) — ADC scores against centroid + decoded residual, and the
     exact rerank touches true vectors for the ``k·rerank_factor``
-    finalists. Output contract matches the other searchers."""
-    from airflow_postgres_csv_spark.operators.dedup import cosine_expr
-    from airflow_postgres_csv_spark.operators.snapshots import (
-        _load_manifest,
-        snapshot_read,
-        snapshot_versions,
-    )
+    finalists. Output contract matches the other searchers.
 
-    v = version if version is not None else snapshot_versions(index_root)[-1]
-    meta = _load_manifest(index_root, v).get("ann_index") or {}
-    if meta.get("kind") != "ivfpq":
-        raise ValueError(
-            f"{index_root} v{v} is not an IVF-PQ index (ann_index={meta.get('kind')!r})"
-        )
-    ranking = _cell_ranking_udf(meta["centroids"])
-    decode = _pq_decode_udf(meta["codebooks"])
-    coded = snapshot_read(spark, index_root, version=v)
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
-    )
-    q_probes = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("_qvec"),
-        F.explode(F.slice(ranking(vec_col), 1, n_probe)).alias("cell"),
-    )
-    approx = (
+    No Python worker runs: the models ride one broadcast row
+    (:func:`_model_table`), the queries rank their cells against it in
+    the JVM (:func:`_probe_cells`), and the coded rows of the probed
+    cells (a left-semi join) are each reconstructed ONCE —
+    ``centroid[cell]`` plus the decoded residual — with their squared
+    norm, so per-row work is bounded by the probed cells' rows and each
+    (row, query) pair costs one dot fold. A coded table smaller than the
+    session's parallelism is spread first (``spread_small_input``), so
+    the pair scoring runs on every core."""
+    from airflow_postgres_csv_spark.operators.localframe import spread_small_input
+
+    meta, coded = _pinned_index(spark, index_root, version, "ivfpq", "an IVF-PQ")
+    model = _model_table(spark, meta["centroids"], meta["codebooks"])
+    q = _query_side(queries, id_col, vec_col, query_id_col)
+    q_probes = _probe_cells(q, model, n_probe)
+    probed = spread_small_input(
         coded.select("vec_id", "cell", "pq_codes")  # embeddings pruned
-        .join(F.broadcast(q_probes), "cell")
-        .join(F.broadcast(_centroid_table(spark, meta["centroids"])), "cell")
-        .filter(F.col("vec_id") != F.col(query_id_col))
-        .select(
-            query_id_col,
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_expr(
-                F.zip_with("_cent", decode(F.col("pq_codes")), lambda x, y: x + y),
-                "_qvec",
-            ).alias("_approx"),
-        )
-    )
-    w = W.partitionBy(query_id_col).orderBy(
-        F.col("_approx").desc(), F.col("neighbor_id")
-    )
-    cand = (
-        approx.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select(query_id_col, "neighbor_id")
-    )
-    exact = (
-        coded.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("_nvec"),
-        )
-        .join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            cosine_expr("_nvec", "_qvec").alias("cosine"),
-        )
-    )
-    w2 = W.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
+    ).join(F.broadcast(q_probes.select("cell")), "cell", "left_semi")
+    return _adc_rerank(
+        _pq_reconstruct(probed, model, "vec_id"),
+        q,
+        coded.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_nvec")),
+        k, rerank_factor, "vec_id", query_id_col, q_probes,
     )
 
 
@@ -1422,41 +1425,13 @@ def pq_topk(
             corpus, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col
         )
     encode = _pq_encode_udf(codebooks)
-    decode = _pq_decode_udf(codebooks)
-    recon = corpus.select(id_col, decode(encode(vec_col)).alias("_recon"))
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
-    )
-    approx = (
-        recon.crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            cosine_expr("_recon", "_qvec").alias("_approx"),
-        )
-    )
-    w = W.partitionBy(query_id_col).orderBy(F.col("_approx").desc(), F.col("neighbor_id"))
-    cand = (
-        approx.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= k * rerank_factor)
-        .select(query_id_col, "neighbor_id")
-    )
-    # Exact rerank: candidates are Q·k·rerank rows — broadcast them against
-    # the corpus (equi-join on id), never the other way around.
-    exact = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nvec"))
-        .join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            "neighbor_id",
-            cosine_expr("_nvec", "_qvec").alias("cosine"),
-        )
-    )
-    w2 = W.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
+    return _adc_rerank(
+        _pq_reconstruct(
+            corpus.select(id_col, encode(vec_col).alias("pq_codes")),
+            _model_table(corpus.sparkSession, codebooks=codebooks),
+            id_col,
+        ),
+        _query_side(queries, id_col, vec_col, query_id_col),
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nvec")),
+        k, rerank_factor, id_col, query_id_col,
     )

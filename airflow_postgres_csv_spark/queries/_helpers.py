@@ -103,22 +103,42 @@ def multiset_equal(a: DataFrame, b: DataFrame) -> bool:
     )
 
 
+# Catalyst's size estimate above which ``stage_single_parquet`` stops
+# collecting through the driver.
+_STAGE_MAX_BYTES = 64 << 20
+
+
 def stage_single_parquet(df: DataFrame, dst: str, mtime: int) -> None:
-    """Stage a SMALL DataFrame as one parquet file at ``dst`` with a pinned
+    """Stage a DataFrame as one parquet file at ``dst`` with a pinned
     mtime (file-stream sources order micro-batches by mtime).
 
     ``df.coalesce(1).write.parquet`` funnels the whole upstream through ONE
     task (and pays a write-job + commit-protocol round trip per staged
-    file — measured 1-6 s each in the streaming harnesses); these staged
-    frames are micro-batch-sized by construction, so collect them through
-    Arrow (parallel upstream tasks, zero-copy driver assembly) and write
-    the file driver-side with pyarrow. Same rows, same Spark schema on
+    file — measured 1-6 s each in the streaming harnesses); staged frames
+    are usually micro-batch-sized, so collect them through Arrow
+    (parallel upstream tasks, zero-copy driver assembly) and write the
+    file driver-side with pyarrow. Same rows, same Spark schema on
     re-read (``toArrow`` uses PySpark's own type mapping).
+
+    Size guard: when the optimizer's size estimate of ``df`` (no job
+    runs) exceeds ``_STAGE_MAX_BYTES``, nothing is collected — the frame
+    is written by Spark as one file (parallel upstream, one writer task)
+    into a hidden staging directory beside ``dst`` and moved into place.
     """
+    import glob
     import os
+    import shutil
 
-    import pyarrow.parquet as pq
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if est <= _STAGE_MAX_BYTES:
+        import pyarrow.parquet as pq
 
-    table = df.toArrow()
-    pq.write_table(table, dst)
+        pq.write_table(df.toArrow(), dst)
+    else:
+        head, tail = os.path.split(dst)
+        tmp = os.path.join(head, f".{tail}.staging")
+        df.repartition(1).write.mode("overwrite").parquet(tmp)
+        (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
+        os.replace(part, dst)
+        shutil.rmtree(tmp)
     os.utime(dst, (mtime, mtime))

@@ -33,3 +33,61 @@ def sf_dir():
 @pytest.fixture()
 def tmp_out(tmp_path):
     return str(tmp_path)
+
+
+class Py4jCalls:
+    """Counts gateway round trips while active — except the memory
+    commands py4j sends when Python drops a Java reference, whose number
+    depends on when the garbage collector runs."""
+
+    def __init__(self, spark):
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.calls = 0
+
+    def __enter__(self):
+        inner = self.client.send_command
+
+        def send_command(command, *a, **k):
+            if not command.startswith("m\n"):
+                self.calls += 1
+            return inner(command, *a, **k)
+
+        self.client.send_command = send_command
+        return self
+
+    def __exit__(self, *exc):
+        del self.client.send_command  # back to the class method
+
+
+class SparkJobs:
+    """Counts the Spark jobs started while active: a job tag is added on
+    entry and its jobs are read back through ``statusTracker`` on exit."""
+
+    _seq = 0
+
+    def __init__(self, spark):
+        SparkJobs._seq += 1
+        self.sc = spark.sparkContext
+        self.tag = f"pytest-jobs-{SparkJobs._seq}"
+        self.jobs = 0
+
+    def __enter__(self):
+        self.sc.addJobTag(self.tag)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc.removeJobTag(self.tag)
+        tracker = self.sc._jsc.sc().statusTracker()
+        self.jobs = len(tracker.getJobIdsForTag(self.tag))
+
+
+@pytest.fixture()
+def py4j_calls(spark):
+    """Factory of :class:`Py4jCalls` context managers on the session."""
+    return lambda: Py4jCalls(spark)
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """Factory of :class:`SparkJobs` context managers on the session."""
+    return lambda: SparkJobs(spark)

@@ -11,7 +11,10 @@ from decimal import Decimal
 
 from pyspark.sql import functions as F
 
-from airflow_postgres_csv_spark.operators.localframe import arrow_local_df
+from airflow_postgres_csv_spark.operators.localframe import (
+    arrow_local_df,
+    spread_small_input,
+)
 from airflow_postgres_csv_spark.queries._helpers import (
     multiset_equal,
     stage_single_parquet,
@@ -74,6 +77,50 @@ def test_stage_single_parquet_roundtrip(spark, sf_dir, tmp_out):
     back = spark.read.parquet(dst)
     assert back.schema == sub.schema
     assert multiset_equal(back, sub)
+
+
+def test_spread_small_input_probes_the_jvm_plan(spark, monkeypatch):
+    """A one-partition input is spread over ``defaultParallelism``
+    partitions; one with at least that many comes back unchanged; the
+    partition probe never builds a Python RDD."""
+    from pyspark.sql import DataFrame
+
+    def boom(self):
+        raise AssertionError("a Python RDD was built")
+
+    monkeypatch.setattr(DataFrame, "rdd", property(boom))
+    par = spark.sparkContext.defaultParallelism
+    one = spark.range(0, 50, 1, 1)
+    spread = spread_small_input(one)
+    assert spread._jdf.rdd().getNumPartitions() == par
+    assert multiset_equal(spread, one)
+    many = spark.range(0, 50, 1, par)
+    assert spread_small_input(many) is many
+
+
+def test_stage_single_parquet_large_frame_writes_distributed(
+    spark, tmp_out, monkeypatch
+):
+    """A frame the optimizer sizes above the guard (800 MB of range
+    input here, 20 rows after the filter) is never collected: Spark
+    writes it as one file, which lands at ``dst`` with the pinned mtime
+    and no staging directory left beside it."""
+    from pyspark.sql import DataFrame
+
+    def boom(self):
+        raise AssertionError("collected through the driver")
+
+    monkeypatch.setattr(DataFrame, "toArrow", boom)
+    big = spark.range(100_000_000).where(F.col("id") % 5_000_000 == 7)
+    dst = os.path.join(tmp_out, "000.parquet")
+    stage_single_parquet(big, dst, 2_000_000)
+    assert os.listdir(tmp_out) == ["000.parquet"]
+    assert int(os.path.getmtime(dst)) == 2_000_000
+    back = spark.read.parquet(dst)
+    assert back.dtypes == big.dtypes
+    assert sorted(r.id for r in back.collect()) == [
+        i * 5_000_000 + 7 for i in range(20)
+    ]
 
 
 def test_kcore_early_exit_matches_full_rounds(spark):

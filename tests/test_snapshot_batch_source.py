@@ -665,31 +665,7 @@ def test_two_tombstones_on_one_file_read_exact(spark, tmp_path):
         assert (5, 50) not in rows and len(rows) == 9, (how, sorted(rows))
 
 
-class _Py4jCalls:
-    """Counts gateway round trips while active — except the memory
-    commands py4j sends when Python drops a Java reference, whose number
-    depends on when the garbage collector runs."""
-
-    def __init__(self, spark):
-        self.client = spark.sparkContext._gateway._gateway_client
-        self.calls = 0
-
-    def __enter__(self):
-        inner = self.client.send_command
-
-        def send_command(command, *a, **k):
-            if not command.startswith("m\n"):
-                self.calls += 1
-            return inner(command, *a, **k)
-
-        self.client.send_command = send_command
-        return self
-
-    def __exit__(self, *exc):
-        del self.client.send_command  # back to the class method
-
-
-def test_sql_view_plans_native_scan_within_py4j_budget(spark, tmp_path):
+def test_sql_view_plans_native_scan_within_py4j_budget(spark, tmp_path, py4j_calls):
     """A statement over a registered view plans native parquet scans —
     no Python data-source leaf — and register plus statement stay within
     a fixed budget of py4j round trips: measured 90 for the unpruned
@@ -711,7 +687,7 @@ def test_sql_view_plans_native_scan_within_py4j_budget(spark, tmp_path):
         ("SELECT * FROM sv_plan WHERE id % 4 = 1", 108),
         ("SELECT * FROM sv_plan WHERE id >= 350", 166),
     ):
-        with _Py4jCalls(spark) as counter:
+        with py4j_calls() as counter:
             snapshot_sql_register(spark, "sv_plan", root)
             df = spark.sql(text)
         assert counter.calls <= budget, (text, counter.calls)
