@@ -2,8 +2,8 @@
 ``INSERT INTO`` / ``MERGE INTO`` statements routed to the native snapshot
 operators — the Delta/Iceberg Spark-SQL-extensions surface, without a
 session-catalog plugin (Python data sources have no DML extension point
-in Spark 4.1, so the statements are parsed here and the WHERE/SET/ON
-expression fragments are handed to Spark unmodified).
+in Spark 4.1, so the statements are parsed by the session's SQL parser;
+expression text is handed to Spark as written).
 
 Spark itself cannot run DML on plain parquet; pointing these statements
 at the snapshot format buys the lakehouse semantics each operator already
@@ -29,8 +29,6 @@ this is the write-side twin of the ``snapshot_sql_register`` read surface.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import SparkSession
 
 from airflow_postgres_csv_spark.operators.snapshots import (
@@ -42,83 +40,100 @@ from airflow_postgres_csv_spark.operators.snapshots import (
 
 __all__ = ["catalog_sql_exec", "snapshot_sql_exec"]
 
-# table names as users write them: plain or dotted identifiers, optionally
-# backquoted per part (`a.b` written as `a`.`b`)
-_IDENT = r"(?:`[^`]+`|[A-Za-z_][\w$]*)(?:\.(?:`[^`]+`|[A-Za-z_][\w$]*))*"
+_STATEMENTS = (
+    "DeleteFromTable", "UpdateTable", "InsertIntoStatement", "MergeIntoTable"
+)
 
 
-def _unquote(name: str) -> str:
-    # split at part boundaries, never inside backquotes: `gold.t` is ONE
-    # part whose stored name contains the dot
-    parts = re.findall(r"`[^`]+`|[^.`]+", name)
-    return ".".join(p[1:-1] if p.startswith("`") else p for p in parts)
+def _parse(spark: SparkSession, sql: str):
+    """(statement text, parsed plan, plan node name) of ONE DML
+    statement. Text Spark cannot parse raises Spark's own
+    ``ParseException``; any other statement kind is refused here."""
+    stmt = sql.strip().rstrip(";").strip()
+    plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(stmt)
+    kind = plan.nodeName()
+    if kind not in _STATEMENTS:
+        raise ValueError(
+            f"unsupported statement {kind!r}: snapshot_sql_exec runs "
+            "DELETE/UPDATE/INSERT/MERGE (SELECT goes through spark.sql over "
+            "snapshot_sql_register'd views)"
+        )
+    return stmt, plan, kind
 
 
-def _split_top(s: str, sep: str = ",") -> list[str]:
-    """Split on ``sep`` at paren/quote depth zero — SET lists and VALUES
-    tuples carry commas inside function calls and string literals
-    (both SQL doubled-quote and backslash escapes honored)."""
-    out, depth, start, i, n = [], 0, 0, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in "'\"":
-            q = ch
-            i += 1
-            while i < n:
-                if s[i] == "\\":
-                    i += 2
-                    continue
-                if s[i] == q:
-                    # SQL doubles quotes to escape them
-                    if i + 1 < n and s[i + 1] == q:
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == sep and depth == 0:
-            out.append(s[start:i])
-            start = i + 1
+def _parts(seq) -> list[str]:
+    """A parsed ``Seq[String]`` (name parts, an INSERT column list) as a
+    Python list, in one gateway call."""
+    joined = seq.mkString("\x00")
+    return joined.split("\x00") if joined else []
+
+
+def _table(node) -> tuple[list[str], str | None]:
+    """(name parts, alias or None) of a parsed table reference. A
+    backquoted `` `gold.t` `` is ONE part whose name keeps the dot."""
+    alias = None
+    if node.nodeName() == "SubqueryAlias":
+        alias, node = node.alias(), node.child()
+    if node.nodeName() != "UnresolvedRelation":
+        raise ValueError(
+            f"DML target must be a table name, got {node.nodeName()!r}"
+        )
+    return _parts(node.multipartIdentifier()), alias
+
+
+def _text(stmt: str, node, aliases: dict[str, str] | None = None) -> str:
+    """The user's text of a parsed expression or query: the smallest
+    slice of ``stmt`` covering the origin span of every node under
+    ``node`` (stop is inclusive). The root's span alone is not enough: a
+    predicate node (``BETWEEN``, ``IN``, ``IS NULL``) starts at its
+    keyword, and ``ORDER BY``/``LIMIT`` nodes at theirs. Spark's shared
+    TRUE/FALSE literals carry the origin of whichever statement first
+    built them, so their spans are ignored (a bare one reads as
+    ``true``/``false``). Text no node covers is lost — the parentheses
+    of ``(a) BETWEEN ...``, or all of ``EXISTS (...)``, whose node takes
+    the whole statement's span — and Spark then refuses the slice. With
+    ``aliases``, each attribute whose first name part is a key is
+    spliced to ``<value>.<rest>``."""
+    lo, hi, cuts, i = len(stmt), -1, [], 0
+    while (n := node.apply(i)) is not None:
         i += 1
-    out.append(s[start:])
-    return [p.strip() for p in out]
+        kind = n.nodeName()
+        if kind == "Literal" and n.sql() in ("true", "false"):
+            continue
+        ctx = n.origin().context()
+        a, b = ctx.startIndex(), ctx.stopIndex()
+        if a < 0:
+            continue
+        lo, hi = min(lo, a), max(hi, b)
+        if aliases and kind == "UnresolvedAttribute":
+            head, *rest = _parts(n.nameParts())
+            if rest and head in aliases:
+                quoted = [f"`{p.replace('`', '``')}`" for p in rest]
+                cuts.append((a, b, ".".join([aliases[head], *quoted])))
+    if hi < 0:
+        return node.sql()
+    text = stmt[lo:hi + 1]
+    for a, b, new in sorted(cuts, reverse=True):
+        text = text[:a - lo] + new + text[b + 1 - lo:]
+    return text
 
 
-def _mask_literals(s: str) -> str:
-    """A same-length copy of ``s`` with quoted-literal BODIES blanked
-    (the quotes themselves survive), so the statement grammar's keyword
-    boundaries (WHERE / WHEN / SET commas) can never bind inside a
-    string like ``'fix where x'`` — matches run on the mask and slice
-    the ORIGINAL text by span. Honors SQL doubled-quote and backslash
-    escapes."""
-    out = list(s)
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in "'\"":
-            q = ch
-            i += 1
-            while i < n:
-                if s[i] == "\\":
-                    out[i] = " "
-                    if i + 1 < n:
-                        out[i + 1] = " "
-                    i += 2
-                    continue
-                if s[i] == q:
-                    if i + 1 < n and s[i + 1] == q:
-                        out[i] = " "
-                        out[i + 1] = " "
-                        i += 2
-                        continue
-                    break
-                out[i] = " "
-                i += 1
-        i += 1
-    return "".join(out)
+def _assignments(
+    stmt: str, seq, aliases: dict | None = None
+) -> dict[str, str]:
+    """``SET col = expr, ...`` as ``{col: expr text}``."""
+    out: dict[str, str] = {}
+    for i in range(seq.size()):
+        a = seq.apply(i)
+        col = _parts(a.key().nameParts())
+        if len(col) != 1:
+            raise ValueError(
+                f"SET target {'.'.join(col)!r} is not a top-level column"
+            )
+        if col[0] in out:
+            raise ValueError(f"column {col[0]!r} assigned twice in SET")
+        out[col[0]] = _text(stmt, a.value(), aliases)
+    return out
 
 
 def _resolve(spark: SparkSession, name: str, tables: dict | None) -> str:
@@ -151,33 +166,6 @@ def _resolve(spark: SparkSession, name: str, tables: dict | None) -> str:
 
         return _branch_root(spec["root"], spec["branch"])
     return spec["root"]
-
-
-def _source_df(spark: SparkSession, query: str):
-    """An INSERT/MERGE source: a full query (SELECT/WITH/TABLE/VALUES,
-    possibly parenthesized) or a bare table name. Runs through
-    ``spark.sql`` so registered snapshot views in it get the statement
-    hook's file pruning."""
-    q = query.strip()
-    while q.startswith("(") and q.endswith(")"):
-        # strip only a TRUE outer wrap — "(a) UNION (b)" closes its first
-        # paren mid-string and must stay intact
-        depth = 0
-        wraps = True
-        for i, ch in enumerate(q):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i < len(q) - 1:
-                    wraps = False
-                    break
-        if not wraps:
-            break
-        q = q[1:-1].strip()
-    if re.fullmatch(_IDENT, q):
-        return spark.sql(f"SELECT * FROM {q}")
-    return spark.sql(q)
 
 
 def _aligned(df, root: str, columns: list[str] | None):
@@ -230,149 +218,61 @@ def _aligned(df, root: str, columns: list[str] | None):
     )
 
 
-_DELETE_RE = re.compile(
-    rf"DELETE\s+FROM\s+(?P<t>{_IDENT})(?:\s+WHERE\s+(?P<w>.+))?$",
-    re.IGNORECASE | re.DOTALL,
-)
-_UPDATE_RE = re.compile(
-    rf"UPDATE\s+(?P<t>{_IDENT})\s+SET\s+(?P<set>.+?)"
-    r"(?:\s+WHERE\s+(?P<w>.+))?$",
-    re.IGNORECASE | re.DOTALL,
-)
-_INSERT_RE = re.compile(
-    rf"INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?(?P<t>{_IDENT})"
-    r"\s*(?:\((?P<cols>[^)]*)\)\s*(?=\s*(?:SELECT|VALUES|WITH|TABLE|\()))?"
-    r"\s*(?P<q>.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_MERGE_RE = re.compile(
-    rf"MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\s+"
-    rf"(?P<t>{_IDENT})(?:\s+AS)?(?:\s+(?P<ta>[A-Za-z_][\w$]*))?\s+"
-    rf"USING\s+(?P<src>\((?:[^()]|\([^()]*\))*\)|{_IDENT})(?:\s+AS)?"
-    r"(?:\s+(?P<sa>[A-Za-z_][\w$]*))?\s+ON\s+(?P<on>.+?)"
-    r"(?P<when>\s+WHEN\s+.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_WHEN_RE = re.compile(
-    r"WHEN\s+(?P<not>NOT\s+)?MATCHED(?P<by_src>\s+BY\s+SOURCE)?"
-    r"(?:\s+AND\s+(?P<cond>.+?))?\s+THEN\s+"
-    r"(?P<act>DELETE|INSERT\s*\*|UPDATE\s+SET\s+.+?)\s*(?=WHEN\s|$)",
-    re.IGNORECASE | re.DOTALL,
-)
-_ON_RE = re.compile(
-    r"^\s*(?P<a1>[A-Za-z_][\w$]*)\.(?P<c1>[A-Za-z_][\w$]*)\s*=\s*"
-    r"(?P<a2>[A-Za-z_][\w$]*)\.(?P<c2>[A-Za-z_][\w$]*)\s*$"
-)
-
-
-def _realias(expr: str, ta: str, sa: str) -> str:
-    """Rewrite the statement's target/source aliases to the fixed ``t``/
-    ``s`` that ``snapshot_merge_into`` expressions use. Both aliases are
-    first moved to collision-proof placeholders so a statement whose
-    SOURCE alias is literally ``t`` (or target ``s``) cannot have its
-    just-rewritten references re-rewritten by the second pass."""
-    expr = re.sub(rf"\b{re.escape(ta)}\s*\.", "\x00T\x00.", expr)
-    expr = re.sub(rf"\b{re.escape(sa)}\s*\.", "\x00S\x00.", expr)
-    return expr.replace("\x00T\x00.", "t.").replace("\x00S\x00.", "s.").strip()
-
-
-def _parse_set(set_text: str) -> dict[str, str]:
-    out: dict[str, str] = {}
-    for part in _split_top(set_text):
-        m = re.match(
-            r"^\s*(?:`(?P<q>[^`]+)`|(?P<c>[A-Za-z_][\w$]*))\s*=\s*"
-            r"(?P<e>.+)$",
-            part,
-            re.DOTALL,
-        )
-        if not m:
-            raise ValueError(f"cannot parse SET assignment: {part!r}")
-        col = m.group("q") or m.group("c")
-        if col in out:
-            raise ValueError(f"column {col!r} assigned twice in SET")
-        out[col] = m.group("e").strip()
-    return out
-
-
 def snapshot_sql_exec(
     spark: SparkSession, sql: str, tables: dict[str, str] | None = None
 ) -> dict:
     """Execute ONE DML statement against snapshot tables (see module
     docstring for the statement surface and routing). Returns the
     underlying operator's result dict plus ``{"statement": kind}``.
+    The statement is read by the session's SQL parser, exactly as
+    ``spark.sql`` would read it: text it cannot parse raises Spark's
+    ``ParseException`` (error class and position), unchanged.
     Multi-statement scripts, DDL, and plain SELECT belong to their
     existing surfaces (``spark.sql`` over registered views; the catalog
     DDL ops)."""
-    stmt = sql.strip().rstrip(";").strip()
-    masked = _mask_literals(stmt)
-    head = stmt.split(None, 1)[0].upper() if stmt else ""
-    if head == "DELETE":
-        m = _DELETE_RE.fullmatch(masked)
-        if not m:
-            raise ValueError(f"cannot parse DELETE statement: {stmt!r}")
-        root = _resolve(spark, _unquote(_g(m, stmt, "t")), tables)
+    return _exec(spark, *_parse(spark, sql), tables)
+
+
+def _exec(
+    spark: SparkSession, stmt: str, plan, kind: str, tables: dict | None
+) -> dict:
+    if kind == "MergeIntoTable":
+        return _exec_merge(spark, stmt, plan, tables)
+    parts, alias = _table(plan.table())
+    if alias is not None:
+        raise ValueError(
+            f"aliased {kind} target {alias!r} is not supported: name the "
+            "table without an alias"
+        )
+    root = _resolve(spark, ".".join(parts), tables)
+    if kind == "DeleteFromTable":
+        # no WHERE parses to the shared TRUE literal, which reads "true"
         out = snapshot_delete_positional(
-            spark, root, (_g(m, stmt, "w") or "true").strip()
+            spark, root, _text(stmt, plan.condition())
         )
         return {**out, "statement": "delete"}
-    if head == "UPDATE":
-        m = _UPDATE_RE.fullmatch(masked)
-        if not m:
-            raise ValueError(f"cannot parse UPDATE statement: {stmt!r}")
-        root = _resolve(spark, _unquote(_g(m, stmt, "t")), tables)
+    if kind == "UpdateTable":
+        cond = plan.condition()
         out = snapshot_update_where(
-            spark, root, (_g(m, stmt, "w") or "true").strip(),
-            _parse_set(_g(m, stmt, "set")),
+            spark, root,
+            _text(stmt, cond.get()) if cond.isDefined() else "true",
+            _assignments(stmt, plan.assignments()),
         )
         return {**out, "statement": "update"}
-    if head == "INSERT":
-        m = _INSERT_RE.fullmatch(masked)
-        if not m:
-            raise ValueError(f"cannot parse INSERT statement: {stmt!r}")
-        root = _resolve(spark, _unquote(_g(m, stmt, "t")), tables)
-        cols = (
-            [c.strip().strip("`") for c in m.group("cols").split(",")]
-            if m.group("cols")
-            else None
+    if plan.byName() or not plan.partitionSpec().isEmpty():
+        raise ValueError(
+            "INSERT ... BY NAME / PARTITION (...) is not supported: list "
+            "the columns instead"
         )
-        df = _aligned(_source_df(spark, _g(m, stmt, "q")), root, cols)
-        mode = (
-            "append" if m.group("mode").upper() == "INTO" else "overwrite"
-        )
-        out = snapshot_commit(df, root, mode=mode)
-        return {"version": out["version"], "statement": f"insert_{mode}"}
-    if head == "MERGE":
-        return _exec_merge(spark, stmt, tables)
-    raise ValueError(
-        f"unsupported statement {head!r}: snapshot_sql_exec runs "
-        "DELETE/UPDATE/INSERT/MERGE (SELECT goes through spark.sql over "
-        "snapshot_sql_register'd views)"
+    # the INSERT node spans `INSERT INTO t [(cols)]`: the query is the
+    # rest of the statement, as written
+    query = stmt[plan.origin().context().stopIndex() + 1:]
+    df = _aligned(
+        spark.sql(query), root, _parts(plan.userSpecifiedCols()) or None
     )
-
-
-def _g(m: re.Match, original: str, name: str) -> str | None:
-    """A group's text from the ORIGINAL statement by the span matched on
-    its literal-masked copy (same length, so spans line up)."""
-    return (
-        original[m.start(name):m.end(name)]
-        if m.group(name) is not None
-        else None
-    )
-
-
-def _target_name(stmt: str) -> str:
-    """The table a DML statement writes to, by the same grammar the
-    executors use."""
-    head = stmt.split(None, 1)[0].upper() if stmt else ""
-    m = {
-        "DELETE": _DELETE_RE,
-        "UPDATE": _UPDATE_RE,
-        "INSERT": _INSERT_RE,
-        "MERGE": _MERGE_RE,
-    }.get(head, re.compile(r"(?!x)x")).fullmatch(_mask_literals(stmt))
-    if not m:
-        raise ValueError(f"cannot parse {head or 'empty'} statement: {stmt!r}")
-    return _unquote(_g(m, stmt, "t"))
+    mode = "overwrite" if plan.overwrite() else "append"
+    out = snapshot_commit(df, root, mode=mode)
+    return {"version": out["version"], "statement": f"insert_{mode}"}
 
 
 def catalog_sql_exec(
@@ -408,8 +308,10 @@ def catalog_sql_exec(
         snapshot_versions,
     )
 
-    stmt = sql.strip().rstrip(";").strip()
-    name = _target_name(stmt)
+    stmt, plan, kind = _parse(spark, sql)
+    name = ".".join(_table(
+        plan.targetTable() if kind == "MergeIntoTable" else plan.table()
+    )[0])
     state = catalog_state(catalog_root, catalog_versions(catalog_root)[-1])
     ent = state.get(name)
     if ent is None or _is_virtual(ent):
@@ -425,7 +327,7 @@ def catalog_sql_exec(
             f"{pinned} but its root head is {head} — an out-of-band "
             "writer advanced it; catalog_pin_tables first, then re-run"
         )
-    out = snapshot_sql_exec(spark, stmt, tables={name: root})
+    out = _exec(spark, stmt, plan, kind, {name: root})
     # pin the DML's OWN commit version (every operator result carries
     # it) — never a re-read head, which could silently adopt a foreign
     # commit that landed in the window after the drift check
@@ -440,103 +342,111 @@ def catalog_sql_exec(
 
 
 def _exec_merge(
-    spark: SparkSession, stmt: str, tables: dict | None
+    spark: SparkSession, stmt: str, plan, tables: dict | None
 ) -> dict:
-    masked = _mask_literals(stmt)
-    m = _MERGE_RE.fullmatch(masked)
-    if not m:
-        raise ValueError(f"cannot parse MERGE statement: {stmt!r}")
-    tname = _unquote(_g(m, stmt, "t"))
-    root = _resolve(spark, tname, tables)
-    ta = m.group("ta") or tname
-    src_text = _g(m, stmt, "src")
-    sa = m.group("sa") or (
-        _unquote(src_text)
-        if re.fullmatch(_IDENT, m.group("src"))
-        else None
-    )
-    if sa is None:
+    parts, ta = _table(plan.targetTable())
+    ta = ta or parts[-1]
+    root = _resolve(spark, ".".join(parts), tables)
+    src = plan.sourceTable()
+    sa = None
+    if src.nodeName() == "SubqueryAlias":
+        sa, src = src.alias(), src.child()
+    if src.nodeName() == "UnresolvedRelation":
+        sa = sa or _parts(src.multipartIdentifier())[-1]
+        query = f"SELECT * FROM {_text(stmt, src)}"
+    elif sa is None:
         raise ValueError("MERGE with a subquery source needs an alias")
-    on = _ON_RE.match(m.group("on"))
-    if not on:
+    else:
+        query = _text(stmt, src)
+    on = plan.mergeCondition()
+    sides = [on.left(), on.right()] if on.nodeName() == "EqualTo" else []
+    names = [
+        _parts(a.nameParts())
+        for a in sides
+        if a.nodeName() == "UnresolvedAttribute"
+    ]
+    if len(names) != 2 or any(len(n) != 2 for n in names):
         raise ValueError(
             "MERGE ON must be a single equality t.<key> = s.<key> "
-            f"(got {m.group('on')!r})"
+            f"(got {_text(stmt, on)!r})"
         )
-    sides = {on.group("a1"): on.group("c1"), on.group("a2"): on.group("c2")}
-    if set(sides) != {ta, sa} or on.group("c1") != on.group("c2"):
+    (a1, c1), (a2, c2) = names
+    if {a1, a2} != {ta, sa} or c1 != c2:
         raise ValueError(
             "MERGE ON must equate the SAME column name across the target "
-            f"and source aliases ({ta!r}, {sa!r}); got {m.group('on')!r}"
+            f"and source aliases ({ta!r}, {sa!r}); got {_text(stmt, on)!r}"
         )
-    key = on.group("c1")
-    kw: dict = {"key": key, "insert_when_not_matched": False}
-    if m.group("evolve"):
+    kw: dict = {"key": c1, "insert_when_not_matched": False}
+    if plan.withSchemaEvolution():
         kw["merge_schema"] = True
+    # the target wins an alias both sides share
+    aliases = {sa: "s", ta: "t"}
     seen: set[str] = set()
-    when_orig = _g(m, stmt, "when")
-    for w in _WHEN_RE.finditer(masked[m.start("when"):m.end("when")]):
-        act_orig = when_orig[w.start("act"):w.end("act")]
-        cond_orig = (
-            when_orig[w.start("cond"):w.end("cond")]
-            if w.group("cond") is not None
-            else None
-        )
-        act = re.sub(r"\s+", " ", w.group("act")).upper()
-        kind = (
-            "by_source" if w.group("by_src")
-            else "insert" if w.group("not")
-            else "delete" if act == "DELETE"
-            else "update"
-        )
-        if kind in seen:
-            # SQL gives same-kind clauses first-match-wins semantics the
-            # single-slot operator cannot express — refuse, never drop
-            raise ValueError(
-                f"duplicate WHEN clause kind {kind!r}: the snapshot MERGE "
-                "takes at most one clause of each kind"
+    for group, actions in (
+        ("matched", plan.matchedActions()),
+        ("insert", plan.notMatchedActions()),
+        ("by_source", plan.notMatchedBySourceActions()),
+    ):
+        for i in range(actions.size()):
+            act = actions.apply(i)
+            action = act.nodeName()
+            kind = (
+                group if group != "matched"
+                else "delete" if action == "DeleteAction"
+                else "update"
             )
-        if kind == "delete" and "update" in seen:
-            # the operator's fixed order is DELETE -> UPDATE; a statement
-            # writing UPDATE first means first-match-wins would UPDATE
-            # rows this engine would delete — refuse the reordering
-            raise ValueError(
-                "WHEN MATCHED THEN UPDATE written before WHEN MATCHED "
-                "THEN DELETE: this engine evaluates DELETE first, which "
-                "changes first-match-wins semantics — write the DELETE "
-                "clause first"
-            )
-        seen.add(kind)
-        cond = (
-            _realias(cond_orig, ta, sa) if cond_orig is not None else None
-        )
-        if w.group("by_src"):
-            if not w.group("not") or act != "DELETE":
+            if kind in seen:
+                # SQL gives same-kind clauses first-match-wins semantics
+                # the single-slot operator cannot express — refuse, never
+                # drop
                 raise ValueError(
-                    "WHEN [NOT] MATCHED BY SOURCE supports THEN DELETE only"
+                    f"duplicate WHEN clause kind {kind!r}: the snapshot "
+                    "MERGE takes at most one clause of each kind"
                 )
-            kw["not_matched_by_source_delete"] = cond or "true"
-        elif w.group("not"):
-            if act != "INSERT *":
+            if kind == "delete" and "update" in seen:
+                # the operator's fixed order is DELETE -> UPDATE; a
+                # statement writing UPDATE first means first-match-wins
+                # would UPDATE rows this engine would delete — refuse the
+                # reordering
                 raise ValueError(
-                    "WHEN NOT MATCHED supports THEN INSERT * only "
-                    "(the snapshot MERGE is INSERT-star shaped)"
+                    "WHEN MATCHED THEN UPDATE written before WHEN MATCHED "
+                    "THEN DELETE: this engine evaluates DELETE first, which "
+                    "changes first-match-wins semantics — write the DELETE "
+                    "clause first"
                 )
-            kw["insert_when_not_matched"] = True
-            if cond:
-                kw["not_matched_condition"] = cond
-        elif act == "DELETE":
-            kw["matched_delete_condition"] = cond or "true"
-        else:
-            set_text = re.sub(
-                r"^UPDATE\s+SET\s+", "", act_orig,
-                flags=re.IGNORECASE,
+            seen.add(kind)
+            cond = act.condition()
+            cond = (
+                _text(stmt, cond.get(), aliases) if cond.isDefined() else None
             )
-            kw["matched_update"] = {
-                c: _realias(e, ta, sa)
-                for c, e in _parse_set(set_text).items()
-            }
-            if cond:
-                kw["matched_update_condition"] = cond
-    out = snapshot_merge_into(spark, root, _source_df(spark, src_text), **kw)
+            if kind == "by_source":
+                if action != "DeleteAction":
+                    raise ValueError(
+                        "WHEN NOT MATCHED BY SOURCE supports THEN DELETE "
+                        "only"
+                    )
+                kw["not_matched_by_source_delete"] = cond or "true"
+            elif kind == "insert":
+                if action != "InsertStarAction":
+                    raise ValueError(
+                        "WHEN NOT MATCHED supports THEN INSERT * only "
+                        "(the snapshot MERGE is INSERT-star shaped)"
+                    )
+                kw["insert_when_not_matched"] = True
+                if cond:
+                    kw["not_matched_condition"] = cond
+            elif kind == "delete":
+                kw["matched_delete_condition"] = cond or "true"
+            elif action != "UpdateAction":
+                raise ValueError(
+                    "WHEN MATCHED supports THEN UPDATE SET <col> = <expr> "
+                    "and THEN DELETE only"
+                )
+            else:
+                kw["matched_update"] = _assignments(
+                    stmt, act.assignments(), aliases
+                )
+                if cond:
+                    kw["matched_update_condition"] = cond
+    out = snapshot_merge_into(spark, root, spark.sql(query), **kw)
     return {**out, "statement": "merge"}

@@ -4416,13 +4416,16 @@ register(
 
 # ---------------------------------------------------------------------------
 # SQL-TEXT DML (round 11): DELETE FROM / UPDATE / MERGE INTO / INSERT
-# statements routed to the native snapshot operators (operators/sql_dml.py)
-# — the Delta/Iceberg Spark-SQL-extensions surface the reference gets by
-# delegating statements to Postgres (reference operators.py:80). The UPDATE
-# runs keyless merge-on-read (snapshot_update_where: ONE commit carrying the
-# positional delete vector AND the post-image files); the MERGE exercises
-# all three matched/not-matched clause kinds. The oracle replays the same
-# statement sequence declaratively as a CTE chain over the base rows.
+# statements read by the session's SQL parser and routed to the native
+# snapshot operators (operators/sql_dml.py), each WHERE/SET/ON expression
+# handed to Spark as written — the Delta/Iceberg Spark-SQL-extensions
+# surface the reference gets by delegating statements to Postgres
+# (reference operators.py:80). The UPDATE runs keyless merge-on-read
+# (snapshot_update_where: ONE commit carrying the positional delete vector
+# AND the post-image files); the MERGE exercises all three matched/not-
+# matched clause kinds, its aliases rewritten at the parsed attributes'
+# spans. The oracle replays the same statement sequence declaratively as a
+# CTE chain over the base rows.
 # ---------------------------------------------------------------------------
 
 

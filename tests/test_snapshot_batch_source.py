@@ -348,14 +348,15 @@ def test_catalog_option_reads_pinned_consistent_view(spark, tmp_path):
 
 def test_sql_view_pushdown_prunes_files(spark, tmp_path):
     """VERDICT r8 item 4 + r9 item 2: snapshot tables named in raw
-    spark.sql text. With the DEFAULT registration the statement hook
-    re-registers a fresh relation per statement, so the SQL query's own
-    WHERE conjuncts reach pushFilters and prune the range-clustered
-    commits — the selective statement PLANS strictly fewer input
-    partitions than the full scan (``.rdd.getNumPartitions()`` forces
-    real DSv2 planning), at most one commit's worth of files survives
-    (commit-level pruning, not just file luck), and the result is
-    exact. No manual re-registration between statements."""
+    spark.sql text. The view is the native pinned scan; the statement
+    hook reads the filters Catalyst pushed into its parquet scans,
+    keeps the files of the range-clustered commits those filters can
+    match and re-plans the statement over them — the selective
+    statement PLANS strictly fewer input partitions than the full scan
+    (``.rdd.getNumPartitions()`` forces real planning), at most one
+    commit's worth of files survives (commit-level pruning, not just
+    file luck), and the result is exact. No manual re-registration
+    between statements."""
     from airflow_postgres_csv_spark.sources.snapshot_batch import (
         snapshot_sql_register,
     )
@@ -382,16 +383,15 @@ def test_sql_view_pushdown_prunes_files(spark, tmp_path):
 
 def test_sql_view_default_is_reuse_safe(spark, tmp_path):
     """The DEFAULT registration must stay exact under ARBITRARY statement
-    sequences over one long-lived view — Spark's per-relation Python
-    scan cache (PythonDataSourceV2.readInfo) is not keyed on pushed
-    filters, so a naive pruning view would serve a filterless statement
-    the previous statement's pruned partitions. The statement hook
-    re-registers a fresh relation per statement (each statement owns
-    its cache) and falls back to an unpruned relation when one
-    statement scans the same table instance twice with divergent
-    filters. This sequence (full, selective, full, selective, full,
+    sequences over one long-lived view — a pruned statement must never
+    serve its kept files to a later, filterless one. The statement hook
+    re-plans a pruned statement over its own file list and registers
+    the full list again before returning, so each DataFrame's analyzed
+    plan holds its own files and no scan cache is shared between
+    statements. This sequence (full, selective, full, selective, full,
     then self-joins / optimizer-duplicated CTE / scalar subquery — the
-    exact poisoning patterns) must stay exact WITH pruning on."""
+    patterns that poisoned the earlier per-relation Python scan cache)
+    must stay exact WITH pruning on."""
     from airflow_postgres_csv_spark.sources.snapshot_batch import (
         snapshot_sql_register,
     )
@@ -514,12 +514,12 @@ def test_sql_view_hook_survives_torn_down_root(spark, tmp_path):
 
 
 def test_sql_view_derived_objects_stay_exact(spark, tmp_path):
-    """A statement that CREATES a derived object over a registered
-    pruning view (temp view, CACHE) pins a relation BEYOND the
-    statement, and later statements over the derived name bypass the
-    hook — so the hook gives such statements an always-safe full-list
-    relation. The exact poisoning sequence (filtered over the derived
-    view, then filterless) must stay exact."""
+    """A statement that CREATES a derived object over a registered view
+    (temp view, CACHE) pins a plan BEYOND the statement, and later
+    statements over the derived name bypass the hook — the derived
+    object must hold the full file list, never one statement's pruned
+    list. The poisoning sequence (filtered over the derived view, then
+    filterless) must stay exact."""
     from airflow_postgres_csv_spark.sources.snapshot_batch import (
         snapshot_sql_register,
     )
@@ -552,11 +552,10 @@ def test_sql_view_derived_objects_stay_exact(spark, tmp_path):
 
 
 def test_sql_view_spark_table_handle_is_reuse_safe(spark, tmp_path):
-    """spark.table(name) on a registered pruning view returns a handle
-    the caller may save and reuse across differently-filtered queries —
-    it gets its own always-safe full-list relation (the per-relation
-    scan cache cannot be made filter-exact for a long-lived handle), so
-    the filtered-then-filterless reuse stays exact."""
+    """spark.table(name) on a registered view returns a handle the
+    caller may save and reuse across differently-filtered queries — it
+    is the view's native full-list scan, which each query filters on
+    its own, so the filtered-then-filterless reuse stays exact."""
     from airflow_postgres_csv_spark.sources.snapshot_batch import (
         snapshot_sql_register,
     )
@@ -613,7 +612,7 @@ def test_sql_repeated_statement_stays_exact_across_commits(spark, tmp_path):
 
 def test_sql_parameterized_statements_never_reuse(spark, tmp_path):
     """Parameterized statements bind DIFFERENT literals into identical
-    text — the reuse fast path must never serve the previous binding's
+    text — a statement must never be served the previous binding's
     pruned partitions."""
     from airflow_postgres_csv_spark.sources.snapshot_batch import (
         snapshot_sql_register,

@@ -11,6 +11,7 @@ point."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import ParseException
 from pyspark.sql import functions as F
 
 from airflow_postgres_csv_spark.operators.snapshots import (
@@ -432,7 +433,11 @@ def test_parser_literals_and_alias_hardening(spark, tmp_path):
             "WHEN MATCHED THEN UPDATE SET v = s.v",
             tables={"m": tgt},
         )
-    with pytest.raises(ValueError, match="DELETE first"):
+    # an unconditional UPDATE before a DELETE never reaches this engine:
+    # Spark's parser refuses it first
+    with pytest.raises(
+        ParseException, match="NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION"
+    ):
         snapshot_sql_exec(
             spark,
             "MERGE INTO m AS g USING dml_alias_src AS s ON g.k = s.k "
@@ -440,7 +445,126 @@ def test_parser_literals_and_alias_hardening(spark, tmp_path):
             "WHEN MATCHED AND s.v < 0 THEN DELETE",
             tables={"m": tgt},
         )
+    with pytest.raises(ValueError, match="DELETE first"):
+        snapshot_sql_exec(
+            spark,
+            "MERGE INTO m AS g USING dml_alias_src AS s ON g.k = s.k "
+            "WHEN MATCHED AND s.v > 0 THEN UPDATE SET v = s.v "
+            "WHEN MATCHED AND s.v < 0 THEN DELETE",
+            tables={"m": tgt},
+        )
     with pytest.raises(ValueError, match="duplicate INSERT column"):
         snapshot_sql_exec(
             spark, "INSERT INTO t (id, id) VALUES (7, 8)", tables=t
         )
+
+
+# Statements as Spark's own parser reads them: comments, literals holding
+# keywords, quoted identifiers and nested subqueries, each run on a fresh
+# copy of the ``_seed`` table. SEED is the untouched table.
+SEED = {(1, "a", 10), (2, "b", 20), (3, "a", 30), (4, "c", 40)}
+GRID = [
+    # commented-out clauses change nothing
+    ("UPDATE t SET amt = 0 -- WHERE id = 1",
+     {(1, "a", 0), (2, "b", 0), (3, "a", 0), (4, "c", 0)}),
+    ("MERGE INTO t AS g USING dml_grid_src AS u ON g.id = u.id "
+     "WHEN MATCHED THEN UPDATE SET amt = u.amt "
+     "-- WHEN NOT MATCHED THEN INSERT *",
+     SEED - {(2, "b", 20)} | {(2, "b", 7)}),
+    # comments between clauses
+    ("DELETE FROM t -- c\nWHERE id = 1", SEED - {(1, "a", 10)}),
+    ("DELETE FROM t /* where */ WHERE id = 2", SEED - {(2, "b", 20)}),
+    ("UPDATE t SET amt = 5 /* WHERE id = 1 */ WHERE id = 2",
+     SEED - {(2, "b", 20)} | {(2, "b", 5)}),
+    ("INSERT INTO t (id, grp) -- c\nVALUES (9, 'z')",
+     SEED | {(9, "z", None)}),
+    # keywords, commas and quotes inside literals
+    ("UPDATE t SET grp = 'fix where broken'",
+     {(1, "fix where broken", 10), (2, "fix where broken", 20),
+      (3, "fix where broken", 30), (4, "fix where broken", 40)}),
+    ("UPDATE t SET grp = 'a,b''c', amt = amt + 1 WHERE id = 1",
+     SEED - {(1, "a", 10)} | {(1, "a,b'c", 11)}),
+    ('UPDATE t SET grp = "x where y" WHERE id = 3',
+     SEED - {(3, "a", 30)} | {(3, "x where y", 30)}),
+    ("UPDATE t SET `amt` = amt * 2 WHERE grp = 'a'",
+     {(1, "a", 20), (2, "b", 20), (3, "a", 60), (4, "c", 40)}),
+    ("UPDATE t SET grp = '😀é' WHERE id = 4",
+     SEED - {(4, "c", 40)} | {(4, "😀é", 40)}),
+    # predicates whose node span starts at their keyword, and the shared
+    # FALSE literal
+    ("DELETE FROM t WHERE amt BETWEEN 15 AND 35",
+     {(1, "a", 10), (4, "c", 40)}),
+    ("DELETE FROM t WHERE -amt NOT IN (-10, -40)",
+     {(1, "a", 10), (4, "c", 40)}),
+    ("DELETE FROM t WHERE false", SEED),
+    # a subquery source with its own parenthesised IN (SELECT ...)
+    ("MERGE INTO t AS g USING (SELECT id, grp, amt * 10 AS amt "
+     "FROM dml_grid_src WHERE id IN (SELECT id FROM dml_grid_src "
+     "WHERE amt < (10))) AS u ON g.id = u.id "
+     "WHEN MATCHED THEN UPDATE SET amt = u.amt "
+     "WHEN NOT MATCHED THEN INSERT *",
+     SEED - {(2, "b", 20)} | {(2, "b", 70)}),
+    # a source aliased literally t; 'g.x' inside a literal stays text
+    ("MERGE INTO t AS g USING dml_grid_src AS t ON g.id = t.id "
+     "WHEN MATCHED AND t.grp <> 'g.x' THEN UPDATE SET amt = g.amt + t.amt "
+     "WHEN NOT MATCHED THEN INSERT *",
+     SEED - {(2, "b", 20)} | {(2, "b", 27), (5, "n", 50)}),
+]
+
+
+@pytest.mark.parametrize("stmt,want", GRID, ids=[s for s, _ in GRID])
+def test_statement_grid_reads_as_spark_parses(spark, tmp_path, stmt, want):
+    spark.createDataFrame(
+        [(2, "q", 7), (5, "n", 50)], "id int, grp string, amt int"
+    ).createOrReplaceTempView("dml_grid_src")
+    root = _seed(spark, tmp_path)
+    snapshot_sql_exec(spark, stmt, tables={"t": root})
+    assert _rows(spark, root) == want
+
+
+def test_parse_and_route_py4j_budget(spark, py4j_calls, monkeypatch):
+    """Parsing a statement and routing it to its operator stays within a
+    fixed number of gateway calls (measured on pyspark 4.1.2, plus about
+    20% headroom): the operators are stubbed, so only the parse, the
+    table name, the expression slices and the MERGE source count."""
+    from airflow_postgres_csv_spark.operators import sql_dml
+
+    routed = {}
+
+    def stub(name):
+        def op(*args, **kwargs):
+            routed[name] = (args, kwargs)
+            return {}
+        return op
+
+    for name in ("snapshot_update_where", "snapshot_merge_into"):
+        monkeypatch.setattr(sql_dml, name, stub(name))
+    spark.createDataFrame(
+        [(1, "a", 5)], "id int, grp string, amt int"
+    ).createOrReplaceTempView("dml_pin_src")
+    t = {"t": "unused-root"}
+    with py4j_calls() as update:
+        snapshot_sql_exec(
+            spark, "UPDATE t SET amt = amt + 1 WHERE id % 250 = 7", tables=t
+        )
+    assert routed["snapshot_update_where"][0][2:] == (
+        "id % 250 = 7", {"amt": "amt + 1"}
+    )
+    with py4j_calls() as merge:
+        snapshot_sql_exec(
+            spark,
+            "MERGE INTO t AS g USING dml_pin_src AS u ON g.id = u.id "
+            "WHEN MATCHED AND u.amt > 30 THEN DELETE "
+            "WHEN MATCHED THEN UPDATE SET amt = g.amt + 7 "
+            "WHEN NOT MATCHED THEN INSERT * "
+            "WHEN NOT MATCHED BY SOURCE AND g.grp = 'x' THEN DELETE",
+            tables=t,
+        )
+    kw = routed["snapshot_merge_into"][1]
+    assert kw["matched_delete_condition"] == "s.`amt` > 30"
+    assert kw["matched_update"] == {"amt": "t.`amt` + 7"}
+    assert kw["not_matched_by_source_delete"] == "t.`grp` = 'x'"
+    # measured: 72 and 136 (six calls per expression node, plus the
+    # MERGE source's spark.sql)
+    assert update.calls <= 86, update.calls
+    assert merge.calls <= 163, merge.calls
