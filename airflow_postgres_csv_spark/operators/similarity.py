@@ -4,6 +4,14 @@
   cross-joined) cosine + per-query window top-k. The correctness baseline.
 - :func:`lsh_bucket_topk` — approximate top-k via random-hyperplane LSH:
   sign-bit bucketing with multi-probe, rerank only within probed buckets.
+- :func:`ivf_topk` / :func:`pq_topk` — in-memory IVF and product-quantized
+  (PQ) approximate top-k over a freshly coded corpus.
+- One persisted ANN index, IVF-PQ (``ivfpq_build_index`` /
+  ``ivfpq_index_append`` / ``ivfpq_search_index``, plus
+  ``ann_index_delete`` and ``ann_derive_settings``): coarse cells with
+  PQ-coded residuals. ``n_cells=None`` builds it without the coarse
+  quantizer (a PQ index over raw vectors), ``m=None`` without the codes
+  (an IVF index whose probed cells are reranked exactly).
 
 100 TB design:
 - Brute force is O(Q·N) dot products — viable only when Q is small and the
@@ -39,15 +47,9 @@ __all__ = [
     "lsh_bucket_topk",
     "ivf_centroids",
     "ivf_topk",
-    "ivf_build_index",
-    "ivf_index_append",
-    "ivf_search_index",
     "pq_codebooks",
     "pq_encode",
     "pq_topk",
-    "pq_build_index",
-    "pq_index_append",
-    "pq_search_index",
     "ivfpq_build_index",
     "ivfpq_index_append",
     "ivfpq_search_index",
@@ -263,6 +265,53 @@ def lsh_bucket_topk(
     return _top_rows(scored, query_id_col, k)
 
 
+def _train_models(
+    corpus: DataFrame,
+    n_cells: int | None,
+    m: int | None,
+    n_codes: int,
+    id_col: str,
+    vec_col: str,
+    sample: int,
+    iters: int,
+    seed: int,
+) -> tuple[list[list[float]] | None, list[list[list[float]]] | None]:
+    """(centroids, codebooks) fitted on ONE deterministic corpus sample
+    (first ``sample`` rows by id — reproducible, unlike rand-sampling):
+    k-means centroids when ``n_cells`` is set, then per-subspace PQ
+    codebooks when ``m`` is set — on the residuals to those centroids,
+    or on the raw vectors without them. One ``default_rng(seed)`` feeds
+    both fits in that order. Fitting is driver-side numpy: the models
+    are tiny even when the corpus is 100 TB; only coding is distributed.
+    ``sample`` is hard-capped so the driver-side collect can never
+    silently become a corpus download."""
+    if n_cells is None and m is None:
+        raise ValueError("an ANN index needs n_cells, m or both")
+    if sample > 100_000:
+        raise ValueError(
+            f"sample={sample} exceeds the 100k driver-side cap; quantizers "
+            "do not improve with more — train on a bounded sample"
+        )
+    rows = corpus.orderBy(id_col).limit(sample).select(vec_col).collect()
+    X = np.array([list(r[0]) for r in rows], dtype=np.float64)
+    dim = X.shape[1]
+    if m is not None and dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    rng = np.random.default_rng(seed)
+    C = None if n_cells is None else _kmeans_fit(X, n_cells, iters, rng)
+    centroids = None if C is None else C.tolist()
+    if m is None:
+        return centroids, None
+    if C is not None:  # residuals — what IVF-PQ codes
+        nearest = np.argmin(((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), axis=1)
+        X = X - C[nearest]
+    dsub = dim // m
+    return centroids, [
+        _kmeans_fit(X[:, j * dsub : (j + 1) * dsub], n_codes, iters, rng).tolist()
+        for j in range(m)
+    ]
+
+
 def ivf_centroids(
     corpus: DataFrame,
     n_cells: int = 16,
@@ -272,22 +321,11 @@ def ivf_centroids(
     iters: int = 8,
     seed: int = 42,
 ) -> list[list[float]]:
-    """Fit the IVF coarse quantizer: k-means centroids on a deterministic
-    corpus sample (first ``sample`` rows by id — reproducible, unlike
-    rand-sampling). Fitting is driver-side numpy on n_cells × dim floats —
-    the standard IVF shape: the quantizer is tiny even when the corpus is
-    100 TB; only assignment is distributed. ``sample`` is hard-capped so
-    the driver-side collect can never silently become a corpus download."""
-    if sample > 100_000:
-        raise ValueError(
-            f"ivf_centroids sample={sample} exceeds the 100k driver-side cap; "
-            "the coarse quantizer does not improve with more — train on a "
-            "bounded sample"
-        )
-    rows = corpus.orderBy(id_col).limit(sample).select(vec_col).collect()
-    X = np.array([list(r[0]) for r in rows], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    return _kmeans_fit(X, n_cells, iters, rng).tolist()
+    """Fit the IVF coarse quantizer: k-means centroids on a capped,
+    deterministic corpus sample (:func:`_train_models`)."""
+    return _train_models(
+        corpus, n_cells, None, 0, id_col, vec_col, sample, iters, seed
+    )[0]
 
 
 def _kmeans_fit(X: "np.ndarray", k: int, iters: int, rng) -> "np.ndarray":
@@ -319,8 +357,8 @@ def _cell_ranking_udf(centroids: list[list[float]]):
     argsorts per row: at N corpus rows numpy's matmul throughput beats
     any per-row Catalyst fold. The centroid matrix travels in the task
     closure (n_cells × dim floats). Ties are broken by cell id (stable
-    argsort on (d2, cell)). Only corpus-side coding (build, append,
-    ``_ivfpq_code``, ``ivf_topk``'s corpus) runs this in Python workers;
+    argsort on (d2, cell)). Only corpus-side coding (:func:`_code`: build,
+    append, ``ivf_topk``'s corpus) runs this in Python workers;
     query-side probe ranking is the JVM :func:`_probe_cells`.
     """
     C = np.asarray(centroids, dtype=np.float64)
@@ -477,16 +515,10 @@ def ivf_topk(
     """
     if centroids is None:
         centroids = ivf_centroids(corpus, n_cells=n_cells, id_col=id_col, vec_col=vec_col)
-    ranking = _cell_ranking_udf(centroids)
-    c_cells = corpus.select(
-        id_col, vec_col, F.element_at(ranking(vec_col), 1).alias("cell")
+    return _serve(
+        _code(corpus, centroids, None, id_col, vec_col), centroids, None,
+        queries, k, n_probe, 0, id_col, vec_col, query_id_col,
     )
-    q_probes = _probe_cells(
-        _query_side(queries, id_col, vec_col, query_id_col),
-        _model_table(corpus.sparkSession, centroids),
-        n_probe,
-    )
-    return _ivf_rerank(c_cells, q_probes, k, id_col, vec_col, query_id_col)
 
 
 def _ivf_rerank(
@@ -534,26 +566,13 @@ def pq_codebooks(
     iters: int = 8,
     seed: int = 42,
 ) -> list[list[list[float]]]:
-    """Train per-subspace PQ codebooks on a deterministic, hard-capped
-    corpus sample (same driver-side discipline as :func:`ivf_centroids`).
-    Returns m codebooks of n_codes × (dim/m) floats; requires dim % m == 0.
+    """Train per-subspace PQ codebooks on a capped, deterministic corpus
+    sample (:func:`_train_models`). Returns m codebooks of n_codes ×
+    (dim/m) floats; requires dim % m == 0.
     """
-    if sample > 100_000:
-        raise ValueError(
-            f"pq_codebooks sample={sample} exceeds the 100k driver-side cap; "
-            "codebooks do not improve with more — train on a bounded sample"
-        )
-    rows = corpus.orderBy(id_col).limit(sample).select(vec_col).collect()
-    X = np.array([list(r[0]) for r in rows], dtype=np.float64)
-    dim = X.shape[1]
-    if dim % m:
-        raise ValueError(f"pq_codebooks: dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    rng = np.random.default_rng(seed)
-    return [
-        _kmeans_fit(X[:, j * dsub : (j + 1) * dsub], n_codes, iters, rng).tolist()
-        for j in range(m)
-    ]
+    return _train_models(
+        corpus, None, m, n_codes, id_col, vec_col, sample, iters, seed
+    )[1]
 
 
 def _pq_encode_udf(codebooks: list[list[list[float]]]):
@@ -591,18 +610,139 @@ def pq_encode(
     return corpus.select(id_col, encode(vec_col).alias("pq_codes"))
 
 
+def pq_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    m: int = 8,
+    n_codes: int = 16,
+    rerank_factor: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    codebooks: list[list[list[float]]] | None = None,
+) -> DataFrame:
+    """Approximate top-k via PQ: encode the corpus to m-byte codes, score
+    queries against reconstructions (= ADC), keep ``k·rerank_factor``
+    candidates per query, then rerank exactly on the true vectors of just
+    those candidates. Output matches the exact searcher's shape:
+    (query_id, neighbor_id, cosine, rank) with exact cosines.
+    """
+    if codebooks is None:
+        codebooks = pq_codebooks(
+            corpus, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col
+        )
+    return _serve(
+        _code(corpus, None, codebooks, id_col, vec_col), None, codebooks,
+        queries, k, 0, rerank_factor, id_col, vec_col, query_id_col,
+    )
+
+
 # ---------------------------------------------------------------------------
-# Persisted ANN indexes (build once / serve many): at 100 TB retraining a
+# Composite IVF-PQ (Jégou et al. 2011 §V, the FAISS ``IVFPQ`` shape): the
+# coarse quantizer routes each vector to a cell, and PQ codes the RESIDUAL
+# vector − centroid[cell] (residuals concentrate near zero, so the same
+# code budget quantizes them much more finely than raw vectors). At 100 TB
+# this is THE serving geometry: candidate generation reads ONLY the probed
+# cells' code columns — n_probe/n_cells of the corpus at m bytes/vector —
+# and the true embeddings are touched for just the k·rerank_factor
+# finalists per query. Without codebooks it is IVF (probed cells reranked
+# exactly); without centroids it is PQ (raw vectors coded). One coder and
+# one serve tail cover all three shapes, branching on which models exist.
+# ---------------------------------------------------------------------------
+
+
+def _code(
+    corpus: DataFrame,
+    centroids: list[list[float]] | None,
+    codebooks: list[list[list[float]]] | None,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Distributed coding pass: ``(vec_id, embedding)`` plus ``cell``
+    (nearest centroid) iff there are centroids and ``pq_codes`` iff there
+    are codebooks — of the residual to ``_cents[cell]`` when both exist.
+    The residual is a JVM ``zip_with`` against the broadcast
+    :func:`_model_table`; only the ranking and the encoder are
+    Arrow-batched UDFs."""
+    coded = corpus.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+    )
+    if centroids is not None:
+        ranking = _cell_ranking_udf(centroids)
+        coded = coded.withColumn("cell", F.element_at(ranking("embedding"), 1))
+    if codebooks is None:
+        return coded
+    encode = _pq_encode_udf(codebooks)
+    if centroids is None:
+        return coded.withColumn("pq_codes", encode("embedding"))
+    resid = F.expr("zip_with(embedding, _cents[cell], (x, y) -> CAST(x AS DOUBLE) - y)")
+    return coded.crossJoin(
+        F.broadcast(_model_table(corpus.sparkSession, centroids))
+    ).select("vec_id", "embedding", "cell", encode(resid).alias("pq_codes"))
+
+
+def _serve(
+    coded: DataFrame,
+    centroids: list[list[float]] | None,
+    codebooks: list[list[list[float]]] | None,
+    queries: DataFrame,
+    k: int,
+    n_probe: int,
+    rerank_factor: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Serve tail over a :func:`_code`-shaped table. The models ride one
+    broadcast row (:func:`_model_table`) and queries rank their
+    ``n_probe`` cells against it in the JVM (:func:`_probe_cells`), so no
+    Python worker runs here.
+
+    - Centroids only (IVF): exact rerank of the probed cells' vectors.
+    - Codebooks: each coded row is reconstructed ONCE (plus
+      ``centroid[cell]`` for IVF-PQ) with its squared norm, ADC-scored
+      and the ``k·rerank_factor`` finalists reranked exactly
+      (:func:`_adc_rerank`). With centroids only the probed cells' rows
+      are read — ``(vec_id, cell, pq_codes)``, never the embedding — via
+      a left-semi join, spread first when the coded table is smaller
+      than the session's parallelism (``spread_small_input``) so the pair
+      scoring runs on every core."""
+    from airflow_postgres_csv_spark.operators.localframe import spread_small_input
+
+    model = _model_table(coded.sparkSession, centroids, codebooks)
+    q = _query_side(queries, id_col, vec_col, query_id_col)
+    q_probes = None if centroids is None else _probe_cells(q, model, n_probe)
+    if codebooks is None:
+        return _ivf_rerank(coded, q_probes, k, "vec_id", "embedding", query_id_col)
+    if q_probes is None:
+        rows = coded.select("vec_id", "pq_codes")
+    else:
+        rows = spread_small_input(
+            coded.select("vec_id", "cell", "pq_codes")  # embeddings pruned
+        ).join(F.broadcast(q_probes.select("cell")), "cell", "left_semi")
+    return _adc_rerank(
+        _pq_reconstruct(rows, model, "vec_id"),
+        q,
+        coded.select(
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_nvec")
+        ),
+        k, rerank_factor, "vec_id", query_id_col, q_probes,
+    )
+
+
+# ---------------------------------------------------------------------------
+# Persisted ANN index (build once / serve many): at 100 TB retraining a
 # quantizer and re-assigning every vector PER QUERY is the dominant cost —
 # the serving shape is an index TABLE built once and scanned by every
-# search. The coded corpus (cell assignments / PQ codes) is committed as a
-# versioned snapshot table (operators/snapshots.py) and the tiny model
-# (centroids / codebooks — k·d floats) rides the commit's manifest
+# search. The coded corpus (cell assignments and/or PQ codes) is committed
+# as a versioned snapshot table (operators/snapshots.py) and the tiny
+# models (centroids / codebooks — k·d floats) ride the commit's manifest
 # metadata, so index generations are atomic, time-travelable, and a search
-# runs ZERO training jobs: one manifest read recovers the model, the coded
-# table is scanned with the snapshot reader (cell-clustered commits give
-# commit-level pruning on the cell column for free). A RECALL PROBE SET
-# can be pinned at build time (probe_queries=N): N corpus vectors plus
+# runs ZERO training jobs: one manifest read recovers the models, the
+# coded table is scanned with the snapshot reader (cell-clustered commits
+# give commit-level pruning on the cell column for free). A RECALL PROBE
+# SET can be pinned at build time (probe_queries=N): N corpus vectors plus
 # their exact top-k, stored in the manifest, let ann_derive_settings
 # auto-tune n_probe / rerank_factor for a requested recall floor with
 # zero training jobs and zero corpus-wide exact scans at derive time.
@@ -651,24 +791,20 @@ def _build_probe_set(
     }
 
 
-def _probe_exact_ids(entry: dict, k: int) -> list:
-    """First-k neighbor ids of a probe entry's exact list; tolerates the
-    legacy id-only shape alongside the [[id, cosine], ...] shape."""
-    out = []
-    for e in entry["exact"][:k]:
-        out.append(int(e[0]) if isinstance(e, (list, tuple)) else int(e))
-    return out
-
-
-def _probe_entry_pairs(entry: dict) -> list | None:
-    """Exact list as [(id, cosine), ...], or None for a legacy id-only
-    list (no cosines — unmergeable, caller must recompute)."""
-    pairs = []
-    for e in entry["exact"]:
-        if not isinstance(e, (list, tuple)):
-            return None
-        pairs.append((int(e[0]), float(e[1])))
-    return pairs
+def _probe_set(meta: dict, index_root: str) -> dict | None:
+    """The index's pinned probe set, or None when it has none. Its exact
+    lists must be ``[id, cosine]`` pairs: an id-only list carries no
+    cosines to merge or prune by, so it is refused rather than guessed."""
+    ps = meta.get("probe_set")
+    if ps and not all(
+        isinstance(e, (list, tuple)) and len(e) == 2
+        for q in ps["queries"] for e in q["exact"]
+    ):
+        raise ValueError(
+            f"{index_root}: the probe set stores id-only exact lists; "
+            "rebuild the index with probe_queries=N"
+        )
+    return ps or None
 
 
 def _exact_pairs_by_query(
@@ -698,36 +834,26 @@ def _probes_df(spark: SparkSession, entries: list) -> DataFrame:
 
 
 def _probe_set_after_delete(
-    spark: SparkSession, index_root: str, meta: dict, deleted_ids: set
-) -> dict | None:
-    """The probe set repaired for the POST-delete corpus, or None when
-    the index has none. Metadata-only in the common case: deleting a
-    vector that is in no stored exact list cannot change any list
-    (deletion only removes candidates), and pruning a deleted member
-    from an exact prefix leaves an exact (shorter) prefix. Only queries
-    whose pruned list fell below k are recomputed, against the
-    anti-joined head state, in ONE probe-sized brute-force pass."""
+    spark: SparkSession, index_root: str, ps: dict, deleted_ids: set
+) -> dict:
+    """The probe set ``ps`` repaired for the POST-delete corpus.
+    Metadata-only in the common case: deleting a vector that is in no
+    stored exact list cannot change any list (deletion only removes
+    candidates), and pruning a deleted member from an exact prefix
+    leaves an exact (shorter) prefix. Only queries whose pruned list
+    fell below k are recomputed, against the anti-joined head state, in
+    ONE probe-sized brute-force pass."""
     from airflow_postgres_csv_spark.operators.snapshots import snapshot_read
 
-    ps = meta.get("probe_set")
-    if not ps:
-        return None
     k = int(ps["k"])
     depth = int(ps.get("depth", k))
     entries = [dict(q) for q in ps["queries"]]
     depleted = []
     for q in entries:
-        pairs = _probe_entry_pairs(q)
-        if pairs is None:
-            # legacy id-only list: prune what we can; recompute if it dips
-            kept = [e for e in q["exact"] if int(e) not in deleted_ids]
-            q["exact"] = kept
-            if len(kept) < k:
-                depleted.append(q)
-            continue
-        kept = [p for p in pairs if p[0] not in deleted_ids]
-        q["exact"] = [[n, c] for n, c in kept]
-        if len(kept) < k:
+        q["exact"] = [
+            [int(n), float(c)] for n, c in q["exact"] if int(n) not in deleted_ids
+        ]
+        if len(q["exact"]) < k:
             depleted.append(q)
     if depleted:
         post = snapshot_read(spark, index_root).select("vec_id", "embedding")
@@ -739,53 +865,24 @@ def _probe_set_after_delete(
 
 
 def _probe_set_after_append(
-    corpus_new: DataFrame,
-    meta: dict,
-    id_col: str,
-    vec_col: str,
-    index_root: str | None = None,
-) -> dict | None:
-    """The probe set extended for the appended batch, or None when the
-    index has none. O(batch): the probe queries' exact top-depth WITHIN
-    the batch is computed (batch-sized scan), then merged driver-side
-    with the stored lists by cosine. The merged prefix stays exact up to
-    min(stored length, batch coverage) — any union-corpus top-m member
-    is in the stored top-m or the batch top-m for m ≤ both.
-
-    A legacy id-only probe set (no stored cosines — unmergeable) is
-    upgraded in place: one brute-force pass over head state + batch
-    recomputes every list at depth (the cost the build already paid
-    once; appends after that are O(batch) again)."""
-    ps = meta.get("probe_set")
-    if not ps:
-        return None
+    corpus_new: DataFrame, ps: dict, id_col: str, vec_col: str
+) -> dict:
+    """The probe set ``ps`` extended for the appended batch. O(batch):
+    the probe queries' exact top-depth WITHIN the batch is computed
+    (batch-sized scan), then merged driver-side with the stored lists by
+    cosine. The merged prefix stays exact up to min(stored length, batch
+    coverage) — any union-corpus top-m member is in the stored top-m or
+    the batch top-m for m ≤ both."""
     spark = corpus_new.sparkSession
     k = int(ps["k"])
     depth = int(ps.get("depth", 2 * k))
     entries = [dict(q) for q in ps["queries"]]
-    legacy = [q for q in entries if _probe_entry_pairs(q) is None]
     batch = corpus_new.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     )
-    if legacy:
-        from airflow_postgres_csv_spark.operators.snapshots import (
-            snapshot_read,
-        )
-
-        full = (
-            snapshot_read(spark, index_root)
-            .select("vec_id", "embedding")
-            .unionByName(batch)
-            if index_root is not None
-            else batch
-        )
-        fresh = _exact_pairs_by_query(full, _probes_df(spark, entries), depth)
-        for q in entries:
-            q["exact"] = [[n, c] for n, c in fresh.get(q["id"], [])]
-        return {"k": k, "depth": depth, "queries": entries}
     batch_top = _exact_pairs_by_query(batch, _probes_df(spark, entries), depth)
     for q in entries:
-        old = _probe_entry_pairs(q)
+        old = [(int(n), float(c)) for n, c in q["exact"]]
         new = batch_top.get(q["id"], [])
         merged = sorted(set(old) | set(new), key=lambda p: (-p[1], p[0]))
         # exact-prefix length = len(old): a union-corpus top-m member is
@@ -793,6 +890,199 @@ def _probe_set_after_append(
         # (guaranteed — the batch list is depth-deep, and depth >= len(old))
         q["exact"] = [[n, c] for n, c in merged[: len(old)]]
     return {"k": k, "depth": depth, "queries": entries}
+
+
+def _index_head(index_root: str, version: int | None = None) -> tuple[int, dict]:
+    """(version, ``ann_index`` metadata) of the addressed index
+    generation — the head when ``version`` is None. One manifest read;
+    raises ``FileNotFoundError`` when nothing was built at the root and
+    ``ValueError`` when the manifest carries no ANN index."""
+    from airflow_postgres_csv_spark.operators.snapshots import (
+        _load_manifest,
+        snapshot_versions,
+    )
+
+    if version is None:
+        versions = snapshot_versions(index_root)
+        if not versions:
+            raise FileNotFoundError(f"no index at {index_root}; build first")
+        version = versions[-1]
+    meta = _load_manifest(index_root, version).get("ann_index")
+    if not meta:
+        raise ValueError(f"{index_root} v{version} is not a persisted ANN index")
+    return version, meta
+
+
+def _cell_layout(meta: dict) -> list[str] | None:
+    """Commits of an index with centroids are range-clustered on ``cell``."""
+    return ["cell"] if "centroids" in meta else None
+
+
+def ivfpq_build_index(
+    corpus: DataFrame,
+    index_root: str,
+    n_cells: int | None = 16,
+    m: int | None = 8,
+    n_codes: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    sample: int = 512,
+    iters: int = 8,
+    seed: int = 42,
+    probe_queries: int = 0,
+    probe_k: int = 5,
+) -> dict:
+    """Build and PERSIST an ANN index: one training pass (driver-side on
+    a capped sample, :func:`_train_models`), one distributed coding pass
+    (:func:`_code`), one snapshot commit of ``(vec_id, embedding[, cell]
+    [, pq_codes])`` with the models in the manifest's ``ann_index`` key
+    inside the same atomic publish, so a reader can never see a coded
+    corpus without the exact models that coded it. Rebuilds are new
+    versions: searches pinned to an old version stay consistent, and the
+    superseded generation expires with ``snapshot_expire``.
+
+    ``n_cells=None`` drops the coarse quantizer (a PQ index over raw
+    vectors); ``m=None`` drops the codes (an IVF index whose probed
+    cells are reranked exactly). The manifest records the shape as
+    ``kind`` ``"ivf"``, ``"pq"`` or ``"ivfpq"``. With centroids the
+    commit is range-clustered on ``cell``, so probed cells prune at the
+    COMMIT level before any sidecar read."""
+    from airflow_postgres_csv_spark.operators.snapshots import snapshot_commit
+
+    centroids, codebooks = _train_models(
+        corpus, n_cells, m, n_codes, id_col, vec_col, sample, iters, seed
+    )
+    kind = "ivf" if codebooks is None else "pq" if centroids is None else "ivfpq"
+    models = {"centroids": centroids, "codebooks": codebooks}
+    meta = {
+        "kind": kind,
+        **({} if centroids is None else {"n_cells": n_cells}),
+        **({} if codebooks is None else {"m": m, "n_codes": n_codes}),
+        "seed": seed,
+        **{key: v for key, v in models.items() if v is not None},
+    }
+    if probe_queries:
+        meta["probe_set"] = _build_probe_set(
+            corpus, id_col, vec_col, probe_queries, probe_k
+        )
+    return snapshot_commit(
+        _code(corpus, centroids, codebooks, id_col, vec_col),
+        index_root, mode="overwrite", partition_by=_cell_layout(meta),
+        extra={"ann_index": meta},
+    )
+
+
+def ivfpq_index_append(
+    corpus_new: DataFrame,
+    index_root: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    extra: dict | None = None,
+) -> dict:
+    """Incrementally extend a persisted ANN index of any shape: code the
+    NEW vectors with the FROZEN models (no retraining — the models are
+    frozen per index generation) and append their coded rows as one
+    commit pinned to the head whose models it used (``expected_head``: a
+    concurrent rebuild conflicts instead of mixing generations). The
+    ingest path of a streaming embedding pipeline: O(batch) work per
+    append, and searches see old + new vectors through the same serve
+    path. ``extra`` (a streaming batch stamp) rides the same publish."""
+    from airflow_postgres_csv_spark.operators.snapshots import snapshot_commit
+
+    v, meta = _index_head(index_root)
+    coded = _code(
+        corpus_new, meta.get("centroids"), meta.get("codebooks"), id_col, vec_col
+    )
+    ps = _probe_set(meta, index_root)
+    if ps:
+        meta = {
+            **meta,
+            "probe_set": _probe_set_after_append(corpus_new, ps, id_col, vec_col),
+        }
+    return snapshot_commit(
+        coded, index_root, mode="append", partition_by=_cell_layout(meta),
+        extra={**(extra or {}), "ann_index": meta},
+        expected_head=v,
+    )
+
+
+def ivfpq_search_index(
+    spark: SparkSession,
+    index_root: str,
+    queries: DataFrame,
+    k: int = 5,
+    n_probe: int = 4,
+    rerank_factor: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    version: int | None = None,
+) -> DataFrame:
+    """Search a persisted ANN index: models from the pinned manifest (one
+    JSON read — NO training job, no Python worker, the corpus-side coder
+    never runs), served by :func:`_serve` against the STORED coding.
+    ``n_probe`` applies when the index has centroids, ``rerank_factor``
+    when it has codebooks. For IVF-PQ, candidate generation scans ONLY
+    (vec_id, cell, pq_codes) of the probed cells (column pruning ×
+    commit-level cell pruning), ADC scores against centroid + decoded
+    residual, and the exact rerank touches true vectors for the
+    ``k·rerank_factor`` finalists. Same output contract as the in-memory
+    searchers (:func:`ivf_topk`, :func:`pq_topk`)."""
+    from airflow_postgres_csv_spark.operators.snapshots import snapshot_read
+
+    v, meta = _index_head(index_root, version)
+    return _serve(
+        snapshot_read(spark, index_root, version=v),
+        meta.get("centroids"), meta.get("codebooks"), queries,
+        k, n_probe, rerank_factor, id_col, vec_col, query_id_col,
+    )
+
+
+def ann_index_delete(
+    spark: SparkSession, index_root: str, vec_ids: list
+) -> dict:
+    """Remove vectors from a persisted ANN index WITHOUT rewriting the
+    coded corpus or touching the frozen models — the mirror of
+    ``text_index_delete`` for ANN indexes (a dedup pass that evicts
+    corpus docs must be able to evict their vectors without a rebuild,
+    or stale neighbors serve forever).
+
+    One merge-on-read equality tombstone on ``vec_id``, published
+    atomically with the UNCHANGED ``ann_index`` model metadata carried
+    forward (centroids/codebooks are frozen per generation — deletion
+    never retrains; ANN has no corpus-level stats to decrement, unlike
+    BM25's n_docs/avgdl). ``ivfpq_search_index`` reads the coded table
+    through ``snapshot_read``, which applies the tombstone as a
+    broadcast anti-join — deleted vectors leave candidate generation AND
+    the exact rerank in the same version step, and a search pinned to
+    the pre-delete version still sees them (MVCC). ``snapshot_compact``
+    folds the tombstone into a clean rewrite later. Cost: one scan to
+    resolve the condition, O(deleted keys) bytes, zero data files
+    rewritten.
+
+    The pinned recall probe set is repaired in the SAME commit (deleted
+    vectors pruned from the stored exact lists; a list that fell below k
+    is recomputed against the post-delete state), so a later
+    ``ann_derive_settings`` tunes against the live corpus, never a
+    drifted reference."""
+    from airflow_postgres_csv_spark.operators.snapshots import snapshot_delete_mor
+
+    _, meta = _index_head(index_root)
+    ids = sorted(set(vec_ids))
+    if not ids or not all(isinstance(i, int) for i in ids):
+        raise ValueError("ann_index_delete: vec_ids must be non-empty ints")
+    ps = _probe_set(meta, index_root)
+    if ps:
+        meta = {
+            **meta,
+            "probe_set": _probe_set_after_delete(spark, index_root, ps, set(ids)),
+        }
+    id_list = ", ".join(str(i) for i in ids)
+    return snapshot_delete_mor(
+        spark, index_root,
+        condition=f"vec_id IN ({id_list})", key_col="vec_id",
+        extra={"ann_index": meta},
+    )
 
 
 def ann_derive_settings(
@@ -805,43 +1095,34 @@ def ann_derive_settings(
     floor — today callers guess ``n_probe``/``rerank_factor``; this
     answers it from the index's pinned probe set.
 
-    Walks the knob up a doubling ladder (``n_probe`` for ivf/ivfpq,
-    ``rerank_factor`` for pq), replaying the manifest's probe queries
-    through the NORMAL serve path at each step and measuring recall
-    against the stored exact top-k, stopping at the first setting that
-    meets the floor. Cost: a handful of probe-sized index searches —
-    ZERO training jobs (the quantizer stays frozen; pinned by a
-    monkeypatch bomb in tests/test_dedup_similarity.py) and zero exact
-    corpus scans (the exact sets were pinned at build). Returns
-    ``{"kind", "knob", "<knob>", "recall", "met", "evaluated"}``;
+    Walks the knob up a doubling ladder (``n_probe`` when the index has
+    centroids, ``rerank_factor`` otherwise), replaying the manifest's
+    probe queries through the NORMAL serve path at each step and
+    measuring recall against the stored exact top-k, stopping at the
+    first setting that meets the floor. Cost: a handful of probe-sized
+    index searches — ZERO training jobs (the quantizer stays frozen;
+    pinned by a monkeypatch bomb in tests/test_dedup_similarity.py) and
+    zero exact corpus scans (the exact sets were pinned at build).
+    Returns ``{"kind", "knob", "<knob>", "recall", "met", "evaluated"}``;
     ``met=False`` means even the max setting missed the floor (the
     honest answer — raise k, rebuild with more cells, or lower the
     floor). FAISS analog: ``ParameterSpace`` auto-tuning, re-expressed
     over the persisted-index serve path."""
-    from airflow_postgres_csv_spark.operators.snapshots import (
-        _load_manifest,
-        snapshot_versions,
-    )
-
-    v = version if version is not None else snapshot_versions(index_root)[-1]
-    meta = _load_manifest(index_root, v).get("ann_index") or {}
-    ps = meta.get("probe_set")
+    v, meta = _index_head(index_root, version)
+    ps = _probe_set(meta, index_root)
     if not ps:
         raise ValueError(
             f"{index_root} has no probe set — rebuild with probe_queries=N"
         )
+    k = int(ps["k"])
     probes = _probes_df(spark, ps["queries"])
-    exact = {
-        q["id"]: set(_probe_exact_ids(q, int(ps["k"]))) for q in ps["queries"]
-    }
+    exact = {q["id"]: {int(n) for n, _ in q["exact"][:k]} for q in ps["queries"]}
     total = sum(len(s) for s in exact.values())
     kind = meta.get("kind")
-    if kind in ("ivf", "ivfpq"):
+    if "centroids" in meta:
         knob, cap = "n_probe", int(meta["n_cells"])
-    elif kind == "pq":
-        knob, cap = "rerank_factor", 16
     else:
-        raise ValueError(f"unknown index kind {kind!r}")
+        knob, cap = "rerank_factor", 16
     ladder = []
     val = 1
     while val < cap:
@@ -850,19 +1131,9 @@ def ann_derive_settings(
     ladder.append(cap)
     evaluated = []
     for val in ladder:
-        if kind == "ivf":
-            ann = ivf_search_index(
-                spark, index_root, probes, k=ps["k"], n_probe=val, version=v
-            )
-        elif kind == "ivfpq":
-            ann = ivfpq_search_index(
-                spark, index_root, probes, k=ps["k"], n_probe=val, version=v
-            )
-        else:
-            ann = pq_search_index(
-                spark, index_root, probes, k=ps["k"], rerank_factor=val,
-                version=v,
-            )
+        ann = ivfpq_search_index(
+            spark, index_root, probes, k=ps["k"], version=v, **{knob: val}
+        )
         hits = sum(
             1
             for r in ann.select("query_id", "neighbor_id").collect()
@@ -880,558 +1151,3 @@ def ann_derive_settings(
         "recall": evaluated[-1]["recall"], "floor": recall_floor,
         "met": False, "evaluated": evaluated,
     }
-
-
-def ivf_build_index(
-    corpus: DataFrame,
-    index_root: str,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample: int = 512,
-    iters: int = 8,
-    seed: int = 42,
-    probe_queries: int = 0,
-    probe_k: int = 5,
-) -> dict:
-    """Build and PERSIST an IVF index: train the coarse quantizer once,
-    assign every corpus vector its nearest cell (one distributed pass),
-    and commit ``(id, vec, cell)`` as a snapshot table range-clustered on
-    ``cell`` — every later search reads the assignment instead of
-    recomputing it. The centroid matrix (n_cells × dim floats,
-    metadata-sized at any corpus scale) rides the manifest's ``ann_index``
-    key inside the same atomic publish, so a reader can never see a coded
-    corpus without the exact model that coded it. Rebuilds are new
-    versions: searches pinned to an old version stay consistent, and the
-    superseded generation expires with ``snapshot_expire``."""
-    from airflow_postgres_csv_spark.operators.snapshots import snapshot_commit
-
-    centroids = ivf_centroids(
-        corpus, n_cells=n_cells, id_col=id_col, vec_col=vec_col,
-        sample=sample, iters=iters, seed=seed,
-    )
-    ranking = _cell_ranking_udf(centroids)
-    coded = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        F.element_at(ranking(vec_col), 1).alias("cell"),
-    )
-    ann_meta = {
-        "kind": "ivf", "n_cells": n_cells, "seed": seed,
-        "centroids": centroids,
-    }
-    if probe_queries:
-        ann_meta["probe_set"] = _build_probe_set(
-            corpus, id_col, vec_col, probe_queries, probe_k
-        )
-    return snapshot_commit(
-        coded, index_root, mode="overwrite", partition_by=["cell"],
-        extra={"ann_index": ann_meta},
-    )
-
-
-def ivf_index_append(
-    corpus_new: DataFrame,
-    index_root: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    extra: dict | None = None,
-) -> dict:
-    """Incrementally extend a persisted IVF index: assign the NEW vectors
-    to the EXISTING centroids (no retraining — the quantizer is frozen
-    per index generation, the IVF contract) and append their coded rows
-    as one commit pinned to the head whose model it used
-    (``expected_head``: a concurrent rebuild conflicts instead of mixing
-    generations). The ingest path of a streaming embedding pipeline:
-    O(batch) work per append, searches see old + new vectors through the
-    same cell-probed join."""
-    from airflow_postgres_csv_spark.operators.snapshots import (
-        _load_manifest,
-        snapshot_commit,
-        snapshot_versions,
-    )
-
-    versions = snapshot_versions(index_root)
-    if not versions:
-        raise FileNotFoundError(f"no index at {index_root}; build first")
-    meta = _load_manifest(index_root, versions[-1]).get("ann_index") or {}
-    if meta.get("kind") != "ivf":
-        raise ValueError(f"{index_root} is not an IVF index")
-    ranking = _cell_ranking_udf(meta["centroids"])
-    coded = corpus_new.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        F.element_at(ranking(vec_col), 1).alias("cell"),
-    )
-    merged_ps = _probe_set_after_append(
-        corpus_new, meta, id_col, vec_col, index_root=index_root
-    )
-    if merged_ps is not None:
-        meta = {**meta, "probe_set": merged_ps}
-    return snapshot_commit(
-        coded, index_root, mode="append", partition_by=["cell"],
-        # caller stamps (streaming batch id) ride the same atomic publish
-        extra={**(extra or {}), "ann_index": meta},
-        expected_head=versions[-1],
-    )
-
-
-def _pinned_index(
-    spark: SparkSession, index_root: str, version: int | None, kind: str, label: str
-) -> tuple[dict, DataFrame]:
-    """(model metadata, coded table) of the pinned index generation — one
-    manifest read; raises unless it is a ``kind`` index."""
-    from airflow_postgres_csv_spark.operators.snapshots import (
-        _load_manifest,
-        snapshot_read,
-        snapshot_versions,
-    )
-
-    v = version if version is not None else snapshot_versions(index_root)[-1]
-    meta = _load_manifest(index_root, v).get("ann_index") or {}
-    if meta.get("kind") != kind:
-        raise ValueError(
-            f"{index_root} v{v} is not {label} index (ann_index={meta.get('kind')!r})"
-        )
-    return meta, snapshot_read(spark, index_root, version=v)
-
-
-def ivf_search_index(
-    spark: SparkSession,
-    index_root: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    version: int | None = None,
-) -> DataFrame:
-    """Search a persisted IVF index: the centroids come from the pinned
-    manifest (one JSON read — NO training job, no Python worker), the
-    query side ranks its ``n_probe`` cells in the JVM
-    (:func:`_probe_cells`), and the probed-cell equi-join + exact rerank
-    run against the stored assignment. Same output contract as
-    :func:`ivf_topk`."""
-    meta, coded = _pinned_index(spark, index_root, version, "ivf", "an IVF")
-    q_probes = _probe_cells(
-        _query_side(queries, id_col, vec_col, query_id_col),
-        _model_table(spark, meta["centroids"]),
-        n_probe,
-    )
-    return _ivf_rerank(coded, q_probes, k, "vec_id", "embedding", query_id_col)
-
-
-def pq_build_index(
-    corpus: DataFrame,
-    index_root: str,
-    m: int = 8,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample: int = 512,
-    iters: int = 8,
-    seed: int = 42,
-    probe_queries: int = 0,
-    probe_k: int = 5,
-) -> dict:
-    """Build and PERSIST a PQ index: train the per-subspace codebooks
-    once, encode every vector to its m codes (one distributed pass), and
-    commit ``(id, vec, pq_codes)`` as a snapshot table with the codebooks
-    (m·n_codes·dsub floats) in the manifest's ``ann_index`` key.
-    Candidate generation scans only the codes column (column pruning —
-    the 32×-smaller read that is PQ's point); the true vectors stay in
-    the same table for the exact rerank join."""
-    from airflow_postgres_csv_spark.operators.snapshots import snapshot_commit
-
-    codebooks = pq_codebooks(
-        corpus, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col,
-        sample=sample, iters=iters, seed=seed,
-    )
-    encode = _pq_encode_udf(codebooks)
-    coded = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        encode(vec_col).alias("pq_codes"),
-    )
-    ann_meta = {
-        "kind": "pq", "m": m, "n_codes": n_codes, "seed": seed,
-        "codebooks": codebooks,
-    }
-    if probe_queries:
-        ann_meta["probe_set"] = _build_probe_set(
-            corpus, id_col, vec_col, probe_queries, probe_k
-        )
-    return snapshot_commit(
-        coded, index_root, mode="overwrite",
-        extra={"ann_index": ann_meta},
-    )
-
-
-def pq_index_append(
-    corpus_new: DataFrame,
-    index_root: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Incrementally extend a persisted PQ index: encode the NEW vectors
-    with the EXISTING codebooks (frozen per generation, like
-    ``ivf_index_append``) and append their coded rows, pinned to the head
-    whose model they used."""
-    from airflow_postgres_csv_spark.operators.snapshots import (
-        _load_manifest,
-        snapshot_commit,
-        snapshot_versions,
-    )
-
-    versions = snapshot_versions(index_root)
-    if not versions:
-        raise FileNotFoundError(f"no index at {index_root}; build first")
-    meta = _load_manifest(index_root, versions[-1]).get("ann_index") or {}
-    if meta.get("kind") != "pq":
-        raise ValueError(f"{index_root} is not a PQ index")
-    encode = _pq_encode_udf(meta["codebooks"])
-    coded = corpus_new.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        encode(vec_col).alias("pq_codes"),
-    )
-    merged_ps = _probe_set_after_append(
-        corpus_new, meta, id_col, vec_col, index_root=index_root
-    )
-    if merged_ps is not None:
-        meta = {**meta, "probe_set": merged_ps}
-    return snapshot_commit(
-        coded, index_root, mode="append",
-        extra={"ann_index": meta},
-        expected_head=versions[-1],
-    )
-
-
-def pq_search_index(
-    spark: SparkSession,
-    index_root: str,
-    queries: DataFrame,
-    k: int = 5,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    version: int | None = None,
-) -> DataFrame:
-    """Search a persisted PQ index: codebooks from the pinned manifest
-    (no training job), ADC scoring against the STORED codes (the
-    corpus-side encoder never runs), exact rerank on the candidates'
-    true vectors. Each coded row is reconstructed once, in the JVM,
-    against the broadcast codebooks (:func:`_model_table`) — no Python
-    worker runs. Same output contract as :func:`pq_topk`."""
-    meta, coded = _pinned_index(spark, index_root, version, "pq", "a PQ")
-    return _adc_rerank(
-        _pq_reconstruct(
-            coded.select("vec_id", "pq_codes"),
-            _model_table(spark, codebooks=meta["codebooks"]),
-            "vec_id",
-        ),
-        _query_side(queries, id_col, vec_col, query_id_col),
-        coded.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_nvec")),
-        k, rerank_factor, "vec_id", query_id_col,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Composite IVF-PQ (Jégou et al. 2011 §V, the FAISS ``IVFPQ`` shape): the
-# coarse quantizer routes each vector to a cell, and PQ codes the RESIDUAL
-# vector − centroid[cell] (residuals concentrate near zero, so the same
-# code budget quantizes them much more finely than raw vectors). At 100 TB
-# this is THE serving geometry: candidate generation reads ONLY the probed
-# cells' code columns — n_probe/n_cells of the corpus at m bytes/vector —
-# and the true embeddings are touched for just the k·rerank_factor
-# finalists per query.
-# ---------------------------------------------------------------------------
-
-
-def _ivfpq_train(
-    corpus: DataFrame,
-    n_cells: int,
-    m: int,
-    n_codes: int,
-    id_col: str,
-    vec_col: str,
-    sample: int,
-    iters: int,
-    seed: int,
-) -> tuple[list[list[float]], list[list[list[float]]]]:
-    """Train the coarse quantizer AND the residual codebooks from one
-    deterministic, hard-capped driver-side sample (the models are
-    metadata-sized at any corpus scale; only coding is distributed)."""
-    if sample > 100_000:
-        raise ValueError(
-            f"ivfpq sample={sample} exceeds the 100k driver-side cap; "
-            "quantizers do not improve with more — train on a bounded sample"
-        )
-    rows = corpus.orderBy(id_col).limit(sample).select(vec_col).collect()
-    X = np.array([list(r[0]) for r in rows], dtype=np.float64)
-    dim = X.shape[1]
-    if dim % m:
-        raise ValueError(f"ivfpq: dim {dim} not divisible by m={m}")
-    rng = np.random.default_rng(seed)
-    C = _kmeans_fit(X, n_cells, iters, rng)
-    assign = np.argmin(
-        ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), axis=1
-    )
-    R = X - C[assign]  # residuals — what PQ actually codes
-    dsub = dim // m
-    codebooks = [
-        _kmeans_fit(R[:, j * dsub : (j + 1) * dsub], n_codes, iters, rng).tolist()
-        for j in range(m)
-    ]
-    return C.tolist(), codebooks
-
-
-def _centroid_table(spark: SparkSession, centroids: list[list[float]]) -> DataFrame:
-    from airflow_postgres_csv_spark.operators.localframe import arrow_local_df
-
-    return arrow_local_df(
-        spark,
-        [(i, c) for i, c in enumerate(centroids)],
-        "cell int, _cent array<double>",
-    )
-
-
-def _ivfpq_code(
-    corpus: DataFrame, meta: dict, id_col: str, vec_col: str
-) -> DataFrame:
-    """Distributed coding pass: assign cell, PQ-encode the residual.
-    The centroid table broadcasts (n_cells rows); the residual is a JVM
-    ``zip_with`` and only the encoder itself is an Arrow-batched UDF."""
-    spark = corpus.sparkSession
-    ranking = _cell_ranking_udf(meta["centroids"])
-    encode = _pq_encode_udf(meta["codebooks"])
-    return (
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("embedding"),
-            F.element_at(ranking(vec_col), 1).alias("cell"),
-        )
-        .join(F.broadcast(_centroid_table(spark, meta["centroids"])), "cell")
-        .select(
-            "vec_id",
-            "embedding",
-            "cell",
-            encode(
-                F.zip_with(
-                    "embedding", "_cent", lambda x, y: x.cast("double") - y
-                )
-            ).alias("pq_codes"),
-        )
-    )
-
-
-def ivfpq_build_index(
-    corpus: DataFrame,
-    index_root: str,
-    n_cells: int = 16,
-    m: int = 8,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample: int = 512,
-    iters: int = 8,
-    seed: int = 42,
-    probe_queries: int = 0,
-    probe_k: int = 5,
-) -> dict:
-    """Build and PERSIST a composite IVF-PQ index: one training pass
-    (coarse centroids + residual codebooks, driver-side on a capped
-    sample), one distributed coding pass, one snapshot commit of
-    ``(vec_id, embedding, cell, pq_codes)`` partition-clustered on
-    ``cell`` (probed cells prune at the COMMIT level before any sidecar
-    read) with both models in the manifest's ``ann_index`` key."""
-    from airflow_postgres_csv_spark.operators.snapshots import snapshot_commit
-
-    centroids, codebooks = _ivfpq_train(
-        corpus, n_cells, m, n_codes, id_col, vec_col, sample, iters, seed
-    )
-    meta = {
-        "kind": "ivfpq", "n_cells": n_cells, "m": m, "n_codes": n_codes,
-        "seed": seed, "centroids": centroids, "codebooks": codebooks,
-    }
-    if probe_queries:
-        meta["probe_set"] = _build_probe_set(
-            corpus, id_col, vec_col, probe_queries, probe_k
-        )
-    return snapshot_commit(
-        _ivfpq_code(corpus, meta, id_col, vec_col),
-        index_root, mode="overwrite", partition_by=["cell"],
-        extra={"ann_index": meta},
-    )
-
-
-def ivfpq_index_append(
-    corpus_new: DataFrame,
-    index_root: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Incrementally extend a persisted IVF-PQ index: code the NEW
-    vectors with the FROZEN quantizer + codebooks (no retraining; the
-    append is pinned to the head whose models it used, so a concurrent
-    rebuild conflicts instead of mixing generations)."""
-    from airflow_postgres_csv_spark.operators.snapshots import (
-        _load_manifest,
-        snapshot_commit,
-        snapshot_versions,
-    )
-
-    versions = snapshot_versions(index_root)
-    if not versions:
-        raise FileNotFoundError(f"no index at {index_root}; build first")
-    meta = _load_manifest(index_root, versions[-1]).get("ann_index") or {}
-    if meta.get("kind") != "ivfpq":
-        raise ValueError(f"{index_root} is not an IVF-PQ index")
-    coded = _ivfpq_code(corpus_new, meta, id_col, vec_col)
-    merged_ps = _probe_set_after_append(
-        corpus_new, meta, id_col, vec_col, index_root=index_root
-    )
-    if merged_ps is not None:
-        meta = {**meta, "probe_set": merged_ps}
-    return snapshot_commit(
-        coded, index_root, mode="append",
-        extra={"ann_index": meta},
-        expected_head=versions[-1],
-    )
-
-
-def ivfpq_search_index(
-    spark: SparkSession,
-    index_root: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    version: int | None = None,
-) -> DataFrame:
-    """Search a persisted IVF-PQ index: models from the pinned manifest
-    (NO training job), queries rank their ``n_probe`` cells, candidate
-    generation is a cell equi-join scanning ONLY (vec_id, cell, pq_codes)
-    of the probed cells — the embedding column is never read for
-    candidates (column pruning × commit-level cell pruning is the whole
-    point) — ADC scores against centroid + decoded residual, and the
-    exact rerank touches true vectors for the ``k·rerank_factor``
-    finalists. Output contract matches the other searchers.
-
-    No Python worker runs: the models ride one broadcast row
-    (:func:`_model_table`), the queries rank their cells against it in
-    the JVM (:func:`_probe_cells`), and the coded rows of the probed
-    cells (a left-semi join) are each reconstructed ONCE —
-    ``centroid[cell]`` plus the decoded residual — with their squared
-    norm, so per-row work is bounded by the probed cells' rows and each
-    (row, query) pair costs one dot fold. A coded table smaller than the
-    session's parallelism is spread first (``spread_small_input``), so
-    the pair scoring runs on every core."""
-    from airflow_postgres_csv_spark.operators.localframe import spread_small_input
-
-    meta, coded = _pinned_index(spark, index_root, version, "ivfpq", "an IVF-PQ")
-    model = _model_table(spark, meta["centroids"], meta["codebooks"])
-    q = _query_side(queries, id_col, vec_col, query_id_col)
-    q_probes = _probe_cells(q, model, n_probe)
-    probed = spread_small_input(
-        coded.select("vec_id", "cell", "pq_codes")  # embeddings pruned
-    ).join(F.broadcast(q_probes.select("cell")), "cell", "left_semi")
-    return _adc_rerank(
-        _pq_reconstruct(probed, model, "vec_id"),
-        q,
-        coded.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_nvec")),
-        k, rerank_factor, "vec_id", query_id_col, q_probes,
-    )
-
-
-def ann_index_delete(
-    spark: SparkSession, index_root: str, vec_ids: list
-) -> dict:
-    """Remove vectors from a persisted IVF/PQ index WITHOUT rewriting the
-    coded corpus or touching the frozen model — the mirror of
-    ``text_index_delete`` for ANN indexes (the gap VERDICT r7 item 3
-    named: a dedup pass that evicts corpus docs must be able to evict
-    their vectors without a rebuild, or stale neighbors serve forever).
-
-    One merge-on-read equality tombstone on ``vec_id``, published
-    atomically with the UNCHANGED ``ann_index`` model metadata carried
-    forward (centroids/codebooks are frozen per generation — deletion
-    never retrains; ANN has no corpus-level stats to decrement, unlike
-    BM25's n_docs/avgdl). Every serve path (`ivf_search_index`,
-    `pq_search_index`) reads the coded table through ``snapshot_read``,
-    which applies the tombstone as a broadcast anti-join — deleted
-    vectors leave candidate generation AND the exact rerank in the same
-    version step, and a search pinned to the pre-delete version still
-    sees them (MVCC). ``snapshot_compact`` folds the tombstone into a
-    clean rewrite later. Cost: one scan to resolve the condition,
-    O(deleted keys) bytes, zero data files rewritten.
-
-    The pinned recall probe set is repaired in the SAME commit (deleted
-    vectors pruned from the stored exact lists; a list that fell below k
-    is recomputed against the post-delete state), so a later
-    ``ann_derive_settings`` tunes against the live corpus, never a
-    drifted reference."""
-    from airflow_postgres_csv_spark.operators.snapshots import (
-        _load_manifest,
-        snapshot_delete_mor,
-        snapshot_versions,
-    )
-
-    versions = snapshot_versions(index_root)
-    if not versions:
-        raise FileNotFoundError(f"no index at {index_root}")
-    meta = _load_manifest(index_root, versions[-1]).get("ann_index") or {}
-    if meta.get("kind") not in ("ivf", "pq", "ivfpq"):
-        raise ValueError(f"{index_root} is not a persisted ANN index")
-    ids = sorted(set(vec_ids))
-    if not ids or not all(isinstance(i, int) for i in ids):
-        raise ValueError("ann_index_delete: vec_ids must be non-empty ints")
-    repaired = _probe_set_after_delete(spark, index_root, meta, set(ids))
-    if repaired is not None:
-        meta = {**meta, "probe_set": repaired}
-    id_list = ", ".join(str(i) for i in ids)
-    return snapshot_delete_mor(
-        spark, index_root,
-        condition=f"vec_id IN ({id_list})", key_col="vec_id",
-        extra={"ann_index": meta},
-    )
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    m: int = 8,
-    n_codes: int = 16,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    codebooks: list[list[list[float]]] | None = None,
-) -> DataFrame:
-    """Approximate top-k via PQ: encode the corpus to m-byte codes, score
-    queries against reconstructions (= ADC), keep ``k·rerank_factor``
-    candidates per query, then rerank exactly on the true vectors of just
-    those candidates. Output matches the exact searcher's shape:
-    (query_id, neighbor_id, cosine, rank) with exact cosines.
-    """
-    if codebooks is None:
-        codebooks = pq_codebooks(
-            corpus, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col
-        )
-    encode = _pq_encode_udf(codebooks)
-    return _adc_rerank(
-        _pq_reconstruct(
-            corpus.select(id_col, encode(vec_col).alias("pq_codes")),
-            _model_table(corpus.sparkSession, codebooks=codebooks),
-            id_col,
-        ),
-        _query_side(queries, id_col, vec_col, query_id_col),
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nvec")),
-        k, rerank_factor, id_col, query_id_col,
-    )

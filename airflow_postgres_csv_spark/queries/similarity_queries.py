@@ -590,8 +590,8 @@ def _ann_persisted(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 10)
     ivf_root, pq_root = _temp_root(), _temp_root()
-    m_ivf = S.ivf_build_index(emb, ivf_root, n_cells=16)
-    m_pq = S.pq_build_index(emb, pq_root, m=16, n_codes=16)
+    m_ivf = S.ivfpq_build_index(emb, ivf_root, n_cells=16, m=None)
+    m_pq = S.ivfpq_build_index(emb, pq_root, n_cells=None, m=16, n_codes=16)
     # consumed by per_query + both _recall_ok branches: pin (3 -> 1
     # brute-force executions)
     exact = _pin(
@@ -619,12 +619,12 @@ def _ann_persisted(spark, sf_dir):
         )
 
     ivf_ok = _recall_ok(
-        S.ivf_search_index(spark, ivf_root, qs, k=5, n_probe=8).select(
+        S.ivfpq_search_index(spark, ivf_root, qs, k=5, n_probe=8).select(
             "query_id", "neighbor_id"
         )
     )
     pq_ok = _recall_ok(
-        S.pq_search_index(spark, pq_root, qs, k=5, rerank_factor=4).select(
+        S.ivfpq_search_index(spark, pq_root, qs, k=5, rerank_factor=4).select(
             "query_id", "neighbor_id"
         )
     )
@@ -666,15 +666,17 @@ def _ann_incremental(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 10)
     root = _temp_root()
-    m1 = S.ivf_build_index(emb.where(F.col("vec_id") % 2 == 0), root, n_cells=16)
-    m2 = S.ivf_index_append(emb.where(F.col("vec_id") % 2 == 1), root)
+    m1 = S.ivfpq_build_index(
+        emb.where(F.col("vec_id") % 2 == 0), root, n_cells=16, m=None
+    )
+    m2 = S.ivfpq_index_append(emb.where(F.col("vec_id") % 2 == 1), root)
     # exact feeds both the hit join and per_query: pin (2 -> 1)
     exact = _pin(
         S.topk_cosine_bruteforce(emb, qs, k=5).select(
             "query_id", "neighbor_id"
         )
     )
-    ann = S.ivf_search_index(spark, root, qs, k=5, n_probe=8).select(
+    ann = S.ivfpq_search_index(spark, root, qs, k=5, n_probe=8).select(
         "query_id", "neighbor_id"
     )
     hits = exact.join(ann, ["query_id", "neighbor_id"]).groupBy("query_id").count()
@@ -730,13 +732,13 @@ def _ann_delete(spark, sf_dir):
     survivors = emb.filter(~F.col("vec_id").between(100, 199))
 
     ivf_root, pq_root = _temp_root(), _temp_root()
-    m_ivf = S.ivf_build_index(emb, ivf_root, n_cells=16)
-    m_pq = S.pq_build_index(emb, pq_root, m=16, n_codes=16)
+    m_ivf = S.ivfpq_build_index(emb, ivf_root, n_cells=16, m=None)
+    m_pq = S.ivfpq_build_index(emb, pq_root, n_cells=None, m=16, n_codes=16)
     # every search result below is consumed by 2-3 comparison branches
     # (set equality both ways, the deleted-absent filter) — pinned, each
     # search runs exactly once instead of 14 total executions
     pre = _pin(
-        S.ivf_search_index(spark, ivf_root, qs, k=5, n_probe=8).select(
+        S.ivfpq_search_index(spark, ivf_root, qs, k=5, n_probe=8).select(
             "query_id", "neighbor_id", "rank"
         )
     )
@@ -750,7 +752,7 @@ def _ann_delete(spark, sf_dir):
         return multiset_equal(a, b)
 
     post_ivf = _pin(
-        S.ivf_search_index(spark, ivf_root, qs, k=5, n_probe=8).select(
+        S.ivfpq_search_index(spark, ivf_root, qs, k=5, n_probe=8).select(
             "query_id", "neighbor_id", "rank"
         )
     )
@@ -761,7 +763,7 @@ def _ann_delete(spark, sf_dir):
         ).select("query_id", "neighbor_id", "rank")
     )
     post_pq = _pin(
-        S.pq_search_index(
+        S.ivfpq_search_index(
             spark, pq_root, qs, k=5, rerank_factor=4
         ).select("query_id", "neighbor_id", "rank")
     )
@@ -772,7 +774,7 @@ def _ann_delete(spark, sf_dir):
         ).select("query_id", "neighbor_id", "rank")
     )
     pinned = _pin(
-        S.ivf_search_index(
+        S.ivfpq_search_index(
             spark, ivf_root, qs, k=5, n_probe=8, version=m_ivf["version"]
         ).select("query_id", "neighbor_id", "rank")
     )
@@ -908,9 +910,9 @@ def _streaming_ann_index_live(spark, sf_dir):
     evens = emb.where(F.col("vec_id") % 2 == 0)
     odds = emb.where(F.col("vec_id") % 2 == 1)
     live_root, ref_root = _temp_root(), _temp_root()
-    S.ivf_build_index(evens, live_root, n_cells=16)
-    S.ivf_build_index(evens, ref_root, n_cells=16)
-    S.ivf_index_append(odds, ref_root)
+    S.ivfpq_build_index(evens, live_root, n_cells=16, m=None)
+    S.ivfpq_build_index(evens, ref_root, n_cells=16, m=None)
+    S.ivfpq_index_append(odds, ref_root)
     src = os.path.join(_temp_root(), "src")
     os.makedirs(src)
     from airflow_postgres_csv_spark.queries._helpers import (
@@ -951,12 +953,12 @@ def _streaming_ann_index_live(spark, sf_dir):
     # live/ref feed set-equality both ways + the hit join; exact feeds
     # the hit join + per_query — pinned, each runs once
     live = _pin(
-        S.ivf_search_index(spark, live_root, qs, k=5, n_probe=8).select(
+        S.ivfpq_search_index(spark, live_root, qs, k=5, n_probe=8).select(
             "query_id", "neighbor_id", "rank"
         )
     )
     ref = _pin(
-        S.ivf_search_index(spark, ref_root, qs, k=5, n_probe=8).select(
+        S.ivfpq_search_index(spark, ref_root, qs, k=5, n_probe=8).select(
             "query_id", "neighbor_id", "rank"
         )
     )
@@ -1025,7 +1027,7 @@ def _ann_autotune(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     ivf_root = _temp_root()
-    S.ivf_build_index(emb, ivf_root, n_cells=16, probe_queries=6, probe_k=5)
+    S.ivfpq_build_index(emb, ivf_root, n_cells=16, m=None, probe_queries=6, probe_k=5)
     d_ivf = S.ann_derive_settings(spark, ivf_root, recall_floor=0.8)
     recalls = [e["recall"] for e in d_ivf["evaluated"]]
     # (the PQ/rerank_factor derivation runs the same ladder — pinned in
@@ -1043,7 +1045,7 @@ def _ann_autotune(spark, sf_dir):
             "query_id", "neighbor_id"
         )
     )
-    ann = S.ivf_search_index(
+    ann = S.ivfpq_search_index(
         spark, ivf_root, qs, k=5, n_probe=d_ivf["n_probe"]
     ).select("query_id", "neighbor_id")
     hits = exact.join(ann, ["query_id", "neighbor_id"]).count()

@@ -505,21 +505,22 @@ def ann_index_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> bool:
-    """foreachBatch body: keep a persisted IVF ANN index
-    (operators/similarity.py) fresh from a live embedding stream,
-    exactly once. The index must be BUILT beforehand (build-once /
-    serve-many — training a quantizer inside a sink would put a
-    clustering job on the ingest path); each batch assigns its vectors
-    to the FROZEN centroids and appends one generation-pinned commit
-    with the batch id stamped inside the same atomic publish. Replays
-    are dropped by the high-water gate; a concurrent index rebuild
-    conflicts (``expected_head``) instead of mixing generations."""
+    """foreachBatch body: keep a persisted ANN index of any shape — IVF,
+    PQ or IVF-PQ (operators/similarity.py) — fresh from a live embedding
+    stream, exactly once. The index must be BUILT beforehand (build-once
+    / serve-many — training a quantizer inside a sink would put a
+    clustering job on the ingest path); each batch codes its vectors
+    with the FROZEN models (``ivfpq_index_append``) and appends one
+    generation-pinned commit with the batch id stamped inside the same
+    atomic publish. Replays are dropped by the high-water gate; a
+    concurrent index rebuild conflicts (``expected_head``) instead of
+    mixing generations."""
     from airflow_postgres_csv_spark.operators import snapshots as S
-    from airflow_postgres_csv_spark.operators.similarity import ivf_index_append
+    from airflow_postgres_csv_spark.operators.similarity import ivfpq_index_append
 
     if batch_id <= S._max_stamp(index_root, "last_batch_id", -1):
         return False
-    ivf_index_append(
+    ivfpq_index_append(
         batch_df, index_root, id_col=id_col, vec_col=vec_col,
         extra={"last_batch_id": batch_id},
     )
@@ -533,10 +534,10 @@ def start_ann_index_sink(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> StreamingQuery:
-    """Stream embeddings into a pre-built IVF ANN index
+    """Stream embeddings into a pre-built ANN index of any shape
     (``ann_index_batch`` per micro-batch): searches between batches see
-    old + new vectors through the same cell-probed serve path, with
-    zero training jobs on the ingest side."""
+    old + new vectors through the same ``ivfpq_search_index`` serve
+    path, with zero training jobs on the ingest side."""
     return (
         stream_df.writeStream.outputMode("append")
         .foreachBatch(

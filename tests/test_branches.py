@@ -845,12 +845,12 @@ def test_publish_carries_index_model_metadata(spark, tmp_path):
         ).alias("embedding"),
     )
     root = str(tmp_path / "ivf")
-    SIM.ivf_build_index(emb.where("vec_id < 80"), root, n_cells=8)
+    SIM.ivfpq_build_index(emb.where("vec_id < 80"), root, n_cells=8, m=None)
     broot = snapshot_branch(root, "ingest")
-    SIM.ivf_index_append(emb.where("vec_id >= 80"), broot)
+    SIM.ivfpq_index_append(emb.where("vec_id >= 80"), broot)
     m = snapshot_publish_branch(root, "ingest")
     assert m["ann_index"]["kind"] == "ivf"
-    out = SIM.ivf_search_index(
+    out = SIM.ivfpq_search_index(
         spark, root, emb.filter("vec_id < 3"), k=3, n_probe=8
     )
     assert out.count() == 9

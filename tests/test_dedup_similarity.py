@@ -497,8 +497,8 @@ def test_persisted_ann_index_serves_without_training(spark, tmp_path, monkeypatc
     qs = corpus.filter(F.col("vec_id") < 5)
     ivf_root = str(tmp_path / "ivf")
     pq_root = str(tmp_path / "pq")
-    m_ivf = S.ivf_build_index(corpus, ivf_root, n_cells=8)
-    m_pq = S.pq_build_index(corpus, pq_root, m=4, n_codes=8)
+    m_ivf = S.ivfpq_build_index(corpus, ivf_root, n_cells=8, m=None)
+    m_pq = S.ivfpq_build_index(corpus, pq_root, n_cells=None, m=4, n_codes=8)
     assert m_ivf["ann_index"]["kind"] == "ivf"
     assert len(m_ivf["ann_index"]["centroids"]) == 8
     assert len(m_pq["ann_index"]["codebooks"]) == 4
@@ -528,13 +528,13 @@ def test_persisted_ann_index_serves_without_training(spark, tmp_path, monkeypatc
 
     got_ivf = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in S.ivf_search_index(
+        for r in S.ivfpq_search_index(
             spark, ivf_root, qs, k=3, n_probe=4
         ).collect()
     )
     got_pq = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in S.pq_search_index(
+        for r in S.ivfpq_search_index(
             spark, pq_root, qs, k=3, rerank_factor=4
         ).collect()
     )
@@ -548,27 +548,37 @@ def test_persisted_ann_index_serves_without_training(spark, tmp_path, monkeypatc
         [(i, rng.randn(16).tolist()) for i in range(100)],
         "vec_id long, embedding array<float>",
     )
-    m2 = S.ivf_build_index(corpus2, ivf_root, n_cells=4)
+    m2 = S.ivfpq_build_index(corpus2, ivf_root, n_cells=4, m=None)
     assert m2["version"] == 2
     pinned = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in S.ivf_search_index(
+        for r in S.ivfpq_search_index(
             spark, ivf_root, qs, k=3, n_probe=4, version=1
         ).collect()
     )
     assert pinned == want_ivf
-    with pytest.raises(ValueError):
-        S.pq_search_index(spark, ivf_root, qs)  # wrong index kind
 
 
-def test_ivf_index_append_serves_old_and_new_without_retraining(spark, tmp_path, monkeypatch):
-    """Incremental IVF ingest: new vectors are assigned to the FROZEN
-    centroids and appended; a search then covers old + new with no
-    retraining, and the appended index equals a from-scratch build over
-    the union given the same model."""
+@pytest.mark.parametrize(
+    "n_cells, m",
+    [
+        pytest.param(8, None, id="ivf"),
+        pytest.param(None, 4, id="pq", marks=pytest.mark.slow),
+        pytest.param(8, 4, id="ivfpq", marks=pytest.mark.slow),
+    ],
+)
+def test_index_append_serves_old_and_new_without_retraining(
+    spark, tmp_path, monkeypatch, n_cells, m
+):
+    """Incremental ingest for every index shape: new vectors are coded
+    with the FROZEN models and appended; a search then covers old + new
+    with no retraining, equals the in-memory searcher over the union
+    given the same models, and the appended rows carry ``cell`` and
+    ``pq_codes`` exactly per the stored shape."""
     import numpy as np
 
     from airflow_postgres_csv_spark.operators import similarity as S
+    from airflow_postgres_csv_spark.operators.snapshots import snapshot_read
 
     rng = np.random.RandomState(3)
 
@@ -579,85 +589,103 @@ def test_ivf_index_append_serves_old_and_new_without_retraining(spark, tmp_path,
         )
 
     old, new = mk(0, 200), mk(200, 300)
-    root = str(tmp_path / "ivf")
-    m1 = S.ivf_build_index(old, root, n_cells=8)
+    root = str(tmp_path / "idx")
+    m1 = S.ivfpq_build_index(old, root, n_cells=n_cells, m=m, n_codes=8)
     qs = old.filter(F.col("vec_id") < 5)
 
     def boom(*a, **kw):
         raise AssertionError("training ran on the append path")
 
     monkeypatch.setattr(S, "_kmeans_fit", boom)
-    monkeypatch.setattr(S, "ivf_centroids", boom)
-    m2 = S.ivf_index_append(new, root)
+    monkeypatch.setattr(S, "_train_models", boom)
+    m2 = S.ivfpq_index_append(new, root)
     assert m2["version"] == 2
     assert m2["ann_index"] == m1["ann_index"]  # model frozen, carried
     got = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in S.ivf_search_index(spark, root, qs, k=3, n_probe=4).collect()
-    )
-    # equal to the in-memory searcher over the UNION with the same model
-    want = sorted(
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in S.ivf_topk(
-            old.unionByName(new), qs, k=3, n_probe=4,
-            centroids=m1["ann_index"]["centroids"],
+        for r in S.ivfpq_search_index(
+            spark, root, qs, k=3, n_probe=4, rerank_factor=4
         ).collect()
     )
-    assert got == want
-    monkeypatch.undo()
-    # appending to a PQ index (wrong kind) refuses
-    pq_root = str(tmp_path / "pq")
-    S.pq_build_index(old, pq_root, m=4, n_codes=8)
-    with pytest.raises(ValueError, match="not an IVF index"):
-        S.ivf_index_append(new, pq_root)
-
-
-@pytest.mark.slow
-def test_pq_index_append_no_retraining(spark, tmp_path, monkeypatch):
-    """PQ incremental ingest: new vectors encoded with the frozen
-    codebooks and appended; the persisted search then equals the
-    in-memory searcher over the union given the same model."""
-    import numpy as np
-
-    from airflow_postgres_csv_spark.operators import similarity as S
-
-    rng = np.random.RandomState(5)
-
-    def mk(lo, hi):
-        return spark.createDataFrame(
-            [(i, rng.randn(16).tolist()) for i in range(lo, hi)],
-            "vec_id long, embedding array<float>",
+    # equal to the in-memory searcher over the UNION with the same models
+    C = m1["ann_index"].get("centroids")
+    B = m1["ann_index"].get("codebooks")
+    union = old.unionByName(new)
+    if B is None:
+        ref = S.ivf_topk(union, qs, k=3, n_probe=4, centroids=C)
+    elif C is None:
+        ref = S.pq_topk(union, qs, k=3, rerank_factor=4, codebooks=B)
+    else:
+        ref = S._serve(
+            S._code(union, C, B, "vec_id", "embedding"), C, B, qs,
+            3, 4, 4, "vec_id", "embedding", "query_id",
         )
-
-    old, new = mk(0, 150), mk(150, 220)
-    root = str(tmp_path / "pq")
-    m1 = S.pq_build_index(old, root, m=4, n_codes=8)
-    qs = old.filter(F.col("vec_id") < 4)
-    monkeypatch.setattr(S, "_kmeans_fit", lambda *a, **kw: (_ for _ in ()).throw(
-        AssertionError("training ran on the append path")))
-    monkeypatch.setattr(S, "pq_codebooks", lambda *a, **kw: (_ for _ in ()).throw(
-        AssertionError("training ran on the append path")))
-    m2 = S.pq_index_append(new, root)
-    assert m2["version"] == 2 and m2["ann_index"] == m1["ann_index"]
-    got = sorted(
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in S.pq_search_index(
-            spark, root, qs, k=3, rerank_factor=4
-        ).collect()
-    )
-    want = sorted(
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in S.pq_topk(
-            old.unionByName(new), qs, k=3, rerank_factor=4,
-            codebooks=m1["ann_index"]["codebooks"],
-        ).collect()
-    )
+    want = sorted((r.query_id, r.neighbor_id, r.rank) for r in ref.collect())
     assert got == want
-    monkeypatch.undo()
-    with pytest.raises(ValueError, match="not a PQ index"):
-        ivf_root = str(tmp_path / "ivf")
-        S.ivf_build_index(old, ivf_root, n_cells=4)
-        S.pq_index_append(new, ivf_root)
+    # the appended rows are coded exactly per the stored shape
+    stored = snapshot_read(spark, root)
+    shape_cols = (["cell"] if C is not None else []) + (
+        ["pq_codes"] if B is not None else []
+    )
+    assert sorted(stored.columns) == sorted(["vec_id", "embedding", *shape_cols])
+    appended = stored.filter(F.col("vec_id") >= 200)
+    assert appended.dropna(subset=shape_cols).count() == 100
+
+
+def test_ann_index_shapes_train_like_their_parts(spark, sf_dir, tmp_path):
+    """One trainer, three shapes: with the same seed an IVF build
+    (``m=None``) stores exactly ``ivf_centroids``' centroids and a PQ
+    build (``n_cells=None``) exactly ``pq_codebooks``' codebooks; an
+    index with neither model is refused."""
+    emb = load(spark, sf_dir, "embeddings")
+    root = str(tmp_path)
+    ivf = S.ivfpq_build_index(emb, f"{root}/ivf", n_cells=8, m=None, seed=7)
+    pq = S.ivfpq_build_index(
+        emb, f"{root}/pq", n_cells=None, m=8, n_codes=8, seed=7
+    )
+    assert ivf["ann_index"]["kind"] == "ivf"
+    assert "codebooks" not in ivf["ann_index"]
+    assert ivf["ann_index"]["centroids"] == S.ivf_centroids(emb, n_cells=8, seed=7)
+    assert pq["ann_index"]["kind"] == "pq"
+    assert "centroids" not in pq["ann_index"]
+    assert pq["ann_index"]["codebooks"] == S.pq_codebooks(
+        emb, m=8, n_codes=8, seed=7
+    )
+    with pytest.raises(ValueError, match="n_cells, m or both"):
+        S.ivfpq_build_index(emb, f"{root}/none", n_cells=None, m=None)
+
+
+def test_ann_index_entry_points_refuse_missing_index(spark, tmp_path):
+    """Search, settings derivation, append and delete all read the index
+    head the same way: a root with no versions raises FileNotFoundError
+    naming the root, a snapshot table without ANN metadata raises
+    ValueError, and an id-only probe list is refused with a rebuild
+    hint."""
+    from airflow_postgres_csv_spark.operators.snapshots import snapshot_commit
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(4)],
+        "vec_id long, embedding array<float>",
+    )
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    plain = str(tmp_path / "plain")
+    snapshot_commit(vecs, plain)
+    calls = (
+        lambda r: S.ivfpq_search_index(spark, r, vecs),
+        lambda r: S.ann_derive_settings(spark, r),
+        lambda r: S.ivfpq_index_append(vecs, r),
+        lambda r: S.ann_index_delete(spark, r, [1]),
+    )
+    for call in calls:
+        with pytest.raises(FileNotFoundError, match="empty"):
+            call(str(empty))
+        with pytest.raises(ValueError, match="not a persisted ANN index"):
+            call(plain)
+    id_only = {"probe_set": {"k": 1, "depth": 2,
+                             "queries": [{"id": 0, "vec": [1.0], "exact": [3]}]}}
+    with pytest.raises(ValueError, match="plain.*rebuild"):
+        S._probe_set(id_only, plain)
 
 
 @pytest.mark.slow
@@ -684,15 +712,15 @@ def test_ann_index_delete_no_retraining_no_rewrite(spark, tmp_path, monkeypatch)
     for kind, root, build, search, topk, model_key, kw in (
         (
             "ivf", str(tmp_path / "ivf"),
-            lambda c, r: S.ivf_build_index(c, r, n_cells=8),
-            lambda r: S.ivf_search_index(spark, root, qs, k=3, n_probe=8),
+            lambda c, r: S.ivfpq_build_index(c, r, n_cells=8, m=None),
+            lambda r: S.ivfpq_search_index(spark, root, qs, k=3, n_probe=8),
             lambda c, m: S.ivf_topk(c, qs, k=3, n_probe=8, centroids=m),
             "centroids", {},
         ),
         (
             "pq", str(tmp_path / "pq"),
-            lambda c, r: S.pq_build_index(c, r, m=4, n_codes=8),
-            lambda r: S.pq_search_index(spark, root, qs, k=3, rerank_factor=4),
+            lambda c, r: S.ivfpq_build_index(c, r, n_cells=None, m=4, n_codes=8),
+            lambda r: S.ivfpq_search_index(spark, root, qs, k=3, rerank_factor=4),
             lambda c, m: S.pq_topk(c, qs, k=3, rerank_factor=4, codebooks=m),
             "codebooks", {},
         ),
@@ -730,7 +758,7 @@ def test_ann_index_delete_no_retraining_no_rewrite(spark, tmp_path, monkeypatch)
         if kind == "ivf":
             pinned = sorted(
                 (r.query_id, r.neighbor_id, r.rank)
-                for r in S.ivf_search_index(
+                for r in S.ivfpq_search_index(
                     spark, root, qs, k=3, n_probe=8, version=m1["version"]
                 ).collect()
             )
@@ -741,7 +769,7 @@ def test_ann_index_delete_no_retraining_no_rewrite(spark, tmp_path, monkeypatch)
         [rows[60]], "vec_id long, embedding array<float>"
     )
     ivf_root = str(tmp_path / "ivf")
-    S.ivf_index_append(readd, ivf_root)
+    S.ivfpq_index_append(readd, ivf_root)
     from airflow_postgres_csv_spark.operators.snapshots import snapshot_read
 
     ids = {
@@ -780,7 +808,7 @@ def test_ivfpq_index_build_serve_append_delete(spark, tmp_path, monkeypatch):
         raise AssertionError("training ran on a frozen-model path")
 
     monkeypatch.setattr(S, "_kmeans_fit", boom)
-    monkeypatch.setattr(S, "_ivfpq_train", boom)
+    monkeypatch.setattr(S, "_train_models", boom)
     m2 = S.ivfpq_index_append(corpus.where(F.col("vec_id") % 2 == 1), root)
     assert m2["version"] == 2 and m2["ann_index"] == m1["ann_index"]
 
@@ -816,11 +844,6 @@ def test_ivfpq_index_build_serve_append_delete(spark, tmp_path, monkeypatch):
     from airflow_postgres_csv_spark.operators.snapshots import snapshot_read
 
     assert snapshot_read(spark, root).count() == 400 - len(gone)
-    # kind mismatch: appending IVFPQ rows into a plain IVF index raises
-    ivf_root = str(tmp_path / "plain_ivf")
-    S.ivf_build_index(qs, ivf_root, n_cells=2)
-    with pytest.raises(ValueError, match="not an IVF-PQ"):
-        S.ivfpq_index_append(qs, ivf_root)
 
 
 def test_ann_derive_settings_no_training_and_floor(spark, tmp_path, monkeypatch):
@@ -841,9 +864,9 @@ def test_ann_derive_settings_no_training_and_floor(spark, tmp_path, monkeypatch)
         ).alias("embedding"),
     )
     root = str(tmp_path / "ivf")
-    SIM.ivf_build_index(emb, root, n_cells=8, probe_queries=6, probe_k=4)
+    SIM.ivfpq_build_index(emb, root, n_cells=8, m=None, probe_queries=6, probe_k=4)
     root2 = str(tmp_path / "bare")
-    SIM.ivf_build_index(emb, root2, n_cells=8)  # no probe set
+    SIM.ivfpq_build_index(emb, root2, n_cells=8, m=None)  # no probe set
 
     def bomb(*a, **kw):
         raise AssertionError("training job on the derivation path")
@@ -875,7 +898,9 @@ def test_ann_derive_settings_pq_rerank_ladder(spark, tmp_path):
         ).alias("embedding"),
     )
     root = str(tmp_path / "pq")
-    SIM.pq_build_index(emb, root, m=4, n_codes=16, probe_queries=6, probe_k=4)
+    SIM.ivfpq_build_index(
+        emb, root, n_cells=None, m=4, n_codes=16, probe_queries=6, probe_k=4
+    )
     out = SIM.ann_derive_settings(spark, root, recall_floor=0.5)
     assert out["knob"] == "rerank_factor" and out["kind"] == "pq"
     vals = [e["rerank_factor"] for e in out["evaluated"]]
@@ -904,7 +929,7 @@ def _stored_and_fresh_probe_topk(spark, root):
     v = snapshot_versions(root)[-1]
     ps = _load_manifest(root, v)["ann_index"]["probe_set"]
     k = int(ps["k"])
-    stored = {q["id"]: SIM._probe_exact_ids(q, k) for q in ps["queries"]}
+    stored = {q["id"]: [n for n, _ in q["exact"][:k]] for q in ps["queries"]}
     corpus = snapshot_read(spark, root).select("vec_id", "embedding")
     fresh_pairs = SIM._exact_pairs_by_query(
         corpus, SIM._probes_df(spark, ps["queries"]), k
@@ -934,7 +959,7 @@ def test_probe_set_maintained_on_delete_and_append(spark, tmp_path, monkeypatch)
         )
 
     root = str(tmp_path / "ivf")
-    SIM.ivf_build_index(emb_df(0, 200), root, n_cells=8,
+    SIM.ivfpq_build_index(emb_df(0, 200), root, n_cells=8, m=None,
                         probe_queries=5, probe_k=4)
     stored0, fresh0 = _stored_and_fresh_probe_topk(spark, root)
     assert stored0 == fresh0  # build-time lists are exact
@@ -958,7 +983,7 @@ def test_probe_set_maintained_on_delete_and_append(spark, tmp_path, monkeypatch)
 
     # append a batch engineered to enter the probe top-k (near-clones of
     # the probe vectors land at cosine ~1) — the merge must surface them
-    SIM.ivf_index_append(emb_df(1000, 1040).withColumn(
+    SIM.ivfpq_index_append(emb_df(1000, 1040).withColumn(
         "embedding",
         F.transform(
             F.sequence(F.lit(1), F.lit(8)),
@@ -998,17 +1023,17 @@ def test_index_model_metadata_survives_compaction(spark, tmp_path):
         ).alias("embedding"),
     )
     root = str(tmp_path / "ivf")
-    SIM.ivf_build_index(emb, root, n_cells=8, probe_queries=4, probe_k=3)
+    SIM.ivfpq_build_index(emb, root, n_cells=8, m=None, probe_queries=4, probe_k=3)
     SIM.ann_index_delete(spark, root, [5, 6, 7])
     qs = emb.filter("vec_id >= 190")
-    before = SIM.ivf_search_index(spark, root, qs, k=3, n_probe=8)
+    before = SIM.ivfpq_search_index(spark, root, qs, k=3, n_probe=8)
     rows_before = sorted(map(tuple, before.select(
         "query_id", "neighbor_id", "rank").collect()))
     snapshot_compact(spark, root)
     head = _load_manifest(root, snapshot_versions(root)[-1])
     assert head["ann_index"]["kind"] == "ivf"
     assert not head.get("tombstones")  # the fold actually happened
-    after = SIM.ivf_search_index(spark, root, qs, k=3, n_probe=8)
+    after = SIM.ivfpq_search_index(spark, root, qs, k=3, n_probe=8)
     assert sorted(map(tuple, after.select(
         "query_id", "neighbor_id", "rank").collect())) == rows_before
     stored, fresh = _stored_and_fresh_probe_topk(spark, root)

@@ -55,7 +55,12 @@ def test_text_index_batch_builds_then_appends_exactly_once(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
 
 
-def test_ann_index_batch_requires_prebuilt_index(spark, tmp_path):
+@pytest.mark.parametrize(
+    "shape",
+    [{"n_cells": 4, "m": None}, {"n_cells": None, "m": 2, "n_codes": 4}],
+    ids=["ivf", "pq"],
+)
+def test_ann_index_batch_requires_prebuilt_index(spark, tmp_path, shape):
     emb = spark.range(0, 40).select(
         F.col("id").alias("vec_id"),
         F.transform(
@@ -66,9 +71,9 @@ def test_ann_index_batch_requires_prebuilt_index(spark, tmp_path):
     root = str(tmp_path / "ann")
     with pytest.raises(FileNotFoundError):
         ann_index_batch(emb, 0, root)
-    from airflow_postgres_csv_spark.operators.similarity import ivf_build_index
+    from airflow_postgres_csv_spark.operators.similarity import ivfpq_build_index
 
-    ivf_build_index(emb.where(F.col("vec_id") < 20), root, n_cells=4)
+    ivfpq_build_index(emb.where(F.col("vec_id") < 20), root, **shape)
     assert ann_index_batch(emb.where(F.col("vec_id") >= 20), 0, root) is True
     assert ann_index_batch(emb.where(F.col("vec_id") >= 20), 0, root) is False
     assert S.snapshot_read(spark, root).count() == 40

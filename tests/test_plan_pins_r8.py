@@ -25,11 +25,11 @@ def test_ann_delete_serve_plan_is_broadcast_antijoin(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     root = str(tmp_path / "ivf")
-    S.ivf_build_index(corpus, root, n_cells=8)
+    S.ivfpq_build_index(corpus, root, n_cells=8, m=None)
     S.ann_index_delete(spark, root, list(range(50, 80)))
     qs = corpus.filter(F.col("vec_id") < 5)
     plan = (
-        S.ivf_search_index(spark, root, qs, k=3, n_probe=4)
+        S.ivfpq_search_index(spark, root, qs, k=3, n_probe=4)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

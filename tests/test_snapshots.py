@@ -2734,9 +2734,9 @@ def test_clone_carries_rename_lineage_and_index_model(spark, tmp_path):
         ).alias("embedding"),
     )
     iroot, iclone = str(tmp_path / "ivf"), str(tmp_path / "ivf2")
-    SIM.ivf_build_index(emb, iroot, n_cells=8)
+    SIM.ivfpq_build_index(emb, iroot, n_cells=8, m=None)
     snapshot_clone(iroot, iclone)
-    out = SIM.ivf_search_index(
+    out = SIM.ivfpq_search_index(
         spark, iclone, emb.filter("vec_id < 3"), k=3, n_probe=8
     )
     assert out.count() == 9  # the cloned index serves with its model
@@ -2774,12 +2774,12 @@ def test_rollback_restores_lineage_and_index_model(spark, tmp_path):
         ).alias("embedding"),
     )
     iroot = str(tmp_path / "ivf")
-    SIM.ivf_build_index(emb.where("vec_id < 80"), iroot, n_cells=8)
-    SIM.ivf_index_append(emb.where("vec_id >= 80"), iroot)
+    SIM.ivfpq_build_index(emb.where("vec_id < 80"), iroot, n_cells=8, m=None)
+    SIM.ivfpq_index_append(emb.where("vec_id >= 80"), iroot)
     snapshot_rollback(spark, iroot, 1)
     head = _load_manifest(iroot, snapshot_versions(iroot)[-1])
     assert head["ann_index"]["kind"] == "ivf"
-    out = SIM.ivf_search_index(
+    out = SIM.ivfpq_search_index(
         spark, iroot, emb.filter("vec_id < 3"), k=3, n_probe=8
     )
     assert out.count() == 9
