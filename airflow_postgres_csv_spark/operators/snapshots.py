@@ -449,6 +449,26 @@ def _footer_stats(path: str) -> dict:
     return _footer_meta(path)[0]
 
 
+def _read_delete_files(
+    spark: SparkSession, root: str, files: list[str], positional: bool = False
+) -> DataFrame:
+    """A tombstone's (or merge's key) files as one DataFrame under a KNOWN
+    schema — inferring one is a Spark job at DataFrame-build time, paid
+    on every read. Positional delete files always hold ``(file, pos)``;
+    equality and merge-key files are Spark-written, so their footer
+    carries Spark's row schema, read here with pyarrow. All files of one
+    list come from one write, so one footer serves."""
+    paths = [os.path.join(root, f) for f in files]
+    if positional:
+        return spark.read.schema("file STRING, pos LONG").parquet(*paths)
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    meta = pq.read_schema(paths[0]).metadata
+    schema = json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+    return spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
+
+
 def _rel_by_abs(root: str, rel_files: list[str]) -> dict:
     """Absolute-path -> rel mapping for attributing ``input_file_name``
     rows back to pinned rel paths. Keyed by ABSOLUTE path, never
@@ -653,6 +673,23 @@ def _inherit_maps(prev: dict | None, files: list[str]) -> dict:
         if kept:
             out["sorted_commits"] = kept
     return out
+
+
+def _carry_body(
+    manifest: dict, mode: str, commit_id: str, extra: dict | None = None
+) -> dict:
+    """Body of a commit that keeps ``manifest``'s file list (a tombstone
+    or metadata-only commit): per-commit maps and the Bloom config are
+    carried, ``extra`` applies beneath the reserved keys."""
+    body = _inherit_maps(manifest, manifest["files"])
+    if manifest.get("bloom"):
+        body["bloom"] = manifest["bloom"]
+    body.update(extra or {})
+    body.update(
+        mode=mode, commit_id=commit_id, files=list(manifest["files"]),
+        n_files=manifest["n_files"], schema=manifest["schema"],
+    )
+    return body
 
 
 def snapshot_commit(
@@ -1249,13 +1286,19 @@ def _write_data(
         return commit_id, new_files
     if cluster_by:
         df = df.repartitionByRange(*cluster_by).sortWithinPartitions(*cluster_by)
-    df.write.mode("error").parquet(data_dir)
-    new_files = sorted(
-        os.path.join(_DATA_DIR, commit_id, name)
-        for name in os.listdir(data_dir)
+    return commit_id, _write_files(df, root, commit_id)
+
+
+def _write_files(df: DataFrame, root: str, dirname: str) -> list[str]:
+    """Write ``df`` under ``root/data/dirname``; return its relative
+    parquet paths."""
+    out_dir = os.path.join(root, _DATA_DIR, dirname)
+    df.write.mode("error").parquet(out_dir)
+    return sorted(
+        os.path.join(_DATA_DIR, dirname, name)
+        for name in os.listdir(out_dir)
         if name.endswith(".parquet") and not name.startswith(("_", "."))
     )
-    return commit_id, new_files
 
 
 def _write_rewrite(df: DataFrame, root: str, manifest: dict) -> tuple[str, list[str]]:
@@ -1548,18 +1591,11 @@ def snapshot_sketch_backfill(
         out["backfilled_commits"] = 0
         return out
     commit_id = uuid.uuid4().hex[:12]
-    body = _inherit_maps(manifest, list(manifest["files"]))
-    if manifest.get("bloom"):
-        body["bloom"] = manifest["bloom"]
+    body = _carry_body(manifest, "sketch-backfill", commit_id)
     body["sketch"] = cfg
     body["sidecars"] = new_sidecars
     body["sketch_commits"] = sorted(
         set(body.get("sketch_commits", [])) | set(backfilled_cids)
-    )
-    body.update(
-        mode="sketch-backfill", commit_id=commit_id,
-        files=list(manifest["files"]), n_files=manifest["n_files"],
-        schema=manifest["schema"],
     )
     out = _publish(root, versions, body, commit_id, None)
     out["backfilled_commits"] = backfilled
@@ -1844,12 +1880,15 @@ def _read_pinned(
     schema — added columns fill with the column's default (or NULL),
     dropped columns are pruned, widened columns cast (int→long,
     float→double: the parquet pages are read as written, the cast happens
-    in the scan projection). Merge-on-read tombstones applicable to a
-    file are applied as broadcast anti-joins before alignment — equality
-    tombstones on their recorded key column, positional tombstones on
-    (file, row_index) via the parquet reader's ``_metadata`` columns.
-    Grouping is by (schema, tombstone-set), so the plan stays one union
-    of pruned scans — no shuffle is introduced.
+    in the scan projection). Equality tombstones applicable to a file are
+    applied per group as broadcast anti-joins on their recorded key
+    column, before alignment; grouping is by (schema, equality-tombstone
+    set), so the plan stays one union of pruned scans — no shuffle is
+    introduced. The delete files of every positional tombstone covering
+    a pinned file are read as ONE ``(file, pos)`` relation and applied
+    once, after the union, as a broadcast anti-join on (file, row_index)
+    via the parquet reader's ``_metadata`` columns — exact because every
+    address names its own immutable, uniquely named data file.
 
     ``with_position=True`` appends ``__file`` (manifest-relative path)
     and ``__pos`` (row index within the file) columns — the address a
@@ -1874,25 +1913,33 @@ def _read_pinned(
         return out
     commit_schemas = manifest.get("commit_schemas", {})
     tombs = manifest.get("tombstones", []) if apply_tombstones else []
+    pinned = set(rels)
+    pos_files = [
+        f
+        for t in tombs
+        if t.get("kind") == "positional" and pinned.intersection(t["applies"])
+        for f in t["files"]
+    ]
+    extra_cols = ["__file", "__pos"] if with_position or pos_files else []
     groups: dict[tuple, list[str]] = {}
     for rel in rels:
         cid = _commit_of(rel)
         sj = commit_schemas.get(cid, manifest["schema"])
         tids = tuple(
-            i for i, t in enumerate(tombs) if _tombstone_applies(t, cid, rel)
+            i
+            for i, t in enumerate(tombs)
+            if t.get("kind") != "positional" and cid in t["commits"]
         )
         groups.setdefault((sj, tids), []).append(rel)
     parts = []
     tomb_keys: dict = {}
+    history = manifest.get("column_history", {})
     for (sj, tids), group in sorted(groups.items()):
         written = StructType.fromJson(json.loads(sj))
         df = spark.read.schema(written).parquet(
             *[os.path.join(root, rel) for rel in group]
         )
-        need_pos = with_position or any(
-            tombs[i].get("kind") == "positional" for i in tids
-        )
-        if need_pos:
+        if extra_cols:
             df = df.select(
                 "*",
                 F.regexp_extract(
@@ -1900,37 +1947,23 @@ def _read_pinned(
                 ).alias("__file"),
                 F.col("_metadata.row_index").alias("__pos"),
             )
-        history = manifest.get("column_history", {})
         for i in tids:
             t = tombs[i]
-            if i not in tomb_keys:
-                # one read per tombstone, shared by every group it covers:
-                # inferring a schema is a Spark job, and positional delete
-                # files always hold (file, pos), so those skip it
-                reader = spark.read
-                if t.get("kind") == "positional":
-                    reader = reader.schema("file STRING, pos LONG")
-                tomb_keys[i] = reader.parquet(
-                    *[os.path.join(root, f) for f in t["files"]]
-                )
+            if i not in tomb_keys:  # one read per tombstone, shared by groups
+                tomb_keys[i] = _read_delete_files(spark, root, t["files"])
             keys = tomb_keys[i]
-            if t.get("kind") == "positional":
-                cond = (df["__file"] == keys["file"]) & (df["__pos"] == keys["pos"])
-                df = df.join(F.broadcast(keys), on=cond, how="left_anti")
+            # a file written before an ALTER RENAME carries the old
+            # physical name; resolve the tombstone's (current) key column
+            # to it
+            key = _written_name(t["key_col"], set(df.columns), history)
+            if key == t["key_col"]:
+                df = df.join(F.broadcast(keys), on=key, how="left_anti")
             else:
-                # a file written before an ALTER RENAME carries the old
-                # physical name; resolve the tombstone's (current) key
-                # column to it
-                key = _written_name(t["key_col"], set(df.columns), history)
-                if key == t["key_col"]:
-                    df = df.join(F.broadcast(keys), on=key, how="left_anti")
-                else:
-                    df = df.join(
-                        F.broadcast(keys),
-                        on=df[key] == keys[t["key_col"]],
-                        how="left_anti",
-                    )
-        extra_cols = ["__file", "__pos"] if with_position else []
+                df = df.join(
+                    F.broadcast(keys),
+                    on=df[key] == keys[t["key_col"]],
+                    how="left_anti",
+                )
         if sj != manifest["schema"]:
             defaults = manifest.get("defaults", {})
             have = {f.name: f.dataType for f in written.fields}
@@ -1947,12 +1980,19 @@ def _read_pinned(
                         F.lit(defaults.get(f.name)).cast(f.dataType).alias(f.name)
                     )
             df = df.select(*cols, *[F.col(c) for c in extra_cols])
-        elif need_pos and not with_position:
-            df = df.drop("__file", "__pos")
         parts.append(df)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
+    if pos_files:
+        addr = _read_delete_files(spark, root, pos_files, positional=True)
+        out = out.join(
+            F.broadcast(addr),
+            on=(out["__file"] == addr["file"]) & (out["__pos"] == addr["pos"]),
+            how="left_anti",
+        )
+        if not with_position:
+            out = out.drop("__file", "__pos")
     return out
 
 
@@ -2872,7 +2912,8 @@ def snapshot_merge(
     tombstones applied, so the rewrite folds their deletes in.
 
     ``updates`` must be unique per key and schema-identical to the table.
-    The driver reads only the updates' key bounds (one tiny aggregate).
+    Its distinct keys are written once, to the merge's key file; the
+    driver reads the key bounds from that file's parquet footer.
     ``extra`` rides inside the atomic publish exactly as in
     ``snapshot_commit`` (e.g. a streaming sink's ``last_batch_id``).
     """
@@ -2886,20 +2927,27 @@ def snapshot_merge(
         raise ValueError("snapshot_merge: updates schema differs from table schema")
     from pyspark.sql import functions as F
 
-    lo, hi = updates.agg(F.min(key), F.max(key)).first()
+    # Record the merged KEYS first (O(keys) bytes, own flat dir so
+    # expire's commit-dir walk stays single-level): the change feed
+    # replays this COW rewrite as delete pre-image + insert post-image
+    # restricted to these keys. The file's footer gives the key bounds
+    # and count, and the rewrite anti-joins against it, so ``updates`` is
+    # evaluated twice — key file, rewrite. A NULL key matches no row in
+    # either of the merge's joins, so it bounds nothing and is not
+    # recorded.
+    mk_dirname = f"{uuid.uuid4().hex[:12]}-mk"
+    mk_files = _write_files(
+        updates.select(key).where(F.col(key).isNotNull()).distinct().coalesce(1),
+        root, mk_dirname,
+    )
+    key_range, n_keys = _footer_meta(os.path.join(root, mk_files[0]))
     commit_id = uuid.uuid4().hex[:12]
-    if lo is None:  # empty updates — metadata-only no-op commit
-        body = _inherit_maps(manifest, manifest["files"])
-        if manifest.get("bloom"):
-            body["bloom"] = manifest["bloom"]
-        if extra:
-            body.update(extra)
-        body.update(
-            mode="merge", commit_id=commit_id,
-            files=list(manifest["files"]),
-            n_files=manifest["n_files"], schema=manifest["schema"],
-        )
+    if not n_keys:  # empty updates — metadata-only no-op commit
+        shutil.rmtree(os.path.join(root, _DATA_DIR, mk_dirname))
+        body = _carry_body(manifest, "merge", commit_id, extra)
         return _publish(root, versions, body, commit_id, None)
+    # no footer range (e.g. a DECIMAL key): every file is a candidate
+    lo, hi = key_range.get(key, (None, None))
     key_ranges = _key_stats_for_merge(root, manifest, key)
     candidates, untouched = [], []
     for rel in manifest["files"]:
@@ -2909,24 +2957,12 @@ def snapshot_merge(
             candidates.append(rel)
     current = _read_pinned(spark, root, manifest, candidates)
     rewritten = current.join(
-        updates.select(key), key, "left_anti"
+        _read_delete_files(spark, root, mk_files), key, "left_anti"
     ).unionByName(updates)
     commit_id, new_files = _write_rewrite(rewritten, root, manifest)
     _enforce_constraints(
         spark, root, manifest, new_files,
-        [os.path.join(_DATA_DIR, commit_id)],
-    )
-    # Record the merged KEYS (O(keys) bytes, own flat dir so expire's
-    # commit-dir walk stays single-level): the change feed replays this
-    # COW rewrite as delete pre-image + insert post-image restricted to
-    # these keys, instead of failing on the file delta.
-    mk_dirname = f"{commit_id}-mk"
-    mk_dir = os.path.join(root, _DATA_DIR, mk_dirname)
-    updates.select(key).distinct().coalesce(1).write.mode("error").parquet(mk_dir)
-    mk_files = sorted(
-        os.path.join(_DATA_DIR, mk_dirname, name)
-        for name in os.listdir(mk_dir)
-        if name.endswith(".parquet") and not name.startswith(("_", "."))
+        [os.path.join(_DATA_DIR, d) for d in (commit_id, mk_dirname)],
     )
     files = untouched + new_files
     body = _inherit_maps(manifest, files)
@@ -3125,15 +3161,7 @@ def snapshot_merge_into(
     commit_id = uuid.uuid4().hex[:12]
 
     def _noop() -> dict:
-        body = _inherit_maps(manifest, manifest["files"])
-        if manifest.get("bloom"):
-            body["bloom"] = manifest["bloom"]
-        if extra:
-            body.update(extra)
-        body.update(
-            mode="merge", commit_id=commit_id, files=list(manifest["files"]),
-            n_files=manifest["n_files"], schema=manifest["schema"],
-        )
+        body = _carry_body(manifest, "merge", commit_id, extra)
         return _publish(root, versions, body, commit_id, None)
 
     if lo is None and not not_matched_by_source_delete:  # empty source
@@ -3231,14 +3259,7 @@ def snapshot_merge_into(
         spark, root, manifest, new_files,
         [os.path.join(_DATA_DIR, commit_id)],
     )
-    mk_dirname = f"{commit_id}-mk"
-    mk_dir = os.path.join(root, _DATA_DIR, mk_dirname)
-    affected_keys.coalesce(1).write.mode("error").parquet(mk_dir)
-    mk_files = sorted(
-        os.path.join(_DATA_DIR, mk_dirname, name)
-        for name in os.listdir(mk_dir)
-        if name.endswith(".parquet") and not name.startswith(("_", "."))
-    )
+    mk_files = _write_files(affected_keys.coalesce(1), root, f"{commit_id}-mk")
     files = untouched + new_files
     body = _inherit_maps(manifest, files)
     body["merge_info"] = {
@@ -3289,13 +3310,7 @@ def snapshot_delete(
             candidates.append(rel)
     commit_id = uuid.uuid4().hex[:12]
     if not candidates:  # nothing can match — metadata-only version bump
-        body = _inherit_maps(manifest, untouched)
-        if manifest.get("bloom"):
-            body["bloom"] = manifest["bloom"]
-        body.update(
-            mode="delete", commit_id=commit_id, files=untouched,
-            n_files=len(untouched), schema=manifest["schema"],
-        )
+        body = _carry_body(manifest, "delete", commit_id)
         return _publish(root, versions, body, commit_id, None)
     from pyspark.sql import functions as F
 
@@ -3357,8 +3372,9 @@ def snapshot_delete_mor(
     which the delete files become unreferenced and ``snapshot_expire``
     collects them. ``key_col`` must uniquely identify rows (a primary
     key): the anti-join removes ALL rows sharing a deleted key within the
-    applicable commits. Cost: one scan to find the keys, O(deleted keys)
-    bytes written, zero data files rewritten. ``extra`` metadata rides the
+    applicable commits. Cost: ONE scan, which finds the keys and writes
+    them (O(deleted keys) bytes), zero data files rewritten. ``extra``
+    metadata rides the
     tombstone commit's atomic publish (e.g. an index's stat update).
     """
     if extra and (bad := set(extra) & _RESERVED_KEYS):
@@ -3392,8 +3408,12 @@ def _publish_key_tombstone(
 ) -> dict:
     """Publish an equality-delete commit from an already-computed DataFrame
     of distinct key values: the shared tail of ``snapshot_delete_mor`` and
-    the CDC replay in ``snapshot_apply_changes``. Metadata-plus-delete-file
-    only; no data file is touched.
+    the CDC replay in ``snapshot_apply_changes`` and the stream sink.
+    Metadata-plus-delete-file only; no data file is touched. ``keys`` is
+    evaluated ONCE, by writing the delete file; the key count and bounds
+    come from that file's parquet footer, never a second pass over the
+    source. No keys: the file is removed and the commit carries no
+    tombstone.
 
     ``as_of_version`` pins the tombstone's SCOPE to the version the keys
     were computed against: if a concurrent commit moved the head since,
@@ -3409,39 +3429,23 @@ def _publish_key_tombstone(
             f"(now {versions[-1]}); recompute delete keys and retry"
         )
     manifest = _load_manifest(root, versions[-1])
-    from pyspark.sql import functions as F
-
-    krow = keys.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(key_col).alias("lo"),
-        F.max(key_col).alias("hi"),
-    ).first()
-    n_keys, kmin, kmax = krow["n"], krow["lo"], krow["hi"]
     commit_id = uuid.uuid4().hex[:12]
-    body = _inherit_maps(manifest, manifest["files"])
-    if manifest.get("bloom"):
-        body["bloom"] = manifest["bloom"]
-    if extra:
-        body.update(extra)
-    body.update(
-        mode="delete-mor", commit_id=commit_id, files=list(manifest["files"]),
-        n_files=manifest["n_files"], schema=manifest["schema"],
-    )
-    if n_keys:
-        delete_dir = os.path.join(root, _DATA_DIR, commit_id)
-        keys.coalesce(1).write.mode("error").parquet(delete_dir)
-        delete_files = sorted(
-            os.path.join(_DATA_DIR, commit_id, name)
-            for name in os.listdir(delete_dir)
-            if name.endswith(".parquet") and not name.startswith(("_", "."))
-        )
+    delete_files = _write_files(keys.coalesce(1), root, commit_id)
+    key_range, n_keys = _footer_meta(os.path.join(root, delete_files[0]))
+    kmin, kmax = key_range.get(key_col, (None, None))
+    body = _carry_body(manifest, "delete-mor", commit_id, extra)
+    if not n_keys:
+        shutil.rmtree(os.path.join(root, _DATA_DIR, commit_id))
+    else:
         # Scope the tombstone to commits whose ZONE RANGE on key_col can
         # contain any deleted key (footer min/max are conservative bounds
         # even when truncated). Commits provably key-disjoint never carry
         # the anti-join at read time — and a branch whose deletes only
         # touch its own appended commits stays rebase-publishable. A
-        # commit with no usable range (absent column, mixed types, NaN)
-        # is included: over-approximation is always safe.
+        # commit with no usable range (absent column, mixed types, NaN),
+        # or any commit when the delete file's footer has no range for
+        # the key (e.g. DECIMAL), is included: over-approximation is
+        # always safe.
         ranges = manifest.get("commit_ranges", {})
 
         def may_contain(cid: str) -> bool:
@@ -3479,9 +3483,11 @@ def snapshot_delete_positional(
     this records (file, row_index) addresses via the parquet reader's
     ``_metadata`` columns — no key column needed, exact rows only, so it
     works on tables with duplicate keys and conditions over any columns.
-    The commit rewrites NOTHING: one scan finds the matching positions,
-    O(deleted rows) address pairs land in a delete file, and reads apply
-    them as a broadcast anti-join on (file, row_index). Positional
+    The commit rewrites NOTHING: one scan writes the matching positions,
+    O(deleted rows) address pairs, to a delete file, and the per-file
+    counts come from that small file (no match: it is removed and the
+    commit carries no tombstone). Reads apply every positional tombstone
+    of a version as one broadcast anti-join on (file, row_index). Positional
     tombstones bind to the exact files they address: a rewrite
     (merge/COW-delete/compact) reads through the tombstones and then
     drops them with the files they covered, and rows in files appended
@@ -3501,25 +3507,18 @@ def snapshot_delete_positional(
     keys = src.where(F.expr(condition)).select(
         F.col("__file").alias("file"), F.col("__pos").alias("pos")
     )
-    rows = keys.groupBy("file").count().collect()
     commit_id = uuid.uuid4().hex[:12]
-    body = _inherit_maps(manifest, manifest["files"])
-    if manifest.get("bloom"):
-        body["bloom"] = manifest["bloom"]
-    body.update(
-        mode="delete-positional", commit_id=commit_id,
-        files=list(manifest["files"]), n_files=manifest["n_files"],
-        schema=manifest["schema"],
+    delete_files = _write_files(keys.coalesce(1), root, commit_id)
+    # one partition: the per-file count runs in one stage, no shuffle
+    rows = (
+        _read_delete_files(spark, root, delete_files, positional=True)
+        .coalesce(1).groupBy("file").count().collect()
     )
+    body = _carry_body(manifest, "delete-positional", commit_id)
     n_keys = sum(int(r["count"]) for r in rows)
-    if n_keys:
-        delete_dir = os.path.join(root, _DATA_DIR, commit_id)
-        keys.coalesce(1).write.mode("error").parquet(delete_dir)
-        delete_files = sorted(
-            os.path.join(_DATA_DIR, commit_id, name)
-            for name in os.listdir(delete_dir)
-            if name.endswith(".parquet") and not name.startswith(("_", "."))
-        )
+    if not n_keys:
+        shutil.rmtree(os.path.join(root, _DATA_DIR, commit_id))
+    else:
         body["tombstones"] = list(body.get("tombstones", [])) + [
             {
                 "kind": "positional",
@@ -4348,7 +4347,7 @@ def snapshot_update_where(
     publish. The change feed needs no new machinery: the commit's new
     tombstone emits the delete pre-images and its added files emit the
     insert post-images — exactly the UPDATE pair CDC expects. A
-    no-match UPDATE publishes nothing and returns
+    no-match UPDATE removes what it staged, publishes nothing and returns
     ``{"updated_rows": 0}``.
     """
     from pyspark.sql import functions as F
@@ -4374,16 +4373,6 @@ def snapshot_update_where(
         .persist()
     )
     try:
-        addr = matched.select(
-            F.col("__file").alias("file"), F.col("__pos").alias("pos")
-        )
-        per_file = addr.groupBy("file").count().collect()
-        n_rows = sum(int(r["count"]) for r in per_file)
-        if n_rows == 0:
-            return {
-                "updated_rows": 0, "version": versions[-1],
-                "committed": False,
-            }
         post = matched.select(
             *[
                 F.expr(set_exprs[c]).cast(types[c]).alias(c)
@@ -4392,26 +4381,36 @@ def snapshot_update_where(
                 for c in cols
             ]
         )
+        # the post-image write fills the cache; the delete vector is then
+        # written from it under its own dir (so no sidecar/commit
+        # enumeration can ever mistake it for a data file of this
+        # commit), and counted per file from that one small file
         commit_id, new_files = _write_rewrite(post, root, manifest)
-        rules = sorted((manifest.get("constraints") or {}).items())
-        if rules:
-            violations = _staged_violations(spark, root, new_files, rules)
-            if violations:
-                shutil.rmtree(
-                    os.path.join(root, _DATA_DIR, commit_id),
-                    ignore_errors=True,
-                )
-                raise SnapshotExpectationError(violations)
-        # the delete vector lives under its own dir so no sidecar/commit
-        # enumeration can ever mistake it for a data file of this commit
         vec_id = uuid.uuid4().hex[:12]
-        vec_dir = os.path.join(root, _DATA_DIR, vec_id)
-        addr.coalesce(1).write.mode("error").parquet(vec_dir)
-        vec_files = sorted(
-            os.path.join(_DATA_DIR, vec_id, name)
-            for name in os.listdir(vec_dir)
-            if name.endswith(".parquet") and not name.startswith(("_", "."))
+        vec_files = _write_files(
+            matched.select(
+                F.col("__file").alias("file"), F.col("__pos").alias("pos")
+            ).coalesce(1),
+            root, vec_id,
         )
+        per_file = (
+            _read_delete_files(spark, root, vec_files, positional=True)
+            .coalesce(1).groupBy("file").count().collect()
+        )
+        n_rows = sum(int(r["count"]) for r in per_file)
+        rules = sorted((manifest.get("constraints") or {}).items())
+        violations = (
+            _staged_violations(spark, root, new_files, rules) if n_rows else {}
+        )
+        if not n_rows or violations:
+            for d in (commit_id, vec_id):
+                shutil.rmtree(os.path.join(root, _DATA_DIR, d), ignore_errors=True)
+            if violations:
+                raise SnapshotExpectationError(violations)
+            return {
+                "updated_rows": 0, "version": versions[-1],
+                "committed": False,
+            }
         sidecar = _new_sidecar(
             spark, root, new_files, manifest.get("bloom"),
             manifest.get("sketch"), manifest.get("sums"),
@@ -4530,9 +4529,9 @@ def snapshot_table_changes(
         if removed and cur.get("mode") == "merge" and mi and prev is not None:
             # key files are written distinct, and a left-semi probe dedups
             # anyway — no .distinct() here, it would shuffle the tiny side
-            keys = spark.read.parquet(
-                *[os.path.join(root, f) for f in mi["key_files"]]
-            ).select(mi["key_col"])
+            keys = _read_delete_files(spark, root, mi["key_files"]).select(
+                mi["key_col"]
+            )
             pre = _read_pinned(spark, root, prev, removed).join(
                 F.broadcast(keys), mi["key_col"], "left_semi"
             )
@@ -4574,8 +4573,8 @@ def snapshot_table_changes(
             if prev is None:
                 continue
             if t.get("kind") == "positional":
-                addr = spark.read.parquet(
-                    *[os.path.join(root, f) for f in t["files"]]
+                addr = _read_delete_files(
+                    spark, root, t["files"], positional=True
                 )
                 src_rows = _read_pinned(
                     spark, root, prev, t["applies"], with_position=True
@@ -4587,9 +4586,9 @@ def snapshot_table_changes(
                     how="left_semi",
                 ).drop("__file", "__pos")
             else:
-                keys = spark.read.parquet(
-                    *[os.path.join(root, f) for f in t["files"]]
-                ).select(t["key_col"])
+                keys = _read_delete_files(spark, root, t["files"]).select(
+                    t["key_col"]
+                )
                 cids = set(t["commits"])
                 targets = [
                     r for r in cur["files"] if _commit_of(r) in cids
@@ -5189,8 +5188,8 @@ def snapshot_apply_changes(
                     "snapshot_apply_changes: source merge keyed by "
                     f"{mi['key_col']!r}, dst keyed by {key_col!r}"
                 )
-            keys = spark.read.parquet(
-                *[os.path.join(src_root, f) for f in mi["key_files"]]
+            keys = _read_delete_files(
+                spark, src_root, mi["key_files"]
             ).select(key_col).distinct()
             rows = _read_pinned(spark, src_root, cur, added).join(
                 F.broadcast(keys), key_col, "left_semi"
@@ -5267,8 +5266,8 @@ def snapshot_apply_changes(
             if not snapshot_versions(dst_root):
                 continue  # nothing downstream to delete from yet
             if t.get("kind") == "positional":
-                addr = spark.read.parquet(
-                    *[os.path.join(src_root, f) for f in t["files"]]
+                addr = _read_delete_files(
+                    spark, src_root, t["files"], positional=True
                 )
                 src_rows = _read_pinned(
                     spark, src_root, cur, t["applies"],
@@ -5290,8 +5289,8 @@ def snapshot_apply_changes(
                         "snapshot_apply_changes: source tombstone keyed by "
                         f"{t['key_col']!r}, dst keyed by {key_col!r}"
                     )
-                keys = spark.read.parquet(
-                    *[os.path.join(src_root, f) for f in t["files"]]
+                keys = _read_delete_files(
+                    spark, src_root, t["files"]
                 ).select(key_col).distinct()
             _publish_key_tombstone(
                 dst_root, keys, key_col, t.get("predicate", "<cdc replay>")
@@ -5309,13 +5308,8 @@ def snapshot_apply_changes(
     if dvs and latest > applied:
         dm = _load_manifest(dst_root, dvs[-1])
         commit_id = uuid.uuid4().hex[:12]
-        body = _inherit_maps(dm, dm["files"])
-        if dm.get("bloom"):
-            body["bloom"] = dm["bloom"]
-        body.update(
-            mode="cdc-stamp", commit_id=commit_id,
-            files=list(dm["files"]), n_files=dm["n_files"],
-            schema=dm["schema"], cdc_applied_version=latest,
+        body = _carry_body(
+            dm, "cdc-stamp", commit_id, {"cdc_applied_version": latest}
         )
         _publish(dst_root, dvs, body, commit_id, None)
     return {

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from airflow_postgres_csv_spark.operators.snapshots import (
     snapshot_commit,
     snapshot_delete_mor,
+    snapshot_delete_positional,
     snapshot_read,
     snapshot_scan,
 )
@@ -35,6 +36,32 @@ def test_mor_tombstones_apply_as_broadcast_anti_join(spark, tmp_path):
     # the fact side is never shuffled: zero shuffle exchanges in the read
     assert I.num_shuffles(out) == 0, plan
     assert out.count() == 5000 - 50
+
+
+def test_positional_tombstones_apply_as_one_anti_join(spark, tmp_path):
+    """Two positional tombstones (on files of two commits) plus one
+    equality tombstone: the positional delete files are read as ONE
+    (file, pos) relation — exactly one broadcast anti-join on
+    (__file, __pos) — beside the equality anti-join, with no shuffle."""
+    import re
+
+    root = str(tmp_path / "snap")
+    snapshot_commit(_df(spark, 0, 5000).coalesce(2), root)
+    snapshot_commit(_df(spark, 5000, 6000).coalesce(1), root)
+    snapshot_delete_positional(spark, root, "id % 100 = 0")
+    snapshot_delete_positional(spark, root, "id % 100 = 1")
+    snapshot_delete_mor(spark, root, "id % 100 = 2", key_col="id")
+    out = snapshot_read(spark, root)
+    plan = I.physical_plan(out)
+    pos_joins = re.findall(
+        r"BroadcastHashJoin \[__file#\d+, __pos#\d+L\], "
+        r"\[file#\d+, pos#\d+L\], LeftAnti",
+        plan,
+    )
+    assert len(pos_joins) == 1, plan
+    assert plan.count("LeftAnti") == 2, plan
+    assert I.num_shuffles(out) == 0, plan
+    assert out.count() == 6000 - 3 * 60
 
 
 def test_pruned_scan_residual_filter_reaches_parquet(spark, tmp_path):
