@@ -66,8 +66,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from airflow_postgres_csv_spark.operators.snapshots import (
+    _KEYS,
+    _MAX_STAMPS,
     SnapshotConflictError,
+    _commit_of,
     _load_manifest,
+    _next_body,
     _publish,
     snapshot_clone,
     snapshot_commit,
@@ -150,24 +154,6 @@ def snapshot_drop_branch(root: str, name: str) -> None:
     shutil.rmtree(_branch_root(root, name))
 
 
-# Branch-head manifest keys the publish carries onto main verbatim
-# (fast-forward) — the same inheritable set _inherit_maps maintains.
-_CARRY_KEYS = (
-    "files", "n_files", "schema", "commit_schemas", "commit_ranges",
-    "tombstones", "sidecars", "bloom", "defaults", "merge_info",
-    "commit_sizes", "sketch_commits", "small_bytes",
-    "partition_specs", "commit_partitions", "partition_spec",
-    "column_history", "retired_columns", "constraints",
-    "sums", "commit_sums", "sort_order", "sorted_commits",
-    "last_batch_id", "cdc_applied_version", "ivm_applied_version",
-    "ivm_applied_a", "ivm_applied_b",
-    "sketch",
-    # frozen index/model metadata: a published index branch (streaming
-    # ANN/BM25 sinks staged through WAP) must keep serving on main
-    "ann_index", "text_index", "classifier",
-)
-
-
 def _link_back(root: str, broot: str, bm: dict, added: list[str]) -> None:
     """Hardlink the branch's new data / delete / sidecar files into the
     table root (idempotent — existing names are base files or retries)."""
@@ -192,13 +178,13 @@ def _link_back(root: str, broot: str, bm: dict, added: list[str]) -> None:
 
 
 def _rebase_body(
-    base_m: dict, bm: dict, head_m: dict, added: list[str], removed: list[str]
-) -> tuple[dict, dict]:
+    base_m: dict, bm: dict, head_m: dict, added: list[str], removed: list[str],
+    commit_id: str,
+) -> dict:
     """Replay an APPEND-ONLY branch onto a moved main head: returns the
-    merged manifest body + pack hints, or raises ``SnapshotConflictError``
-    on any change that could interleave with main's concurrent commits
+    merged manifest body, or raises ``SnapshotConflictError`` on any
+    change that could interleave with main's concurrent commits
     (Iceberg's snapshot-isolation validation, conservatively)."""
-    from airflow_postgres_csv_spark.operators.snapshots import _commit_of
 
     def conflict(why: str):
         raise SnapshotConflictError(
@@ -249,50 +235,40 @@ def _rebase_body(
             conflict("the branch deleted rows from fork-point commits "
                      "that main concurrently rewrote or dropped")
         new_tombs.append(t)
-    body = {k: head_m[k] for k in _CARRY_KEYS if k in head_m}
-    body["files"] = list(head_m["files"]) + list(added)
-    body["n_files"] = len(body["files"])
-    body["tombstones"] = list(head_m.get("tombstones", [])) + new_tombs
-    bschema = bm.get("schema")
-    for cid in new_cids:
-        body.setdefault("sidecars", {})
-        body.setdefault("commit_ranges", {})
-        body.setdefault("commit_schemas", {})
-        if cid in bm.get("sidecars", {}):
-            body["sidecars"][cid] = bm["sidecars"][cid]
-        if cid in bm.get("commit_ranges", {}):
-            body["commit_ranges"][cid] = bm["commit_ranges"][cid]
-        # resolve the branch's schema elision explicitly; _publish
-        # re-elides against MAIN's (possibly evolved) table schema
-        body["commit_schemas"][cid] = bm.get("commit_schemas", {}).get(
-            cid, bschema
-        )
-        for key in ("commit_sizes", "commit_partitions", "commit_sums"):
-            if cid in bm.get(key, {}):
-                body.setdefault(key, {})[cid] = bm[key][cid]
-        if cid in bm.get("sketch_commits", []):
-            body.setdefault("sketch_commits", [])
-            body["sketch_commits"].append(cid)
-        # sorted-layout stamps follow their commits, but only when the
-        # branch wrote under the SAME declared order main carries —
-        # a branch that re-declared a different order sorted by keys
-        # main does not recognize
-        if cid in bm.get("sorted_commits", []) and head_m.get(
+    body = _next_body(
+        head_m, list(head_m["files"]) + list(added), mode="publish_branch",
+        commit_id=commit_id, schema=head_m["schema"],
+    )
+    body["tombstones"] += new_tombs
+    # the branch's new commits bring their own per-commit entries; the
+    # branch's schema elision resolves explicitly (_publish re-elides
+    # against MAIN's, possibly evolved, table schema)
+    body["commit_schemas"].update(
+        {c: bm.get("commit_schemas", {}).get(c, bm.get("schema")) for c in new_cids}
+    )
+    for key, (carry, _) in _KEYS.items():
+        if carry != "commits" or key in ("commit_schemas", "tombstones"):
+            continue
+        if key == "sorted_commits" and head_m.get("sort_order") != bm.get(
             "sort_order"
-        ) == bm.get("sort_order"):
-            body["sorted_commits"] = sorted(
-                set(body.get("sorted_commits", [])) | {cid}
-            )
+        ):
+            # a branch that re-declared the order sorted by keys main
+            # does not recognize
+            continue
+        val = bm.get(key) or ()
+        if not (mine := [c for c in new_cids if c in val]):
+            continue
+        if isinstance(val, dict):
+            body[key] = {**body.get(key, {}), **{c: val[c] for c in mine}}
+        else:
+            body[key] = sorted(set(body.get(key, [])) | set(mine))
     # monotone stamps merge by max: the streaming WAP sink threads its
     # batch id through the branch commit, and main may carry older stamps
-    for stamp in ("last_batch_id", "cdc_applied_version",
-                  "ivm_applied_version", "ivm_applied_a",
-                  "ivm_applied_b"):
+    for stamp in _MAX_STAMPS:
         vals = [m[stamp] for m in (head_m, bm) if m.get(stamp) is not None]
         if vals:
             body[stamp] = max(vals)
-    hints = dict(dict.get(bm, "commit_files") or {})
-    return body, hints
+    return body
 
 
 def _tomb_key(t: dict) -> str:
@@ -365,24 +341,31 @@ def snapshot_publish_branch(
             )
         base_m = base_m_cache
         added, removed = snapshot_files_diff(broot, base_m, bm)
+        commit_id = uuid.uuid4().hex[:12]
         if fast_forward:
-            body = {k: bm[k] for k in _CARRY_KEYS if k in bm}
-            hints = dict.get(bm, "commit_files")
+            # main takes the branch head's exact state, including the
+            # last branch commit's merge record
+            body = _next_body(
+                bm, bm["files"], mode="publish_branch", commit_id=commit_id,
+                schema=bm["schema"],
+            )
+            if "merge_info" in bm:
+                body["merge_info"] = bm["merge_info"]
         else:
             head_m = _load_manifest(root, versions[-1])
-            body, hints = _rebase_body(base_m, bm, head_m, added, removed)
+            body = _rebase_body(base_m, bm, head_m, added, removed, commit_id)
         _link_back(root, broot, bm, added)
-        commit_id = uuid.uuid4().hex[:12]
         body.update(
-            mode="publish_branch",
-            commit_id=commit_id,
             branch=name,
             branch_base=base,
             branch_commits=len(bversions) - 1,
             rebased=not fast_forward,
         )
         try:
-            out = _publish(root, versions, body, commit_id, None, pack_hints=hints)
+            out = _publish(
+                root, versions, body, commit_id, None,
+                pack_hints=dict.get(bm, "commit_files"),
+            )
             break
         except SnapshotConflictError:
             if retries <= 0:

@@ -63,7 +63,7 @@ _CATALOG_DIR = "_catalog"
 
 # Sticky high-water stamps (e.g. a streaming sink's exactly-once batch
 # gate) are inherited onto every later catalog version the way
-# snapshots._inherit_maps carries table-level keys: without inheritance,
+# snapshots._next_body carries table-level keys: without inheritance,
 # >= keep_last interleaved pin-only transactions would let catalog_expire
 # delete the newest carrier and silently reopen the gate.
 _STICKY_STAMP_KEYS = ("last_batch_id",)

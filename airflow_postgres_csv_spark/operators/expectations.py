@@ -292,8 +292,8 @@ def catalog_write_with_expectations(
         dests.append((quarantine[0], quarantine[1], quarantined))
 
     state = C.catalog_state(catalog_root)
-    # txn_batch_id is deliberately NOT in snapshots._inherit_maps' sticky
-    # key list, so it identifies the exact commit this batch published:
+    # txn_batch_id is deliberately NOT carried (snapshots._KEYS declares
+    # it per-commit), so it identifies the exact commit this batch published:
     # an out-of-band append stacked on top of a stamped commit inherits
     # last_batch_id but NOT txn_batch_id, and the adoption probe below
     # correctly raises SnapshotConflictError for it instead of silently

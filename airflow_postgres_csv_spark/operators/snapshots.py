@@ -87,18 +87,53 @@ def new_sorted_layout(
 # key. "\x00" cannot collide with a real column name.
 _STATS_V_KEY = "\x00stats_v"
 
-# Keys the engine assembles itself; ``extra`` metadata may not clobber them.
-_RESERVED_KEYS = frozenset(
-    {
-        "version", "parent", "mode", "commit_id", "files", "n_files",
-        "schema", "commit_schemas", "sidecars", "commit_ranges",
-        "tombstones", "bloom", "defaults", "partition_spec", "merge_info",
-        "delete_info", "committed_at", "commit_files", "sketch",
-        "commit_sizes", "sketch_commits", "small_bytes",
-        "partition_specs", "commit_partitions", "constraints",
-        "sums", "commit_sums", "sort_order", "sorted_commits",
-    }
-)
+# Every manifest key, declared once: how the next version carries it, and
+# whether a caller's ``extra=`` may set it. Carry policies:
+#   None       structural or per-commit: assembled anew by each writer
+#   "sticky"   table config or stamp, copied verbatim
+#   "commits"  per-commit map or list, narrowed to the commits that remain
+#   "max"      monotone stamp: sticky, merged by max on a branch rebase,
+#              dropped by a clone (a fresh checkpoint would otherwise see
+#              its batches as replays)
+# Keys not declared here (caller annotations) are never carried.
+_KEYS: dict[str, tuple[str | None, bool]] = {
+    **dict.fromkeys(
+        ("version", "parent", "committed_at", "mode", "commit_id", "files",
+         "n_files", "schema", "commit_files", "merge_info", "delete_info",
+         "alter", "rolled_back_to", "cloned_from", "branch", "branch_base",
+         "branch_commits", "rebased"),
+        (None, False),
+    ),
+    **dict.fromkeys(
+        ("compaction_of", "classifier_model", "txn_batch_id"), (None, True)
+    ),
+    **dict.fromkeys(
+        ("bloom", "defaults", "partition_spec", "partition_specs", "sketch",
+         "sums", "small_bytes", "sort_order", "column_history",
+         "retired_columns", "constraints"),
+        ("sticky", False),
+    ),
+    # frozen index/model metadata: a row-preserving rewrite keeps serving
+    # the same logical index; a rebuild replaces it through ``extra``
+    **dict.fromkeys(("ann_index", "text_index", "classifier"), ("sticky", True)),
+    **dict.fromkeys(
+        ("last_batch_id", "cdc_applied_version", "ivm_applied_version",
+         "ivm_applied_a", "ivm_applied_b"),
+        ("max", True),
+    ),
+    # an entry describes its commit's FULL original file set; a COW subset
+    # keeps it (readers consult the subset marker), a stamp stays valid
+    # for the surviving rows of a stamped commit
+    **dict.fromkeys(
+        ("commit_schemas", "sidecars", "commit_ranges", "tombstones",
+         "commit_partitions", "commit_sizes", "commit_sums",
+         "sketch_commits", "optimized_commits", "sorted_commits"),
+        ("commits", False),
+    ),
+}
+_CARRIED = tuple(k for k, (carry, _) in _KEYS.items() if carry)
+_MAX_STAMPS = tuple(k for k, (carry, _) in _KEYS.items() if carry == "max")
+_RESERVED_KEYS = frozenset(k for k, (_, settable) in _KEYS.items() if not settable)
 
 # The size-rollup's recorded "small file" threshold: ¼ of the advisor's
 # default 128 MiB compaction target. Per-commit ``commit_sizes`` entries
@@ -584,111 +619,101 @@ def _bloom_might_contain(words: dict, value, m: int, k: int) -> bool:
     return True
 
 
-def _inherit_maps(prev: dict | None, files: list[str]) -> dict:
-    """Carry per-commit metadata (written schemas, sidecar pointers,
-    commit-level ranges) for the commits still referenced by ``files``,
-    tombstones narrowed to those commits (dropped when none remain), and
-    the sticky table-level keys (column defaults, partition spec, the
-    streaming sink's high-water batch id).
-
-    Written schemas are materialized EXPLICITLY for every inherited
-    commit (an absent entry in ``prev`` means "= prev's table schema" —
-    the storage elision ``_publish`` applies), so a commit that CHANGES
-    the table schema re-pins every older commit to the schema it was
-    actually written under; same-schema commits re-elide on publish."""
-    if prev is None:
-        return {"commit_schemas": {}, "sidecars": {}, "commit_ranges": {}, "tombstones": []}
-    cids = {_commit_of(rel) for rel in files}
-    prev_cs = prev.get("commit_schemas", {})
-    prev_schema = prev.get("schema")
-    out: dict = {
-        "commit_schemas": {
-            c: s
-            for c in cids
-            if (s := prev_cs.get(c, prev_schema)) is not None
-        },
-        "sidecars": {c: p for c, p in prev.get("sidecars", {}).items() if c in cids},
-        "commit_ranges": {
-            c: r for c, r in prev.get("commit_ranges", {}).items() if c in cids
-        },
-    }
-    tombstones = []
-    fileset = set(files)
-    for t in prev.get("tombstones", []):
-        if t.get("kind") == "positional":
-            applies = sorted(set(t["applies"]) & fileset)
-            if applies:
-                tombstones.append({**t, "applies": applies})
-        else:
-            applies = sorted(set(t["commits"]) & cids)
-            if applies:
-                tombstones.append({**t, "commits": applies})
-    out["tombstones"] = tombstones
-    for key in ("last_batch_id", "defaults", "partition_spec",
-                "cdc_applied_version", "ivm_applied_version",
-                "ivm_applied_a", "ivm_applied_b", "sketch",
-                "small_bytes", "partition_specs", "column_history",
-                "retired_columns", "constraints", "sums", "sort_order",
-                # persisted-index / model metadata: a maintenance commit
-                # (compact, incremental OPTIMIZE, COW delete/merge,
-                # rollback) is a row-preserving rewrite of the same
-                # logical index — losing the frozen model would break
-                # every later serve; rebuilds still replace it because
-                # the caller's `extra` is applied after inheritance
-                "ann_index", "text_index", "classifier"):
-        if key in prev:
-            out[key] = prev[key]
-    if "commit_partitions" in prev:
-        # per-commit partition summaries follow their commits; for a
-        # COW-retained SUBSET the full-commit summary remains a valid
-        # over-approximation (pruning keeps extra files, never drops)
-        out["commit_partitions"] = {
-            c: v for c, v in prev["commit_partitions"].items() if c in cids
-        }
-    if "commit_sizes" in prev:
-        # per-commit (n_files, total_bytes, n_small) rollups follow their
-        # commits; an entry always describes the commit's FULL original
-        # file set (readers consult the subset marker before trusting it)
-        out["commit_sizes"] = {
-            c: v for c, v in prev["commit_sizes"].items() if c in cids
-        }
-    if "commit_sums" in prev:
-        # same full-set contract as commit_sizes: subset markers gate use
-        out["commit_sums"] = {
-            c: v for c, v in prev["commit_sums"].items() if c in cids
-        }
-    if "sketch_commits" in prev:
-        out["sketch_commits"] = [c for c in prev["sketch_commits"] if c in cids]
-    if "optimized_commits" in prev:
-        # clustered-commit stamps survive appends/merges; narrowed to the
-        # commits still referenced (a commit whose files all left the
-        # table no longer needs the stamp)
-        kept = [c for c in prev["optimized_commits"] if c in cids]
-        if kept:
-            out["optimized_commits"] = kept
-    if "sorted_commits" in prev:
-        # same contract as optimized_commits: a COW rewrite that keeps a
-        # SUBSET of a sorted commit keeps rows sorted — the stamp survives
-        kept = [c for c in prev["sorted_commits"] if c in cids]
-        if kept:
-            out["sorted_commits"] = kept
-    return out
+def _check_extra(extra: dict | None) -> None:
+    """Refuse caller metadata that would override an engine-owned key."""
+    if extra and (bad := set(extra) & _RESERVED_KEYS):
+        raise ValueError(f"extra metadata may not override reserved keys: {sorted(bad)}")
 
 
-def _carry_body(
-    manifest: dict, mode: str, commit_id: str, extra: dict | None = None
+def _head(root: str) -> tuple[list[int], dict]:
+    """The committed versions and the head manifest of a non-empty root."""
+    versions = snapshot_versions(root)
+    if not versions:
+        raise FileNotFoundError(f"no snapshot versions at {root}")
+    return versions, _load_manifest(root, versions[-1])
+
+
+def _next_body(
+    prev: dict | None,
+    files: list[str],
+    *,
+    mode: str,
+    commit_id: str,
+    schema: str,
+    new_files: list[str] = (),
+    sidecar: dict | None = None,
+    extra: dict | None = None,
+    specs: list | None = None,
+    spec: list | None = None,
 ) -> dict:
-    """Body of a commit that keeps ``manifest``'s file list (a tombstone
-    or metadata-only commit): per-commit maps and the Bloom config are
-    carried, ``extra`` applies beneath the reserved keys."""
-    body = _inherit_maps(manifest, manifest["files"])
-    if manifest.get("bloom"):
-        body["bloom"] = manifest["bloom"]
+    """The body of the next manifest over ``files`` — the one assembly
+    every snapshot writer publishes through.
+
+    ``prev``'s keys carry as ``_KEYS`` declares: sticky ones verbatim,
+    per-commit ones narrowed to the commits ``files`` still references
+    (tombstones to the commits or files they apply to, dropped when none
+    remain). Written schemas are materialized EXPLICITLY for every
+    inherited commit (an absent entry in ``prev`` means "= prev's table
+    schema" — the storage elision ``_publish`` applies), so a commit that
+    CHANGES the table schema re-pins every older commit to the schema it
+    was actually written under; same-schema commits re-elide on publish.
+
+    ``extra`` (checked against the reserved keys) applies beneath the
+    structural keys. ``new_files`` — the commit's own data files, whose
+    zone maps are in ``sidecar`` — get their written schema and
+    commit-level range; when the sidecar holds faithful partition tuples
+    the commit also gets its partition rollup, under ``spec`` (default:
+    the latest) of the history ``specs`` (default: ``prev``'s)."""
+    _check_extra(extra)
+    body: dict = {
+        "commit_schemas": {}, "sidecars": {}, "commit_ranges": {}, "tombstones": [],
+    }
+    if prev is not None:
+        cids = {_commit_of(rel) for rel in files}
+        fileset = set(files)
+        for key in _CARRIED:
+            if key not in prev:
+                continue
+            val = prev[key]
+            if _KEYS[key][0] != "commits":
+                body[key] = val
+            elif key == "tombstones":
+                for t in val:
+                    field, live = (
+                        ("applies", fileset) if t.get("kind") == "positional"
+                        else ("commits", cids)
+                    )
+                    if applies := sorted(set(t[field]) & live):
+                        body["tombstones"].append({**t, field: applies})
+            elif isinstance(val, dict):
+                body[key] = {c: v for c, v in val.items() if c in cids}
+            elif kept := [c for c in val if c in cids]:
+                body[key] = kept
+        prev_cs = prev.get("commit_schemas", {})
+        body["commit_schemas"] = {
+            c: s for c in cids if (s := prev_cs.get(c, prev.get("schema"))) is not None
+        }
     body.update(extra or {})
     body.update(
-        mode=mode, commit_id=commit_id, files=list(manifest["files"]),
-        n_files=manifest["n_files"], schema=manifest["schema"],
+        mode=mode, commit_id=commit_id, files=list(files), n_files=len(files),
+        schema=schema,
     )
+    if specs:
+        body["partition_specs"] = specs
+    if new_files:
+        body["commit_schemas"][commit_id] = schema
+        body["commit_ranges"][commit_id] = _merge_ranges(sidecar["stats"])
+        if "partitions" in sidecar:
+            from airflow_postgres_csv_spark.operators import partitioning as P
+
+            specs = body["partition_specs"]
+            spec = spec or specs[-1]
+            body.setdefault("commit_partitions", {})[commit_id] = {
+                "s": len(specs) - 1 - specs[::-1].index(spec),
+                "f": P.commit_partition_summary(
+                    spec, [v for v in sidecar["partitions"].values() if v is not None]
+                ),
+            }
     return body
 
 
@@ -783,8 +808,7 @@ def snapshot_commit(
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    if extra and (bad := set(extra) & _RESERVED_KEYS):
-        raise ValueError(f"extra metadata may not override reserved keys: {sorted(bad)}")
+    _check_extra(extra)
     versions = snapshot_versions(root)
     if expected_head is not None and (versions[-1] if versions else 0) != expected_head:
         # the caller derived this commit from a head that is no longer
@@ -922,13 +946,15 @@ def snapshot_commit(
             if (prev and mode == "append")
             else new_files
         )
-        body = _inherit_maps(prev, files)
-        if bloom_cfg:
-            body["bloom"] = bloom_cfg
-        if sketch_cfg:
-            body["sketch"] = sketch_cfg
-        if sums_cfg:
-            body["sums"] = sums_cfg
+        body = _next_body(
+            prev, files, mode=mode, commit_id=commit_id, schema=schema_json,
+            new_files=new_files, sidecar=sidecar, extra=extra,
+            specs=specs, spec=spec,
+        )
+        for key, cfg in (("bloom", bloom_cfg), ("sketch", sketch_cfg),
+                         ("sums", sums_cfg)):
+            if cfg:
+                body[key] = cfg
         if so:
             body["sort_order"] = so
             if order_changed:
@@ -943,25 +969,6 @@ def snapshot_commit(
             body["defaults"] = {**body.get("defaults", {}), **column_defaults}
         if partition_by:
             body["partition_spec"] = list(partition_by)
-        if extra:
-            body.update(extra)
-        body.update(
-            mode=mode, commit_id=commit_id, files=files, n_files=len(files),
-            schema=schema_json,
-        )
-        if specs:
-            body["partition_specs"] = specs
-        if new_files:
-            body["commit_schemas"][commit_id] = schema_json
-            body["commit_ranges"][commit_id] = _merge_ranges(sidecar["stats"])
-            if spec:
-                tuples = [
-                    v for v in sidecar["partitions"].values() if v is not None
-                ]
-                body.setdefault("commit_partitions", {})[commit_id] = {
-                    "s": len(specs) - 1 - specs[::-1].index(spec),
-                    "f": P.commit_partition_summary(spec, tuples),
-                }
         try:
             return _publish(
                 root, versions, body, commit_id, sidecar if new_files else None
@@ -1133,14 +1140,10 @@ def snapshot_commit_staged(
             if (prev and mode == "append")
             else list(new_files)
         )
-        body = _inherit_maps(prev, files)
-        body.update(
-            mode=mode, commit_id=commit_id, files=files, n_files=len(files),
-            schema=schema_json,
+        body = _next_body(
+            prev, files, mode=mode, commit_id=commit_id, schema=schema_json,
+            new_files=new_files, sidecar=sidecar,
         )
-        if new_files:
-            body["commit_schemas"][commit_id] = schema_json
-            body["commit_ranges"][commit_id] = _merge_ranges(sidecar["stats"])
         try:
             return _publish(
                 root, versions, body, commit_id, sidecar if new_files else None
@@ -1543,10 +1546,7 @@ def snapshot_sketch_backfill(
     represent the live rows; compaction covers them. Cost: one scan of
     exactly the unsketched commits' files; idempotent (a second call
     publishes nothing)."""
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    manifest = _load_manifest(root, versions[-1])
+    versions, manifest = _head(root)
     cfg = manifest.get("sketch")
     if cols:
         cfg = {"cols": sorted(set(cols) | set((cfg or {}).get("cols", [])))}
@@ -1591,7 +1591,10 @@ def snapshot_sketch_backfill(
         out["backfilled_commits"] = 0
         return out
     commit_id = uuid.uuid4().hex[:12]
-    body = _carry_body(manifest, "sketch-backfill", commit_id)
+    body = _next_body(
+        manifest, manifest["files"], mode="sketch-backfill",
+        commit_id=commit_id, schema=manifest["schema"],
+    )
     body["sketch"] = cfg
     body["sidecars"] = new_sidecars
     body["sketch_commits"] = sorted(
@@ -1660,7 +1663,9 @@ def _publish(
     pack_hints: dict | None = None,
 ) -> dict:
     """Atomically publish the next manifest (writing the commit's stats
-    sidecar first, so the pointer never dangles).
+    sidecar first, so the pointer never dangles). ``body`` comes from
+    ``_next_body``; this adds the version lineage, commit time, packed
+    file markers and the size / sketch / sum rollups of the new commit.
 
     The on-disk root is O(commits): ``body``'s flat ``files`` list is
     packed into ``commit_files`` markers (full-commit groups become an
@@ -1689,7 +1694,7 @@ def _publish(
     # manifest's schema" (every reader resolves via .get(cid, schema)),
     # so the common all-one-schema table stores ZERO per-commit schema
     # copies — without this a 10^4-commit streaming table's root carries
-    # 10^4 identical schema strings. _inherit_maps re-materializes
+    # 10^4 identical schema strings. _next_body re-materializes
     # explicit entries whenever a commit evolves the table schema.
     if (cur_schema := manifest.get("schema")) is not None:
         manifest["commit_schemas"] = {
@@ -2030,7 +2035,7 @@ def snapshot_read(
 def _max_stamp(root: str, key: str, default: int = -1) -> int:
     """Newest-first scan for a sticky high-water stamp (``last_batch_id``,
     ``cdc_applied_version``, ``ivm_applied_version``): stop at the first
-    manifest carrying the key — inheritance (``_inherit_maps``) plus the
+    manifest carrying the key — inheritance (``_next_body``) plus the
     rollback max-guard make the stamp monotone along the chain, so the
     newest carrier IS the max. Manifests lacking the key (old-engine
     commits) are skipped, keeping the gate closed instead of reopening
@@ -2445,10 +2450,7 @@ def snapshot_compact(
     """
     import math
 
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    manifest = _load_manifest(root, versions[-1])
+    versions, manifest = _head(root)
     total = _pinned_bytes(root, manifest)  # metadata-only table sizing
     n_out = max(1, math.ceil(total / target_bytes))
     df = snapshot_read(spark, root)
@@ -2573,10 +2575,7 @@ def snapshot_compact_partition(
         _where_image,
     )
 
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    manifest = _load_manifest(root, versions[-1])
+    versions, manifest = _head(root)
     specs = manifest.get("partition_specs") or []
     if not where or any(v is None for v in where.values()):
         raise ValueError("where: non-NULL equality values required")
@@ -2657,41 +2656,23 @@ def snapshot_compact_partition(
         partition_cols=P.transform_columns(spec, df.schema),
         cluster_by=[F.col(c) for c in so] if so else None,
     )
-    files = untouched + new_files
-    body = _inherit_maps(manifest, files)
-    if manifest.get("bloom"):
-        body["bloom"] = manifest["bloom"]
-    kept_cids = {_commit_of(rel) for rel in untouched}
-    sorted_set = set(manifest.get("sorted_commits", [])) & kept_cids
-    if so:
-        sorted_set.add(commit_id)
-    if sorted_set:
-        body["sorted_commits"] = sorted(sorted_set)
-    opt_set = set(manifest.get("optimized_commits", [])) & kept_cids
-    if opt_set:
-        body["optimized_commits"] = sorted(opt_set)
-    body.update(
-        mode="overwrite", commit_id=commit_id, files=files,
-        n_files=len(files), schema=manifest["schema"],
-        compaction_of=versions[-1],
-    )
-    body["commit_schemas"][commit_id] = manifest["schema"]
     sidecar = _new_sidecar(
         spark, root, new_files, manifest.get("bloom"),
         manifest.get("sketch"), manifest.get("sums"),
     )
-    body["commit_ranges"][commit_id] = _merge_ranges(sidecar["stats"])
     sidecar["partitions"], sidecar["tuples_v"] = P.faithful_partitions(
         spec, df.schema, new_files
     )
-    body.setdefault("commit_partitions", {})[commit_id] = {
-        "s": len(specs) - 1,
-        "f": P.commit_partition_summary(
-            spec,
-            [v for v in sidecar["partitions"].values() if v is not None],
-        ),
-    }
-    out = _publish(root, versions, body, commit_id, sidecar)
+    body = _next_body(
+        manifest, untouched + new_files, mode="overwrite", commit_id=commit_id,
+        schema=manifest["schema"], new_files=new_files, sidecar=sidecar,
+        extra={"compaction_of": versions[-1]},
+    )
+    if so:
+        body["sorted_commits"] = sorted(
+            set(body.get("sorted_commits", [])) | {commit_id}
+        )
+    out = _publish(root, versions, body, commit_id, sidecar if new_files else None)
     out["files_rewritten"] = len(matched)
     out["files_kept"] = len(untouched)
     return out
@@ -2748,12 +2729,9 @@ def snapshot_optimize_incremental(
         zorder_value,
     )
 
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
+    versions, manifest = _head(root)
     if curve not in ("morton", "hilbert"):
         raise ValueError(f"curve must be morton|hilbert, got {curve!r}")
-    manifest = _load_manifest(root, versions[-1])
     sort_mode = zorder_by is None
     so = manifest.get("sort_order")
     if sort_mode and not so:
@@ -2767,7 +2745,6 @@ def snapshot_optimize_incremental(
         if sort_mode
         else set(manifest.get("optimized_commits", []))
     )
-    prev_opt = set(manifest.get("optimized_commits", []))
     keep = [rel for rel in manifest["files"] if _commit_of(rel) in done]
     redo = [rel for rel in manifest["files"] if _commit_of(rel) not in done]
     if len(redo) < min_files:
@@ -2830,45 +2807,24 @@ def snapshot_optimize_incremental(
             n_out, z.alias("__z")
         ).sortWithinPartitions(z.alias("__z"))
         commit_id, new_files = _write_data(clustered, root)
-    files = keep + new_files
-    body = _inherit_maps(manifest, files)
-    bloom_cfg = manifest.get("bloom")
-    if bloom_cfg:
-        body["bloom"] = bloom_cfg
-    kept_cids = {_commit_of(rel) for rel in keep}
-    if sort_mode:
-        # the rewrite IS the sorted layout; curve stamps just follow
-        # their surviving commits via _inherit_maps
-        body["sorted_commits"] = sorted((done & kept_cids) | {commit_id})
-    else:
-        body["optimized_commits"] = sorted(
-            (prev_opt & kept_cids) | {commit_id}
-        )
-    body.update(
-        mode="overwrite", commit_id=commit_id, files=files,
-        n_files=len(files), schema=manifest["schema"],
-        compaction_of=versions[-1],
-    )
     sidecar = _new_sidecar(
-        spark, root, new_files, bloom_cfg, manifest.get("sketch"),
+        spark, root, new_files, manifest.get("bloom"), manifest.get("sketch"),
         manifest.get("sums"),
     )
-    body["commit_schemas"][commit_id] = manifest["schema"]
-    body["commit_ranges"][commit_id] = _merge_ranges(sidecar["stats"])
     if specs and new_files:
-        from airflow_postgres_csv_spark.operators import partitioning as P
-
         sidecar["partitions"], sidecar["tuples_v"] = P.faithful_partitions(
-            specs[-1], df.schema, new_files
+            spec, df.schema, new_files
         )
-        body.setdefault("commit_partitions", {})[commit_id] = {
-            "s": len(specs) - 1,
-            "f": P.commit_partition_summary(
-                specs[-1],
-                [v for v in sidecar["partitions"].values() if v is not None],
-            ),
-        }
-    out = _publish(root, versions, body, commit_id, sidecar)
+    body = _next_body(
+        manifest, keep + new_files, mode="overwrite", commit_id=commit_id,
+        schema=manifest["schema"], new_files=new_files, sidecar=sidecar,
+        extra={"compaction_of": versions[-1]},
+    )
+    # the rewrite IS the sorted (or curve-clustered) layout; the other
+    # stamp just follows its surviving commits
+    stamp = "sorted_commits" if sort_mode else "optimized_commits"
+    body[stamp] = sorted(set(body.get(stamp, [])) | {commit_id})
+    out = _publish(root, versions, body, commit_id, sidecar if new_files else None)
     out["files_rewritten"] = len(redo)
     out["files_kept"] = len(keep)
     return out
@@ -2917,12 +2873,8 @@ def snapshot_merge(
     ``extra`` rides inside the atomic publish exactly as in
     ``snapshot_commit`` (e.g. a streaming sink's ``last_batch_id``).
     """
-    if extra and (bad := set(extra) & _RESERVED_KEYS):
-        raise ValueError(f"extra metadata may not override reserved keys: {sorted(bad)}")
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    manifest = _load_manifest(root, versions[-1])
+    _check_extra(extra)
+    versions, manifest = _head(root)
     if manifest["schema"] != _schema_json(updates):
         raise ValueError("snapshot_merge: updates schema differs from table schema")
     from pyspark.sql import functions as F
@@ -2944,7 +2896,10 @@ def snapshot_merge(
     commit_id = uuid.uuid4().hex[:12]
     if not n_keys:  # empty updates — metadata-only no-op commit
         shutil.rmtree(os.path.join(root, _DATA_DIR, mk_dirname))
-        body = _carry_body(manifest, "merge", commit_id, extra)
+        body = _next_body(
+            manifest, manifest["files"], mode="merge", commit_id=commit_id,
+            schema=manifest["schema"], extra=extra,
+        )
         return _publish(root, versions, body, commit_id, None)
     # no footer range (e.g. a DECIMAL key): every file is a candidate
     lo, hi = key_range.get(key, (None, None))
@@ -2964,28 +2919,19 @@ def snapshot_merge(
         spark, root, manifest, new_files,
         [os.path.join(_DATA_DIR, d) for d in (commit_id, mk_dirname)],
     )
-    files = untouched + new_files
-    body = _inherit_maps(manifest, files)
+    sidecar = _new_sidecar(
+        spark, root, new_files, manifest.get("bloom"), manifest.get("sketch"),
+        manifest.get("sums"),
+    )
+    body = _next_body(
+        manifest, untouched + new_files, mode="merge", commit_id=commit_id,
+        schema=manifest["schema"], new_files=new_files, sidecar=sidecar,
+        extra=extra,
+    )
     body["merge_info"] = {
         "key_col": key, "key_files": mk_files,
         "replaced_files": sorted(candidates),
     }
-    bloom_cfg = manifest.get("bloom")
-    if bloom_cfg:
-        body["bloom"] = bloom_cfg
-    if extra:
-        body.update(extra)
-    body.update(
-        mode="merge", commit_id=commit_id, files=files, n_files=len(files),
-        schema=manifest["schema"],
-    )
-    sidecar = _new_sidecar(
-        spark, root, new_files, bloom_cfg, manifest.get("sketch"),
-        manifest.get("sums"),
-    )
-    if new_files:
-        body["commit_schemas"][commit_id] = manifest["schema"]
-        body["commit_ranges"][commit_id] = _merge_ranges(sidecar["stats"])
     return _publish(root, versions, body, commit_id, sidecar if new_files else None)
 
 
@@ -3112,12 +3058,8 @@ def snapshot_merge_into(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructField, StructType
 
-    if extra and (bad := set(extra) & _RESERVED_KEYS):
-        raise ValueError(f"extra metadata may not override reserved keys: {sorted(bad)}")
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    manifest = _load_manifest(root, versions[-1])
+    _check_extra(extra)
+    versions, manifest = _head(root)
     table_schema = StructType.fromJson(json.loads(manifest["schema"]))
     if manifest["schema"] != _schema_json(source):
         if not merge_schema:
@@ -3161,7 +3103,10 @@ def snapshot_merge_into(
     commit_id = uuid.uuid4().hex[:12]
 
     def _noop() -> dict:
-        body = _carry_body(manifest, "merge", commit_id, extra)
+        body = _next_body(
+            manifest, manifest["files"], mode="merge", commit_id=commit_id,
+            schema=manifest["schema"], extra=extra,
+        )
         return _publish(root, versions, body, commit_id, None)
 
     if lo is None and not not_matched_by_source_delete:  # empty source
@@ -3260,28 +3205,18 @@ def snapshot_merge_into(
         [os.path.join(_DATA_DIR, commit_id)],
     )
     mk_files = _write_files(affected_keys.coalesce(1), root, f"{commit_id}-mk")
-    files = untouched + new_files
-    body = _inherit_maps(manifest, files)
+    sidecar = _new_sidecar(
+        spark, root, new_files, manifest.get("bloom"), manifest.get("sketch"),
+        manifest.get("sums"),
+    )
+    body = _next_body(
+        manifest, untouched + new_files, mode="merge", commit_id=commit_id,
+        schema=evolved_json, new_files=new_files, sidecar=sidecar, extra=extra,
+    )
     body["merge_info"] = {
         "key_col": key, "key_files": mk_files,
         "replaced_files": sorted(candidates),
     }
-    bloom_cfg = manifest.get("bloom")
-    if bloom_cfg:
-        body["bloom"] = bloom_cfg
-    if extra:
-        body.update(extra)
-    body.update(
-        mode="merge", commit_id=commit_id, files=files, n_files=len(files),
-        schema=evolved_json,
-    )
-    sidecar = _new_sidecar(
-        spark, root, new_files, bloom_cfg, manifest.get("sketch"),
-        manifest.get("sums"),
-    )
-    if new_files:
-        body["commit_schemas"][commit_id] = evolved_json
-        body["commit_ranges"][commit_id] = _merge_ranges(sidecar["stats"])
     return _publish(root, versions, body, commit_id, sidecar if new_files else None)
 
 
@@ -3297,10 +3232,7 @@ def snapshot_delete(
     file. For trickle deletes (GDPR-style single keys) prefer
     ``snapshot_delete_mor``, which writes NO data files at all.
     """
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    manifest = _load_manifest(root, versions[-1])
+    versions, manifest = _head(root)
     key_ranges = _key_stats_for_merge(root, manifest, col)
     candidates, untouched = [], []
     for rel in manifest["files"]:
@@ -3310,7 +3242,10 @@ def snapshot_delete(
             candidates.append(rel)
     commit_id = uuid.uuid4().hex[:12]
     if not candidates:  # nothing can match — metadata-only version bump
-        body = _carry_body(manifest, "delete", commit_id)
+        body = _next_body(
+            manifest, manifest["files"], mode="delete", commit_id=commit_id,
+            schema=manifest["schema"],
+        )
         return _publish(root, versions, body, commit_id, None)
     from pyspark.sql import functions as F
 
@@ -3318,8 +3253,14 @@ def snapshot_delete(
         ~F.col(col).between(lo, hi)
     )
     commit_id, new_files = _write_rewrite(kept_rows, root, manifest)
-    files = untouched + new_files
-    body = _inherit_maps(manifest, files)
+    sidecar = _new_sidecar(
+        spark, root, new_files, manifest.get("bloom"), manifest.get("sketch"),
+        manifest.get("sums"),
+    )
+    body = _next_body(
+        manifest, untouched + new_files, mode="delete", commit_id=commit_id,
+        schema=manifest["schema"], new_files=new_files, sidecar=sidecar,
+    )
     # Record WHAT was deleted so the change feed can replay this rewrite
     # as range-masked delete pre-images from the replaced files (the
     # rewritten files hold only carried rows — nothing to emit there).
@@ -3327,20 +3268,6 @@ def snapshot_delete(
     # and the feed falls back to failing on the rewrite.
     if all(isinstance(b, (int, float, str, bool)) for b in (lo, hi)):
         body["delete_info"] = {"col": col, "lo": lo, "hi": hi}
-    bloom_cfg = manifest.get("bloom")
-    if bloom_cfg:
-        body["bloom"] = bloom_cfg
-    body.update(
-        mode="delete", commit_id=commit_id, files=files, n_files=len(files),
-        schema=manifest["schema"],
-    )
-    sidecar = _new_sidecar(
-        spark, root, new_files, bloom_cfg, manifest.get("sketch"),
-        manifest.get("sums"),
-    )
-    if new_files:
-        body["commit_schemas"][commit_id] = manifest["schema"]
-        body["commit_ranges"][commit_id] = _merge_ranges(sidecar["stats"])
     return _publish(root, versions, body, commit_id, sidecar if new_files else None)
 
 
@@ -3377,12 +3304,7 @@ def snapshot_delete_mor(
     metadata rides the
     tombstone commit's atomic publish (e.g. an index's stat update).
     """
-    if extra and (bad := set(extra) & _RESERVED_KEYS):
-        raise ValueError(f"extra metadata may not override reserved keys: {sorted(bad)}")
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    manifest = _load_manifest(root, versions[-1])
+    versions, manifest = _head(root)
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
@@ -3422,18 +3344,21 @@ def _publish_key_tombstone(
     snapshot (breaking the later-appends-are-exempt contract), so the
     head drift raises ``SnapshotConflictError`` instead — recompute the
     keys against the new head and retry."""
-    versions = snapshot_versions(root)
-    if as_of_version is not None and versions and versions[-1] != as_of_version:
+    _check_extra(extra)
+    versions, manifest = _head(root)
+    if as_of_version is not None and versions[-1] != as_of_version:
         raise SnapshotConflictError(
             f"head moved past version {as_of_version} "
             f"(now {versions[-1]}); recompute delete keys and retry"
         )
-    manifest = _load_manifest(root, versions[-1])
     commit_id = uuid.uuid4().hex[:12]
     delete_files = _write_files(keys.coalesce(1), root, commit_id)
     key_range, n_keys = _footer_meta(os.path.join(root, delete_files[0]))
     kmin, kmax = key_range.get(key_col, (None, None))
-    body = _carry_body(manifest, "delete-mor", commit_id, extra)
+    body = _next_body(
+        manifest, manifest["files"], mode="delete-mor", commit_id=commit_id,
+        schema=manifest["schema"], extra=extra,
+    )
     if not n_keys:
         shutil.rmtree(os.path.join(root, _DATA_DIR, commit_id))
     else:
@@ -3495,10 +3420,7 @@ def snapshot_delete_positional(
     delete / Delta's deletion-vector design point expressed over plain
     parquet + JSON.
     """
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    manifest = _load_manifest(root, versions[-1])
+    versions, manifest = _head(root)
     from pyspark.sql import functions as F
 
     src = _read_pinned(
@@ -3514,7 +3436,10 @@ def snapshot_delete_positional(
         _read_delete_files(spark, root, delete_files, positional=True)
         .coalesce(1).groupBy("file").count().collect()
     )
-    body = _carry_body(manifest, "delete-positional", commit_id)
+    body = _next_body(
+        manifest, manifest["files"], mode="delete-positional",
+        commit_id=commit_id, schema=manifest["schema"],
+    )
     n_keys = sum(int(r["count"]) for r in rows)
     if not n_keys:
         shutil.rmtree(os.path.join(root, _DATA_DIR, commit_id))
@@ -3579,10 +3504,7 @@ def snapshot_alter(
 
     from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    prev = _load_manifest(root, versions[-1])
+    versions, prev = _head(root)
     schema = StructType.fromJson(_json.loads(prev["schema"]))
     fields = {f.name: f for f in schema.fields}
     add, widen, drop = add or {}, widen or {}, list(drop or [])
@@ -3717,7 +3639,11 @@ def snapshot_alter(
     for old, new in rename.items():
         history[new] = [old] + history.pop(old, [])
     commit_id = uuid.uuid4().hex[:12]
-    body = _inherit_maps(prev, prev["files"])
+    body = _next_body(
+        prev, prev["files"], mode="alter", commit_id=commit_id,
+        schema=new_schema.json(),
+    )
+    body["alter"] = {"add": add, "widen": widen, "drop": drop, "rename": rename}
     if "sort_order" in body and rename:
         # a rename leaves the physical layout (and the sorted stamps)
         # untouched — the declared order follows the new name
@@ -3734,9 +3660,6 @@ def snapshot_alter(
                 rename.get(c, c) for c in body["sums"].get("cols", [])
             ),
         }
-    for key in ("bloom", "sketch"):
-        if key in prev:
-            body[key] = prev[key]
     defaults = {
         rename.get(k, k): v
         for k, v in body.get("defaults", {}).items()
@@ -3757,14 +3680,6 @@ def snapshot_alter(
         body.pop("column_history", None)
     if dropped_reserved:
         body["retired_columns"] = sorted(dropped_reserved)
-    body.update(
-        mode="alter",
-        commit_id=commit_id,
-        files=list(prev["files"]),
-        n_files=prev["n_files"],
-        schema=new_schema.json(),
-        alter={"add": add, "widen": widen, "drop": drop, "rename": rename},
-    )
     return _publish(root, versions, body, commit_id, None)
 
 
@@ -3790,10 +3705,7 @@ def snapshot_add_constraint(
     """
     from pyspark.sql import functions as F
 
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    prev = _load_manifest(root, versions[-1])
+    versions, prev = _head(root)
     declared = dict(prev.get("constraints") or {})
     if name in declared:
         raise ValueError(
@@ -3805,13 +3717,11 @@ def snapshot_add_constraint(
         raise SnapshotExpectationError(violations)
     declared[name] = expr
     commit_id = uuid.uuid4().hex[:12]
-    body = _inherit_maps(prev, prev["files"])
-    body["constraints"] = declared
-    body.update(
-        mode="alter", commit_id=commit_id, files=prev["files"],
-        n_files=prev["n_files"], schema=prev["schema"],
-        alter={"add_constraint": {name: expr}},
+    body = _next_body(
+        prev, prev["files"], mode="alter", commit_id=commit_id,
+        schema=prev["schema"],
     )
+    body.update(constraints=declared, alter={"add_constraint": {name: expr}})
     return _publish(
         root, versions, body, commit_id, None,
         pack_hints=dict.get(prev, "commit_files"),
@@ -3820,22 +3730,17 @@ def snapshot_add_constraint(
 
 def snapshot_drop_constraint(root: str, name: str) -> dict:
     """Remove a declared constraint as a zero-data metadata commit."""
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    prev = _load_manifest(root, versions[-1])
+    versions, prev = _head(root)
     declared = dict(prev.get("constraints") or {})
     if name not in declared:
         raise KeyError(f"no declared constraint {name!r} (have {sorted(declared)})")
     del declared[name]
     commit_id = uuid.uuid4().hex[:12]
-    body = _inherit_maps(prev, prev["files"])
-    body["constraints"] = declared
-    body.update(
-        mode="alter", commit_id=commit_id, files=prev["files"],
-        n_files=prev["n_files"], schema=prev["schema"],
-        alter={"drop_constraint": name},
+    body = _next_body(
+        prev, prev["files"], mode="alter", commit_id=commit_id,
+        schema=prev["schema"],
     )
+    body.update(constraints=declared, alter={"drop_constraint": name})
     return _publish(
         root, versions, body, commit_id, None,
         pack_hints=dict.get(prev, "commit_files"),
@@ -3855,28 +3760,11 @@ def snapshot_rollback(spark: SparkSession, root: str, to_version: int) -> dict:
         raise FileNotFoundError(f"version {to_version} not in {versions}")
     target = _load_manifest(root, to_version)
     commit_id = uuid.uuid4().hex[:12]
-    body = {
-        k: target[k]
-        for k in (
-            "files", "n_files", "schema", "commit_schemas", "sidecars",
-            "commit_ranges", "tombstones",
-        )
-        if k in target
-    }
-    for k in ("bloom", "defaults", "partition_spec", "last_batch_id",
-              "cdc_applied_version", "ivm_applied_version",
-              "ivm_applied_a", "ivm_applied_b",
-              "commit_sizes", "sketch_commits", "small_bytes",
-              "partition_specs", "commit_partitions", "constraints",
-              "sums", "commit_sums", "sort_order", "sorted_commits",
-              # restore the target's sketch config, rename lineage /
-              # retired-name reservations, and frozen index/model
-              # metadata verbatim — dropping them would NULL-fill
-              # renamed columns and break index serving after a rollback
-              "sketch", "column_history", "retired_columns",
-              "ann_index", "text_index", "classifier"):
-        if k in target:
-            body[k] = target[k]
+    body = _next_body(
+        target, target["files"], mode="rollback", commit_id=commit_id,
+        schema=target["schema"],
+    )
+    body["rolled_back_to"] = to_version
     # the batch-id high-water mark must never move backwards (the gate
     # max-scans retained manifests, but keep the latest authoritative)
     latest = _load_manifest(root, versions[-1])
@@ -3928,7 +3816,6 @@ def snapshot_rollback(spark: SparkSession, root: str, to_version: int) -> dict:
             )
             if violations:
                 raise SnapshotExpectationError(violations)
-    body.update(mode="rollback", commit_id=commit_id, rolled_back_to=to_version)
     return _publish(
         root, versions, body, commit_id, None,
         pack_hints=dict.get(target, "commit_files"),
@@ -4200,8 +4087,12 @@ def snapshot_clone(
     safely independent): every data/delete/sidecar file of the pinned
     source version is HARDLINKED into the clone root (same inode, zero
     bytes moved — data files are immutable so sharing is safe), and the
-    clone starts its own history at version 1 with the source's schema,
-    tombstones, Bloom config, and per-commit metadata carried over.
+    clone starts its own history at version 1 carrying the source's table
+    state exactly as any commit does (``_next_body``: schema, tombstones,
+    sticky configs, per-commit metadata and layout stamps) — except the
+    streaming high-water stamps (``last_batch_id`` and the CDC/IVM
+    applied versions): a fresh checkpoint writing into the clone would
+    otherwise see its batches as replays.
 
     The clone is fully independent afterwards: commits, deletes,
     compaction, and ``snapshot_expire`` on either side never affect the
@@ -4232,35 +4123,18 @@ def snapshot_clone(
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         if not os.path.exists(dst):
             os.link(os.path.join(src_root, rel), dst)
-    sidecars = {}
-    for cid, sc_rel in m.get("sidecars", {}).items():
+    for sc_rel in m.get("sidecars", {}).values():
         dst = os.path.join(dst_root, sc_rel)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         if not os.path.exists(dst):
             os.link(os.path.join(src_root, sc_rel), dst)
-        sidecars[cid] = sc_rel
     commit_id = uuid.uuid4().hex[:12]
-    body = {
-        k: m[k]
-        for k in (
-            "files", "n_files", "schema", "commit_schemas", "commit_ranges",
-            "tombstones",
-        )
-        if k in m
-    }
-    body["sidecars"] = sidecars
-    for k in ("bloom", "defaults", "partition_spec",
-              "commit_sizes", "sketch_commits", "small_bytes",
-              "partition_specs", "commit_partitions", "constraints",
-              "sums", "commit_sums", "sort_order", "sorted_commits",
-              # sketch CONFIG rides with sketch_commits; rename lineage
-              # and frozen index/model metadata must survive a clone or
-              # the clone null-fills renamed columns / cannot serve
-              "sketch", "column_history", "retired_columns",
-              "ann_index", "text_index", "classifier"):
-        if k in m:
-            body[k] = m[k]
-    body.update(mode="clone", commit_id=commit_id, cloned_from=v)
+    body = _next_body(
+        m, m["files"], mode="clone", commit_id=commit_id, schema=m["schema"]
+    )
+    for k in _MAX_STAMPS:
+        body.pop(k, None)
+    body["cloned_from"] = v
     return _publish(
         dst_root, [], body, commit_id, None,
         pack_hints=dict.get(m, "commit_files"),
@@ -4285,10 +4159,7 @@ def snapshot_update(
     """
     from pyspark.sql import functions as F
 
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    manifest = _load_manifest(root, versions[-1])
+    versions, manifest = _head(root)
     from pyspark.sql.types import StructType
 
     cols = [
@@ -4353,10 +4224,7 @@ def snapshot_update_where(
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    versions = snapshot_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {root}")
-    manifest = _load_manifest(root, versions[-1])
+    versions, manifest = _head(root)
     fields = StructType.fromJson(json.loads(manifest["schema"])).fields
     cols = [f.name for f in fields]
     types = {f.name: f.dataType for f in fields}
@@ -4365,6 +4233,7 @@ def snapshot_update_where(
         raise ValueError(
             f"snapshot_update_where: no such column(s) {sorted(bad)}"
         )
+    _check_extra(extra)
     matched = (
         _read_pinned(
             spark, root, manifest, manifest["files"], with_position=True
@@ -4415,27 +4284,11 @@ def snapshot_update_where(
             spark, root, new_files, manifest.get("bloom"),
             manifest.get("sketch"), manifest.get("sums"),
         )
-        files = list(manifest["files"]) + new_files
-        body = _inherit_maps(manifest, files)
-        if manifest.get("bloom"):
-            body["bloom"] = manifest["bloom"]
-        if extra:
-            reserved = set(body) | {
-                "mode", "commit_id", "files", "n_files", "schema",
-            }
-            bad_keys = set(extra) & reserved
-            if bad_keys:
-                raise ValueError(
-                    "extra metadata may not override reserved keys: "
-                    f"{sorted(bad_keys)}"
-                )
-            body.update(extra)
-        body.update(
-            mode="update-mor", commit_id=commit_id, files=files,
-            n_files=len(files), schema=manifest["schema"],
+        body = _next_body(
+            manifest, list(manifest["files"]) + new_files, mode="update-mor",
+            commit_id=commit_id, schema=manifest["schema"],
+            new_files=new_files, sidecar=sidecar, extra=extra,
         )
-        body["commit_schemas"][commit_id] = manifest["schema"]
-        body["commit_ranges"][commit_id] = _merge_ranges(sidecar["stats"])
         body["tombstones"] = list(body.get("tombstones", [])) + [
             {
                 "kind": "positional",
@@ -5308,8 +5161,9 @@ def snapshot_apply_changes(
     if dvs and latest > applied:
         dm = _load_manifest(dst_root, dvs[-1])
         commit_id = uuid.uuid4().hex[:12]
-        body = _carry_body(
-            dm, "cdc-stamp", commit_id, {"cdc_applied_version": latest}
+        body = _next_body(
+            dm, dm["files"], mode="cdc-stamp", commit_id=commit_id,
+            schema=dm["schema"], extra={"cdc_applied_version": latest},
         )
         _publish(dst_root, dvs, body, commit_id, None)
     return {

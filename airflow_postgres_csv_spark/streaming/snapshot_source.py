@@ -359,7 +359,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                 continue
             if tuple(t["files"]) in prev_delete_files:
                 # same delete files = the same logical tombstone, merely
-                # NARROWED by _inherit_maps when a rewrite dropped files —
+                # NARROWED by _next_body when a rewrite dropped files —
                 # its rows were emitted when it was new, nothing to replay
                 continue
             if t.get("kind") == "positional":

@@ -834,7 +834,7 @@ def test_branch_publish_carries_rename_lineage(spark, tmp_path):
 def test_publish_carries_index_model_metadata(spark, tmp_path):
     """A branch of a persisted ANN index (streaming WAP staging shape)
     must keep serving on main after the fast-forward publish — the
-    frozen model metadata rides _CARRY_KEYS."""
+    frozen model metadata rides the carried keys (snapshots._KEYS)."""
     from airflow_postgres_csv_spark.operators import similarity as SIM
 
     emb = spark.range(0, 100).select(

@@ -165,7 +165,7 @@ def test_streaming_sink_end_to_end(spark, tmp_path):
 
 
 def test_out_of_band_append_on_stamped_orphan_is_not_adopted(spark, tmp_path):
-    """ADVICE r6: last_batch_id is inherited by _inherit_maps, so an
+    """ADVICE r6: last_batch_id is inherited by _next_body, so an
     out-of-band append stacked on a crash-orphaned stamped commit also
     carries the stamp. Adoption must key on the NON-inherited
     txn_batch_id and surface the stranger's head as a conflict."""

@@ -1001,7 +1001,7 @@ def test_probe_set_maintained_on_delete_and_append(spark, tmp_path, monkeypatch)
 
 
 def test_index_model_metadata_survives_compaction(spark, tmp_path):
-    """snapshot_compact (and every other _inherit_maps maintenance
+    """snapshot_compact (and every other _next_body maintenance
     commit) is a row-preserving rewrite of the same logical index — the
     frozen model metadata (ann_index / text_index) must ride along, or
     the documented 'compact folds the tombstone in later' lifecycle
