@@ -262,12 +262,6 @@ def _rebase_body(
             body[key] = {**body.get(key, {}), **{c: val[c] for c in mine}}
         else:
             body[key] = sorted(set(body.get(key, [])) | set(mine))
-    # monotone stamps merge by max: the streaming WAP sink threads its
-    # batch id through the branch commit, and main may carry older stamps
-    for stamp in _MAX_STAMPS:
-        vals = [m[stamp] for m in (head_m, bm) if m.get(stamp) is not None]
-        if vals:
-            body[stamp] = max(vals)
     return body
 
 
@@ -286,7 +280,9 @@ def snapshot_publish_branch(
     commit sidecars) are hardlinked back into the table root first, then
     ONE manifest is published on main carrying the branch head's exact
     state — schema, tombstones, per-commit metadata, partition specs,
-    rollups. The manifest link is the atomic commit point
+    rollups — with the streaming high-water stamps (``last_batch_id``,
+    CDC/IVM applied versions) the max of main's and the branch's, as on a
+    rebase publish. The manifest link is the atomic commit point
     (first-writer-wins).
 
     If main moved past the fork point the publish raises
@@ -342,6 +338,7 @@ def snapshot_publish_branch(
         base_m = base_m_cache
         added, removed = snapshot_files_diff(broot, base_m, bm)
         commit_id = uuid.uuid4().hex[:12]
+        head_m = _load_manifest(root, versions[-1]) if versions else {}
         if fast_forward:
             # main takes the branch head's exact state, including the
             # last branch commit's merge record
@@ -352,8 +349,15 @@ def snapshot_publish_branch(
             if "merge_info" in bm:
                 body["merge_info"] = bm["merge_info"]
         else:
-            head_m = _load_manifest(root, versions[-1])
             body = _rebase_body(base_m, bm, head_m, added, removed, commit_id)
+        # monotone stamps merge by max on both paths: a branch starts as a
+        # clone WITHOUT main's stream stamps, the streaming WAP body threads
+        # its batch id through the branch commit, and main's head must
+        # never lose (or lower) an exactly-once high-water mark
+        for stamp in _MAX_STAMPS:
+            vals = [m[stamp] for m in (head_m, bm) if m.get(stamp) is not None]
+            if vals:
+                body[stamp] = max(vals)
         _link_back(root, broot, bm, added)
         body.update(
             branch=name,

@@ -172,11 +172,9 @@ def snapshot_write_with_expectations(
     main_pending = True
     quar_pending = bool(quar_rules)
     if batch_id is not None:
-        main_pending = batch_id > S._max_stamp(root, "last_batch_id", -1)
+        main_pending = not S._batch_replayed(root, batch_id)
         if quar_rules:
-            quar_pending = batch_id > S._max_stamp(
-                quarantine_root, "last_batch_id", -1
-            )
+            quar_pending = not S._batch_replayed(quarantine_root, batch_id)
         if not main_pending and not quar_pending:
             return {
                 "n_input": None, "n_written": None, "n_quarantined": None,

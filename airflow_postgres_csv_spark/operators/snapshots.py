@@ -2053,6 +2053,15 @@ def _max_stamp(root: str, key: str, default: int = -1) -> int:
     return default
 
 
+def _batch_replayed(root: str, batch_id: int) -> bool:
+    """The streaming exactly-once gate: True when micro-batch ``batch_id``
+    is not above ``root``'s ``last_batch_id`` high-water stamp, i.e. a
+    checkpoint replay of a batch already committed there (or before it),
+    which the sink must drop. A table that never took a batch stamp
+    admits every id."""
+    return batch_id <= _max_stamp(root, "last_batch_id", -1)
+
+
 def snapshot_version_as_of(root: str, ts_ns: int) -> int:
     """The newest version committed at or before ``ts_ns`` (nanosecond
     epoch). Raises if the instant precedes the first retained commit —

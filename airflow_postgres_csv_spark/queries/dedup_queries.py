@@ -818,7 +818,7 @@ register("dedup_semantic_semdedup", _sem_oracle())(
 
 # ---------------------------------------------------------------------------
 # LIVE streaming dedup-on-ingest (round 9, streaming/sinks.py::
-# start_dedup_ingest_sink): a document stream lands in a snapshot corpus
+# dedup_ingest_batch): a document stream lands in a snapshot corpus
 # holding each content key exactly once — within-batch survivors are
 # min-doc_id per md5(normalized text), cross-batch rejects anti-join the
 # PERSISTED fingerprint table (O(batch) per micro-batch, the corpus text
@@ -839,7 +839,8 @@ def streaming_dedup_ingest_live(spark, sf_dir):
     from airflow_postgres_csv_spark.operators.snapshots import snapshot_read
     from airflow_postgres_csv_spark.queries.snapshot_queries import _temp_root
     from airflow_postgres_csv_spark.streaming.sinks import (
-        start_dedup_ingest_sink,
+        dedup_ingest_batch,
+        start_batch_sink,
     )
 
     docs = t(spark, sf_dir, "documents")
@@ -858,11 +859,11 @@ def streaming_dedup_ingest_live(spark, sf_dir):
             part, os.path.join(src, f"{i:03d}.parquet"), 1_000_000 + i
         )
     root, keys_root = _temp_root(), _temp_root()
-    q = start_dedup_ingest_sink(
+    q = start_batch_sink(
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src),
-        root, keys_root,
+        lambda df, bid: dedup_ingest_batch(df, bid, root, keys_root),
         os.path.join(_temp_root(), "ckpt"),
     )
     try:

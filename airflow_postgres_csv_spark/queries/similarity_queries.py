@@ -879,7 +879,7 @@ register(
 
 # ---------------------------------------------------------------------------
 # LIVE streaming ANN ingest (round 9, streaming/sinks.py::
-# start_ann_index_sink): the IVF index is built over half the corpus
+# ann_index_batch): the IVF index is built over half the corpus
 # (build-once / serve-many), then an embedding stream keeps it fresh —
 # each micro-batch assigns its vectors to the FROZEN centroids and
 # appends one generation-pinned commit with the batch id stamped inside
@@ -903,7 +903,10 @@ def _streaming_ann_index_live(spark, sf_dir):
         snapshot_versions,
     )
     from airflow_postgres_csv_spark.queries.snapshot_queries import _temp_root
-    from airflow_postgres_csv_spark.streaming.sinks import start_ann_index_sink
+    from airflow_postgres_csv_spark.streaming.sinks import (
+        ann_index_batch,
+        start_batch_sink,
+    )
 
     emb = t(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 10)
@@ -939,13 +942,16 @@ def _streaming_ann_index_live(spark, sf_dir):
             .parquet(src)
         )
 
-    q = start_ann_index_sink(stream(), live_root, ckpt)
+    def body(df, bid):
+        return ann_index_batch(df, bid, live_root)
+
+    q = start_batch_sink(stream(), body, ckpt)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
     shutil.move(staged[1], os.path.join(src, "001.parquet"))
-    q2 = start_ann_index_sink(stream(), live_root, ckpt)
+    q2 = start_batch_sink(stream(), body, ckpt)
     try:
         q2.processAllAvailable()
     finally:

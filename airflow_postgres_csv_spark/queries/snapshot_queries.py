@@ -713,7 +713,10 @@ def pipeline_snapshot_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly when offsets, the version-range file diff, the batch-id gate,
     and the restart path all compose correctly. O(appended data) per
     pump, never O(table)."""
-    from airflow_postgres_csv_spark.streaming.sinks import start_snapshot_sink
+    from airflow_postgres_csv_spark.streaming.sinks import (
+        snapshot_batch_commit,
+        start_batch_sink,
+    )
     from airflow_postgres_csv_spark.streaming.snapshot_source import (
         register_snapshot_feed,
     )
@@ -737,7 +740,9 @@ def pipeline_snapshot_medallion(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "_commit_version",
             )
         )
-        q = start_snapshot_sink(curated, silver, ckpt)
+        q = start_batch_sink(
+            curated, lambda df, bid: snapshot_batch_commit(df, bid, silver), ckpt
+        )
         try:
             q.processAllAvailable()
         finally:
@@ -864,7 +869,8 @@ def pipeline_snapshot_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_delete_positional,
     )
     from airflow_postgres_csv_spark.streaming.sinks import (
-        start_apply_changes_sink,
+        apply_changes_batch,
+        start_batch_sink,
     )
     from airflow_postgres_csv_spark.streaming.snapshot_source import (
         register_snapshot_feed,
@@ -887,7 +893,9 @@ def pipeline_snapshot_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("changeFeed", "true")
         .load()
     )
-    q = start_apply_changes_sink(stream, dst, "event_id", ckpt)
+    q = start_batch_sink(
+        stream, lambda df, bid: apply_changes_batch(df, bid, dst, "event_id"), ckpt
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -919,7 +927,8 @@ def pipeline_snapshot_cdc_merge_stream(spark: SparkSession, sf_dir: str) -> Data
         snapshot_merge,
     )
     from airflow_postgres_csv_spark.streaming.sinks import (
-        start_apply_changes_sink,
+        apply_changes_batch,
+        start_batch_sink,
     )
     from airflow_postgres_csv_spark.streaming.snapshot_source import (
         register_snapshot_feed,
@@ -945,7 +954,9 @@ def pipeline_snapshot_cdc_merge_stream(spark: SparkSession, sf_dir: str) -> Data
         .option("changeFeed", "true")
         .load()
     )
-    q = start_apply_changes_sink(stream, dst, "event_id", ckpt)
+    q = start_batch_sink(
+        stream, lambda df, bid: apply_changes_batch(df, bid, dst, "event_id"), ckpt
+    )
     try:
         q.processAllAvailable()
     finally:
@@ -1350,19 +1361,21 @@ register(
 
 def streaming_expectations_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE expectations gate: the events fixture streamed through
-    ``start_expectations_sink`` — warn counts, a drop rule, and a
-    quarantine rule route each micro-batch into a main + quarantine
-    snapshot table pair, each commit batch-id-stamped inside its atomic
-    publish. The fixture stages as ONE file → ONE micro-batch, so the
-    routing equals the batch CASE expression the oracle states. Output =
-    union of both destinations with their route label."""
+    ``start_batch_sink`` with ``snapshot_write_with_expectations`` as the
+    batch body — warn counts, a drop rule, and a quarantine rule route
+    each micro-batch into a main + quarantine snapshot table pair, each
+    commit batch-id-stamped inside its atomic publish. The fixture stages
+    as ONE file → ONE micro-batch, so the routing equals the batch CASE
+    expression the oracle states. Output = union of both destinations
+    with their route label."""
     import os
     import shutil
 
-    from airflow_postgres_csv_spark.operators.expectations import Expectation
-    from airflow_postgres_csv_spark.streaming.sinks import (
-        start_expectations_sink,
+    from airflow_postgres_csv_spark.operators.expectations import (
+        Expectation,
+        snapshot_write_with_expectations,
     )
+    from airflow_postgres_csv_spark.streaming.sinks import start_batch_sink
 
     src = os.path.join(_temp_root(), "src")
     os.makedirs(src)
@@ -1370,17 +1383,18 @@ def streaming_expectations_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(src, "000.parquet"))
     schema = spark.read.parquet(src).schema
     root, quar = _temp_root(), _temp_root()
-    q = start_expectations_sink(
+    rules = [
+        Expectation("value_in_band", "value < 90", "warn"),
+        Expectation("user_not_heldout", "user_id % 10 <> 3", "drop"),
+        Expectation("not_canary_shard", "event_id % 7 <> 0", "quarantine"),
+    ]
+    q = start_batch_sink(
         spark.readStream.schema(schema).parquet(src)
         .select("event_id", "user_id", "event_type", "value"),
-        root,
+        lambda df, bid: snapshot_write_with_expectations(
+            df, root, rules, quar, batch_id=bid, retries=2
+        ),
         os.path.join(_temp_root(), "ckpt"),
-        [
-            Expectation("value_in_band", "value < 90", "warn"),
-            Expectation("user_not_heldout", "user_id % 10 <> 3", "drop"),
-            Expectation("not_canary_shard", "event_id % 7 <> 0", "quarantine"),
-        ],
-        quarantine_root=quar,
     )
     try:
         q.processAllAvailable()
@@ -1602,10 +1616,11 @@ register(
 
 # ---------------------------------------------------------------------------
 # LIVE atomic two-table expectations: same routing battery as
-# streaming_expectations_live but through start_catalog_expectations_sink
-# (operators/catalog_txn.py) -- the clean and quarantine tables are read
-# back THROUGH the catalog, whose single batch-stamped flip published
-# them together; the catalog version count equals the micro-batch count.
+# streaming_expectations_live but with catalog_write_with_expectations as
+# the batch body (operators/catalog_txn.py) -- the clean and quarantine
+# tables are read back THROUGH the catalog, whose single batch-stamped flip
+# published them together; the catalog version count equals the
+# micro-batch count.
 # ---------------------------------------------------------------------------
 
 
@@ -1619,10 +1634,11 @@ def streaming_catalog_expectations_live(
         catalog_read,
         catalog_versions,
     )
-    from airflow_postgres_csv_spark.operators.expectations import Expectation
-    from airflow_postgres_csv_spark.streaming.sinks import (
-        start_catalog_expectations_sink,
+    from airflow_postgres_csv_spark.operators.expectations import (
+        Expectation,
+        catalog_write_with_expectations,
     )
+    from airflow_postgres_csv_spark.streaming.sinks import start_batch_sink
 
     src = os.path.join(_temp_root(), "src")
     os.makedirs(src)
@@ -1630,18 +1646,19 @@ def streaming_catalog_expectations_live(
                 os.path.join(src, "000.parquet"))
     schema = spark.read.parquet(src).schema
     cat, clean, quar = _temp_root(), _temp_root(), _temp_root()
-    q = start_catalog_expectations_sink(
+    rules = [
+        Expectation("value_in_band", "value < 90", "warn"),
+        Expectation("user_not_heldout", "user_id % 10 <> 3", "drop"),
+        Expectation("not_canary_shard", "event_id % 7 <> 0", "quarantine"),
+    ]
+    q = start_batch_sink(
         spark.readStream.schema(schema).parquet(src)
         .select("event_id", "user_id", "event_type", "value"),
-        cat,
-        ("clean", clean),
+        lambda df, bid: catalog_write_with_expectations(
+            df, cat, ("clean", clean), rules, ("quar", quar),
+            batch_id=bid, retries=2,
+        ),
         os.path.join(_temp_root(), "ckpt"),
-        [
-            Expectation("value_in_band", "value < 90", "warn"),
-            Expectation("user_not_heldout", "user_id % 10 <> 3", "drop"),
-            Expectation("not_canary_shard", "event_id % 7 <> 0", "quarantine"),
-        ],
-        quarantine=("quar", quar),
     )
     try:
         q.processAllAvailable()
@@ -2205,7 +2222,8 @@ def streaming_merge_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from airflow_postgres_csv_spark.queries._helpers import dec
     from airflow_postgres_csv_spark.streaming.sinks import (
-        start_merge_into_sink,
+        merge_into_batch,
+        start_batch_sink,
     )
 
     src = os.path.join(_temp_root(), "src")
@@ -2225,19 +2243,19 @@ def streaming_merge_upsert_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).cast("long").alias("batches"),
         )
 
-    q = start_merge_into_sink(
+    matched_update = {
+        "total": "t.total + s.total",
+        "n": "t.n + s.n",
+        "batches": "t.batches + 1",
+    }
+    q = start_batch_sink(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src),
-        root,
+        lambda df, bid: merge_into_batch(
+            prepare(df), bid, root, "user_id", matched_update=matched_update
+        ),
         os.path.join(_temp_root(), "ckpt"),
-        key="user_id",
-        prepare=prepare,
-        matched_update={
-            "total": "t.total + s.total",
-            "n": "t.n + s.n",
-            "batches": "t.batches + 1",
-        },
     )
     try:
         q.processAllAvailable()
@@ -3157,7 +3175,7 @@ register(
 
 
 def streaming_wap_live(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING write-audit-publish (streaming/sinks.py::start_wap_sink):
+    """STREAMING write-audit-publish (streaming/sinks.py::wap_batch):
     three micro-batches (events split by ``event_id % 3``) flow through
     an aggregate-audit gate; the middle batch carries NULLed event_types
     (every ``event_id % 7 = 0`` row) so the ``no_null_types`` audit fails
@@ -3170,7 +3188,10 @@ def streaming_wap_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
 
     from airflow_postgres_csv_spark.operators.branches import snapshot_branches
-    from airflow_postgres_csv_spark.streaming.sinks import start_wap_sink
+    from airflow_postgres_csv_spark.streaming.sinks import (
+        start_batch_sink,
+        wap_batch,
+    )
 
     events = load(spark, sf_dir, "events").select("event_id", "event_type")
     part = F.pmod("event_id", F.lit(3))
@@ -3189,13 +3210,13 @@ def streaming_wap_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, b in enumerate(batches):
         _stage_stream_file(b, src, i)
     root = _temp_root()
-    q = start_wap_sink(
+    audits = {"no_null_types": "count_if(event_type IS NULL) = 0",
+              "nonempty": "count(*) > 0"}
+    q = start_batch_sink(
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src),
-        root,
-        {"no_null_types": "count_if(event_type IS NULL) = 0",
-         "nonempty": "count(*) > 0"},
+        lambda df, bid: wap_batch(df, bid, root, audits),
         _os.path.join(_temp_root(), "ckpt"),
     )
     try:
@@ -4076,7 +4097,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# Streaming IVM sink (round 10, streaming/sinks.py::start_ivm_sink): each
+# Streaming IVM sink (round 10, streaming/sinks.py::ivm_batch): each
 # micro-batch lands in the SOURCE snapshot table exactly once, and a
 # per-group (count, sum) rollup advances beside it via change-feed IVM —
 # including a RETRACTION between stream runs (a MOR delete against the
@@ -4106,7 +4127,10 @@ def streaming_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     from airflow_postgres_csv_spark.operators.snapshots import (
         snapshot_delete_mor,
     )
-    from airflow_postgres_csv_spark.streaming.sinks import start_ivm_sink
+    from airflow_postgres_csv_spark.streaming.sinks import (
+        ivm_batch,
+        start_batch_sink,
+    )
 
     src_files = os.path.join(_temp_root(), "in")
     os.makedirs(src_files)
@@ -4127,16 +4151,14 @@ def streaming_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def run_stream():
-        q = start_ivm_sink(
+        q = start_batch_sink(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(src_files),
-            src_root,
-            dst_root,
+            lambda df, bid: ivm_batch(
+                prepare(df), bid, src_root, dst_root, "user_id", "cents"
+            ),
             os.path.join(_temp_root(), "ckpt-ivm"),
-            group_col="user_id",
-            amount_col="cents",
-            prepare=prepare,
         )
         try:
             q.processAllAvailable()
@@ -4531,7 +4553,7 @@ register(
 # ---------------------------------------------------------------------------
 # STREAMING JOIN IVM (round 11): facts stream into a snapshot table while a
 # per-cohort rollup over facts JOIN dimension advances beside them — the
-# streaming face of the delta-join (streaming/sinks.py start_join_ivm_sink).
+# streaming face of the delta-join (streaming/sinks.py join_ivm_batch).
 # The dimension side has NO stream: a late dimension append lights up
 # ALREADY-INGESTED facts through the A0 x dB term, and a dimension MOR
 # delete retracts every joined row of the erased users — both folded in at
@@ -4547,7 +4569,8 @@ def streaming_join_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_delete_mor,
     )
     from airflow_postgres_csv_spark.streaming.sinks import (
-        start_join_ivm_sink,
+        join_ivm_batch,
+        start_batch_sink,
     )
 
     src_files = os.path.join(_temp_root(), "in")
@@ -4576,16 +4599,15 @@ def streaming_join_ivm_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def run_stream():
-        q = start_join_ivm_sink(
+        q = start_batch_sink(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(src_files),
-            a_root, b_root, dst_root,
+            lambda df, bid: join_ivm_batch(
+                prepare(df), bid, a_root, b_root, dst_root,
+                on="user_id", group_col="cohort", amount_col="cents",
+            ),
             os.path.join(_temp_root(), "ckpt-jivm"),
-            on="user_id",
-            group_col="cohort",
-            amount_col="cents",
-            prepare=prepare,
         )
         try:
             q.processAllAvailable()

@@ -1729,7 +1729,7 @@ register(
 
 # ---------------------------------------------------------------------------
 # LIVE streaming index maintenance (round 9, streaming/sinks.py::
-# start_text_index_sink): a document stream keeps the persisted BM25
+# text_index_batch): a document stream keeps the persisted BM25
 # index fresh — the first micro-batch BUILDS it, later batches run
 # text_index_append, and the micro-batch id is stamped inside the same
 # atomic manifest publish as the postings + exact integer stats, so a
@@ -1756,7 +1756,8 @@ def streaming_text_index_live(spark, sf_dir):
     )
     from airflow_postgres_csv_spark.queries.snapshot_queries import _temp_root
     from airflow_postgres_csv_spark.streaming.sinks import (
-        start_text_index_sink,
+        start_batch_sink,
+        text_index_batch,
     )
 
     docs = t(spark, sf_dir, "documents")
@@ -1786,7 +1787,10 @@ def streaming_text_index_live(spark, sf_dir):
             .parquet(src)
         )
 
-    q = start_text_index_sink(stream(), index_root, ckpt)
+    def body(df, bid):
+        return text_index_batch(df, bid, index_root)
+
+    q = start_batch_sink(stream(), body, ckpt)
     try:
         q.processAllAvailable()
     finally:
@@ -1794,7 +1798,7 @@ def streaming_text_index_live(spark, sf_dir):
     # late arrival + RESTART from the same checkpoint: batches 0/1 are
     # behind the offset log, only the new file becomes batch 2
     shutil.move(staged[2], os.path.join(src, "002.parquet"))
-    q2 = start_text_index_sink(stream(), index_root, ckpt)
+    q2 = start_batch_sink(stream(), body, ckpt)
     try:
         q2.processAllAvailable()
     finally:
@@ -1964,7 +1968,7 @@ register(
 
 
 def streaming_classifier_live(spark, sf_dir):
-    """Score-on-ingest (streaming/sinks.py::start_classifier_sink —
+    """Score-on-ingest (streaming/sinks.py::classifier_scoring_batch —
     VERDICT r9 item 6): the trained quality classifier gates a LIVE
     document stream. The model trains once and persists as a snapshot
     generation; two micro-batches (documents split by doc_id parity)
@@ -1978,6 +1982,7 @@ def streaming_classifier_live(spark, sf_dir):
     import shutil
 
     from airflow_postgres_csv_spark.operators.classifier import (
+        load_classifier,
         save_classifier,
         train_quality_classifier,
     )
@@ -1989,7 +1994,8 @@ def streaming_classifier_live(spark, sf_dir):
     )
     from airflow_postgres_csv_spark.queries.snapshot_queries import _temp_root
     from airflow_postgres_csv_spark.streaming.sinks import (
-        start_classifier_sink,
+        classifier_scoring_batch,
+        start_batch_sink,
     )
 
     docs = t(spark, sf_dir, "documents")
@@ -2024,9 +2030,17 @@ def streaming_classifier_live(spark, sf_dir):
             .parquet(src)
         )
 
+    # the generation is pinned once, before the stream starts
+    model_version = snapshot_versions(model_root)[-1]
+    frozen = load_classifier(spark, model_root, model_version)
+
     def sink(s):
-        return start_classifier_sink(
-            s, root, model_root, ckpt, drop_rejected=True
+        return start_batch_sink(
+            s,
+            lambda df, bid: classifier_scoring_batch(
+                df, bid, root, frozen, model_version, drop_rejected=True
+            ),
+            ckpt,
         )
 
     q = sink(stream())

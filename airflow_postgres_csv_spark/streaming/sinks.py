@@ -6,33 +6,47 @@ write-ahead log, so a crashed/restarted query resumes from the last
 committed micro-batch without dropping or duplicating rows. (The memory
 sink in ``windows.run_to_memory_sink`` is the test harness; this is the
 real thing.)
+
+Every other sink is ONE entry point plus a named batch body::
+
+    start_batch_sink(stream, lambda df, bid: snapshot_batch_commit(df, bid, root), ckpt)
+
+``start_batch_sink`` is ``foreachBatch`` + checkpoint; the body makes the
+destination drop replayed micro-batches (the checkpoint replays any batch
+it had not marked committed when the query crashed). Snapshot-table bodies
+gate on the destination's ``last_batch_id`` high-water stamp
+(``snapshots._batch_replayed``) and write the stamp inside the same atomic
+publish as the data; ``jdbc_upsert_batch`` is idempotent by key instead.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 __all__ = [
     "start_parquet_sink",
+    "start_batch_sink",
     "jdbc_upsert_batch",
-    "start_jdbc_upsert_sink",
     "snapshot_batch_commit",
-    "start_snapshot_sink",
-    "start_expectations_sink",
+    "apply_changes_batch",
     "merge_into_batch",
-    "start_merge_into_sink",
     "text_index_batch",
-    "start_text_index_sink",
     "ann_index_batch",
-    "start_ann_index_sink",
     "dedup_ingest_batch",
-    "start_dedup_ingest_sink",
     "wap_batch",
-    "start_wap_sink",
+    "classifier_scoring_batch",
     "ivm_batch",
-    "start_ivm_sink",
+    "join_ivm_batch",
 ]
+
+# Optimistic-concurrency retries of a batch's append or publish: a
+# concurrent MAINTENANCE commit (compact, batch ETL append) winning the
+# version race must not fail the micro-batch — appends rebase in
+# O(manifest) with the batch-id stamp still inside the one atomic publish.
+_RETRIES = 2
 
 
 def start_parquet_sink(
@@ -57,6 +71,26 @@ def start_parquet_sink(
     )
 
 
+def start_batch_sink(
+    stream_df: DataFrame,
+    body: Callable[[DataFrame, int], object],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Run ``body(batch_df, batch_id)`` on every micro-batch of
+    ``stream_df`` (``foreachBatch``, append mode), checkpointed at
+    ``checkpoint_dir``. Restarting with the same checkpoint resumes after
+    the last committed batch and may replay the one in flight at a crash;
+    the body's replay gate (or keyed idempotence) turns that
+    at-least-once delivery into exactly-once. The body's return value is
+    ignored."""
+    return (
+        stream_df.writeStream.outputMode("append")
+        .foreachBatch(body)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
+
+
 def jdbc_upsert_batch(
     batch_df: DataFrame,
     url: str,
@@ -64,7 +98,9 @@ def jdbc_upsert_batch(
     key_cols: list[str],
     driver: str = "org.postgresql.Driver",
 ) -> None:
-    """Upsert one (micro-)batch into a JDBC table, idempotently.
+    """Upsert one (micro-)batch into a JDBC table, idempotently — the
+    body of a keyed JDBC stream (Spark's built-in jdbc sink is
+    append-only; real pipelines need merge-by-key).
 
     Shape: Spark writes the batch into a staging table in parallel
     (truncate-overwrite), then ONE ``MERGE INTO target USING staging ON
@@ -110,38 +146,11 @@ def jdbc_upsert_batch(
         conn.close()
 
 
-def start_jdbc_upsert_sink(
-    stream_df: DataFrame,
-    url: str,
-    table: str,
-    key_cols: list[str],
-    checkpoint_dir: str,
-    driver: str = "org.postgresql.Driver",
-) -> StreamingQuery:
-    """Stream into a JDBC table with keyed upserts (``foreachBatch``).
-
-    Spark's built-in jdbc sink is append-only; real pipelines need
-    merge-by-key. foreachBatch + :func:`jdbc_upsert_batch` provides it
-    with exactly-once effective semantics: the checkpoint replays
-    uncommitted batches, the keyed MERGE makes replays no-ops.
-    """
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda batch_df, _bid: jdbc_upsert_batch(
-                batch_df, url=url, table=table, key_cols=key_cols, driver=driver
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
-
-
-def snapshot_batch_commit(
-    batch_df: DataFrame, batch_id: int, root: str, retries: int = 2
-) -> bool:
+def snapshot_batch_commit(batch_df: DataFrame, batch_id: int, root: str) -> bool:
     """foreachBatch body: commit one micro-batch as a snapshot version,
-    exactly once.
+    exactly once — the bronze-layer ingestion pattern (downstream
+    consumers use ``snapshot_changes`` to process exactly the newly
+    ingested files).
 
     Structured Streaming may REPLAY a micro-batch after a crash between the
     sink action and the checkpoint commit; idempotence must come from the
@@ -154,41 +163,20 @@ def snapshot_batch_commit(
     snapshot history holds each batch exactly once. (Same keyed-dedup
     discipline as the JDBC MERGE sink, expressed in dataset versions.)
 
-    The high-water mark is the MAX ``last_batch_id`` across all retained
-    manifests, not the latest manifest's: interleaved maintenance commits
-    (``snapshot_compact``, a batch ETL append) carry the stamp forward via
-    manifest inheritance, and even if one is created by an old engine that
-    does not, the scan keeps the gate closed instead of silently reopening
-    the duplicate window. Returns True when a version was committed,
+    The high-water mark survives interleaved maintenance commits
+    (``snapshot_compact``, a batch ETL append), which carry the stamp
+    forward, and a concurrent one winning the version race rebases the
+    append (``_RETRIES``). Returns True when a version was committed,
     False on replay-skip.
     """
     from airflow_postgres_csv_spark.operators import snapshots as S
 
-    if batch_id <= S._max_stamp(root, "last_batch_id", -1):
+    if S._batch_replayed(root, batch_id):
         return False
-    # retries: a concurrent MAINTENANCE commit (compact, batch ETL append)
-    # winning the version race must not fail the micro-batch — appends
-    # rebase in O(manifest) with the batch-id stamp still inside the one
-    # atomic publish (operators/snapshots.py optimistic concurrency).
     S.snapshot_commit(
-        batch_df, root, extra={"last_batch_id": batch_id}, retries=retries
+        batch_df, root, extra={"last_batch_id": batch_id}, retries=_RETRIES
     )
     return True
-
-
-def start_snapshot_sink(
-    stream_df: DataFrame, root: str, checkpoint_dir: str
-) -> StreamingQuery:
-    """Stream into a versioned snapshot dataset: each micro-batch is one
-    append commit (the bronze-layer ingestion pattern). Restart-safe via
-    ``snapshot_batch_commit``'s batch-id gate; downstream consumers use
-    ``snapshot_changes`` to process exactly the newly ingested files."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(lambda df, bid: snapshot_batch_commit(df, bid, root))
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def apply_changes_batch(
@@ -197,7 +185,8 @@ def apply_changes_batch(
     """foreachBatch body for a CHANGE DATA FEED stream (the snapshot
     source's ``changeFeed=true``): apply one micro-batch of
     ``_change_type`` insert/delete rows to a keyed downstream snapshot
-    table, exactly once — streaming APPLY CHANGES INTO.
+    table, exactly once — streaming APPLY CHANGES INTO, so the
+    downstream table mirrors the source's LIVE state across restarts.
 
     Net effect per key: a micro-batch may carry several changes for one
     key (insert v1, delete v3, re-insert v5); only the change with the
@@ -224,7 +213,7 @@ def apply_changes_batch(
 
     stamp = {"last_batch_id": batch_id}
     versions = S.snapshot_versions(dst_root)
-    if batch_id <= S._max_stamp(dst_root, "last_batch_id", -1):
+    if S._batch_replayed(dst_root, batch_id):
         return False
     data_cols = [
         c for c in batch_df.columns if c not in (VERSION_COL, CHANGE_COL)
@@ -275,56 +264,38 @@ def apply_changes_batch(
     return True
 
 
-def start_apply_changes_sink(
-    stream_df: DataFrame, dst_root: str, key_col: str, checkpoint_dir: str
-) -> StreamingQuery:
-    """Stream a snapshot change feed into a keyed downstream snapshot
-    table: the streaming APPLY CHANGES INTO pipeline. ``stream_df`` must
-    be a ``changeFeed=true`` snapshot_feed stream (rows carry
-    ``_change_type`` / ``_commit_version``); the downstream table mirrors
-    the source's LIVE state exactly once across restarts."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: apply_changes_batch(df, bid, dst_root, key_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def merge_into_batch(
     batch_df: DataFrame,
     batch_id: int,
     root: str,
     key: str,
-    prepare=None,
-    retries: int = 0,
     **clauses,
 ) -> bool:
     """foreachBatch body: one micro-batch as the SOURCE of a full MERGE
     INTO against a keyed snapshot table, exactly once — Delta's
-    streaming-upsert-with-clauses pattern.
+    streaming-upsert-with-clauses pattern, the silver-layer upsert: running
+    per-key state maintained by UPDATE SET expressions over (t, s),
+    conditional deletes, and insert-on-first-sight.
 
-    ``prepare`` (optional ``DataFrame -> DataFrame``) runs first — the
-    usual per-batch pre-aggregation that makes the source unique per key
-    (MERGE requires it; a raw event stream rarely is). ``clauses`` pass
-    through to :func:`snapshot_merge_into` (``matched_update``,
-    ``matched_delete_condition``, ``not_matched_condition``, ...). The
-    batch id stamps the merge's single atomic publish (the no-op path
-    included), so a replayed micro-batch is dropped by the high-water
-    gate before any work — the same discipline as
-    ``snapshot_batch_commit``, with MERGE's one-commit-point guarantee
+    MERGE requires a source unique per key, and a raw event stream rarely
+    is: the caller passes the per-batch pre-aggregation as the batch
+    (``lambda df, bid: merge_into_batch(prepare(df), bid, ...)`` — a lazy
+    transformation, so the gate below still runs before any work).
+    ``clauses`` pass through to :func:`snapshot_merge_into`
+    (``matched_update``, ``matched_delete_condition``,
+    ``not_matched_condition``, ...). The batch id stamps the merge's single
+    atomic publish (the no-op path included), so a replayed micro-batch is
+    dropped by the high-water gate before any work — the same discipline
+    as ``snapshot_batch_commit``, with MERGE's one-commit-point guarantee
     doing the rest. A first batch against an EMPTY root falls back to a
-    plain commit of the (prepared) source — MERGE needs a table, and the
-    insert clause semantics of an empty target are exactly an append.
-    Returns True when the batch applied, False on replay-skip.
+    plain commit of the source — MERGE needs a table, and the insert clause
+    semantics of an empty target are exactly an append. Returns True when
+    the batch applied, False on replay-skip.
     """
     from airflow_postgres_csv_spark.operators import snapshots as S
 
-    if batch_id <= S._max_stamp(root, "last_batch_id", -1):
+    if S._batch_replayed(root, batch_id):
         return False
-    src = prepare(batch_df) if prepare is not None else batch_df
     stamp = {"last_batch_id": batch_id}
     if not S.snapshot_versions(root):
         insert_ok = clauses.get("insert_when_not_matched", True)
@@ -332,106 +303,17 @@ def merge_into_batch(
         if insert_ok:
             from pyspark.sql import functions as F
 
-            first = src if cond is None else src.alias("s").where(
+            first = batch_df if cond is None else batch_df.alias("s").where(
                 F.coalesce(F.expr(cond), F.lit(False))
             )
         else:
-            first = src.limit(0)
-        S.snapshot_commit(first, root, extra=stamp, retries=retries)
+            first = batch_df.limit(0)
+        S.snapshot_commit(first, root, extra=stamp)
         return True
     S.snapshot_merge_into(
-        src.sparkSession, root, src, key=key, extra=stamp, **clauses
+        batch_df.sparkSession, root, batch_df, key=key, extra=stamp, **clauses
     )
     return True
-
-
-def start_merge_into_sink(
-    stream_df: DataFrame,
-    root: str,
-    checkpoint_dir: str,
-    key: str,
-    prepare=None,
-    **clauses,
-) -> StreamingQuery:
-    """Stream into a keyed snapshot table via MERGE INTO per micro-batch
-    (``merge_into_batch``): the silver-layer upsert pattern — running
-    per-key state maintained by UPDATE SET expressions over (t, s),
-    conditional deletes, and insert-on-first-sight, restart-safe via the
-    batch-id gate inside the merge's atomic publish."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: merge_into_batch(
-                df, bid, root, key, prepare=prepare, **clauses
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def start_expectations_sink(
-    stream_df: DataFrame,
-    root: str,
-    checkpoint_dir: str,
-    expectations: list,
-    quarantine_root: str | None = None,
-) -> StreamingQuery:
-    """Stream through DLT-style expectations into a snapshot table (+
-    quarantine table): each micro-batch is routed by
-    ``snapshot_write_with_expectations(batch_id=...)`` — warn rules count,
-    drop rules remove, quarantine rules divert offenders with their
-    failed-rule names. Exactly-once per DESTINATION across crash replays:
-    the two tables are gated independently by their own batch-id
-    high-water marks, each stamped inside its commit's single atomic
-    publish, so a crash between the two commits replays the batch into
-    only the table that missed it (see the operator's docstring)."""
-    from airflow_postgres_csv_spark.operators.expectations import (
-        snapshot_write_with_expectations,
-    )
-
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: snapshot_write_with_expectations(
-                df, root, expectations, quarantine_root,
-                batch_id=bid, retries=2,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def start_catalog_expectations_sink(
-    stream_df: DataFrame,
-    catalog_root: str,
-    main: tuple,
-    checkpoint_dir: str,
-    expectations: list,
-    quarantine: tuple | None = None,
-) -> StreamingQuery:
-    """The ATOMIC variant of ``start_expectations_sink``: each micro-batch's
-    clean and quarantined halves publish to catalog readers in ONE catalog
-    flip (``catalog_write_with_expectations``), gated exactly-once by a
-    single catalog-level batch stamp — no reader ever sees half a batch,
-    and a crash between the table commits and the flip replays into
-    adoption, not duplication."""
-    from airflow_postgres_csv_spark.operators.expectations import (
-        catalog_write_with_expectations,
-    )
-
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: catalog_write_with_expectations(
-                df, catalog_root, main, expectations, quarantine,
-                batch_id=bid, retries=2,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def text_index_batch(
@@ -444,19 +326,20 @@ def text_index_batch(
 ) -> bool:
     """foreachBatch body: keep a persisted BM25 index
     (operators/text_index.py) fresh from a live document stream, exactly
-    once. First committed batch BUILDS the index (recording
-    ``positions``); every later batch runs ``text_index_append`` — the
-    O(batch) incremental path whose exact integer stats make live search
-    scores bit-identical to a from-scratch rebuild over the same prefix.
-    The micro-batch id stamps the SAME atomic manifest publish as the
-    postings + stats, so a crash-replayed batch is dropped by the
-    high-water gate before any tokenization — the index can never
-    double-count a document's stats. Returns True when the batch
-    applied, False on replay-skip."""
+    once — the live-corpus search pattern: searches between batches see a
+    consistent pinned index version. First committed batch BUILDS the
+    index (recording ``positions``); every later batch runs
+    ``text_index_append`` — the O(batch) incremental path whose exact
+    integer stats make live search scores bit-identical to a from-scratch
+    rebuild over the same prefix. The micro-batch id stamps the SAME
+    atomic manifest publish as the postings + stats, so a crash-replayed
+    batch is dropped by the high-water gate before any tokenization — the
+    index can never double-count a document's stats. Returns True when
+    the batch applied, False on replay-skip."""
     from airflow_postgres_csv_spark.operators import snapshots as S
     from airflow_postgres_csv_spark.operators import text_index as TI
 
-    if batch_id <= S._max_stamp(index_root, "last_batch_id", -1):
+    if S._batch_replayed(index_root, batch_id):
         return False
     stamp = {"last_batch_id": batch_id}
     if not S.snapshot_versions(index_root):
@@ -471,33 +354,6 @@ def text_index_batch(
     return True
 
 
-def start_text_index_sink(
-    stream_df: DataFrame,
-    index_root: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    positions: bool = False,
-) -> StreamingQuery:
-    """Stream documents into a persisted BM25 text index
-    (``text_index_batch`` per micro-batch): the live-corpus search
-    pattern — searches between batches see a consistent pinned index
-    version, restarts resume behind the batch-id gate, and the appended
-    index scores bit-identically to a batch rebuild over the same
-    document prefix."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: text_index_batch(
-                df, bid, index_root,
-                id_col=id_col, text_col=text_col, positions=positions,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def ann_index_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -507,47 +363,25 @@ def ann_index_batch(
 ) -> bool:
     """foreachBatch body: keep a persisted ANN index of any shape — IVF,
     PQ or IVF-PQ (operators/similarity.py) — fresh from a live embedding
-    stream, exactly once. The index must be BUILT beforehand (build-once
-    / serve-many — training a quantizer inside a sink would put a
-    clustering job on the ingest path); each batch codes its vectors
-    with the FROZEN models (``ivfpq_index_append``) and appends one
-    generation-pinned commit with the batch id stamped inside the same
-    atomic publish. Replays are dropped by the high-water gate; a
-    concurrent index rebuild conflicts (``expected_head``) instead of
-    mixing generations."""
+    stream, exactly once; searches between batches see old + new vectors
+    through the same ``ivfpq_search_index`` serve path. The index must be
+    BUILT beforehand (build-once / serve-many — training a quantizer
+    inside a sink would put a clustering job on the ingest path); each
+    batch codes its vectors with the FROZEN models
+    (``ivfpq_index_append``) and appends one generation-pinned commit with
+    the batch id stamped inside the same atomic publish. Replays are
+    dropped by the high-water gate; a concurrent index rebuild conflicts
+    (``expected_head``) instead of mixing generations."""
     from airflow_postgres_csv_spark.operators import snapshots as S
     from airflow_postgres_csv_spark.operators.similarity import ivfpq_index_append
 
-    if batch_id <= S._max_stamp(index_root, "last_batch_id", -1):
+    if S._batch_replayed(index_root, batch_id):
         return False
     ivfpq_index_append(
         batch_df, index_root, id_col=id_col, vec_col=vec_col,
         extra={"last_batch_id": batch_id},
     )
     return True
-
-
-def start_ann_index_sink(
-    stream_df: DataFrame,
-    index_root: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> StreamingQuery:
-    """Stream embeddings into a pre-built ANN index of any shape
-    (``ann_index_batch`` per micro-batch): searches between batches see
-    old + new vectors through the same ``ivfpq_search_index`` serve
-    path, with zero training jobs on the ingest side."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: ann_index_batch(
-                df, bid, index_root, id_col=id_col, vec_col=vec_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def dedup_ingest_batch(
@@ -568,23 +402,24 @@ def dedup_ingest_batch(
     dedup key (one hash-agg — deterministic); (2) cross-corpus rejects =
     key anti-join against the PERSISTED fingerprint table at
     ``keys_root`` (a (key, id) snapshot table — the corpus text is never
-    re-read or re-hashed, and the key scan is column-pruned); (3) the
-    survivors append to ``root`` and their keys to ``keys_root``, each
-    gated by its OWN batch-id high-water stamp inside its atomic
-    publish. Commit order is data-then-keys ON PURPOSE: survivors are
-    computed against the keys table as of BEFORE this batch, so a crash
-    between the two commits replays into whichever table missed it and
-    converges — keys-first would make the replay's anti-join reject the
-    batch's own survivors. ``key`` defaults to the md5 fingerprint of
-    normalized text (same as operators/dedup.py's exact family).
-    Returns True when the batch applied to at least one table."""
+    re-read or re-hashed, and the key scan is column-pruned, so the
+    reject check is O(batch), not O(corpus)); (3) the survivors append to
+    ``root`` and their keys to ``keys_root``, each gated by its OWN
+    batch-id high-water stamp inside its atomic publish. Commit order is
+    data-then-keys ON PURPOSE: survivors are computed against the keys
+    table as of BEFORE this batch, so a crash between the two commits
+    replays into whichever table missed it and converges — keys-first
+    would make the replay's anti-join reject the batch's own survivors.
+    ``key`` defaults to the md5 fingerprint of normalized text (same as
+    operators/dedup.py's exact family). Returns True when the batch
+    applied to at least one table."""
     from pyspark.sql import functions as F
 
     from airflow_postgres_csv_spark.functions import texts as X
     from airflow_postgres_csv_spark.operators import snapshots as S
 
-    data_done = batch_id <= S._max_stamp(root, "last_batch_id", -1)
-    keys_done = batch_id <= S._max_stamp(keys_root, "last_batch_id", -1)
+    data_done = S._batch_replayed(root, batch_id)
+    keys_done = S._batch_replayed(keys_root, batch_id)
     if data_done and keys_done:
         return False
     k = key if key is not None else X.fingerprint_md5("text")
@@ -599,39 +434,15 @@ def dedup_ingest_batch(
     survivors = survivors.drop("_mid").localCheckpoint(eager=True)
     stamp = {"last_batch_id": batch_id}
     if not data_done:
-        S.snapshot_commit(survivors.drop("_k"), root, extra=stamp, retries=2)
+        S.snapshot_commit(
+            survivors.drop("_k"), root, extra=stamp, retries=_RETRIES
+        )
     if not keys_done:
         S.snapshot_commit(
             survivors.select("_k", F.col(id_col)), keys_root,
-            extra=stamp, retries=2,
+            extra=stamp, retries=_RETRIES,
         )
     return True
-
-
-def start_dedup_ingest_sink(
-    stream_df: DataFrame,
-    root: str,
-    keys_root: str,
-    checkpoint_dir: str,
-    key=None,
-    id_col: str = "doc_id",
-) -> StreamingQuery:
-    """Stream documents through exact dedup-on-ingest
-    (``dedup_ingest_batch`` per micro-batch): the corpus table holds each
-    content key exactly once (first batch wins, min-id within a batch),
-    the companion fingerprint table makes every batch's reject check an
-    O(batch) key anti-join instead of an O(corpus) re-hash, and both
-    tables recover exactly-once across crash replays."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: dedup_ingest_batch(
-                df, bid, root, keys_root, key=key, id_col=id_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def wap_batch(
@@ -639,15 +450,17 @@ def wap_batch(
     batch_id: int,
     root: str,
     audits: dict,
-    retries: int = 2,
 ) -> str:
     """foreachBatch body: write-audit-publish one micro-batch, exactly
-    once. Returns ``"published"``, ``"skipped"`` (replay of an already
-    published batch) or ``"quarantined"`` (audit failure — main is
-    untouched, the batch is retained on branch ``wap-<batch_id>`` for
-    triage, and the stream KEEPS RUNNING: a bad batch must not take the
-    pipeline down, exactly the expectations-sink contract upgraded from
-    per-row rules to aggregate audits over the full would-be state).
+    once. The batch stages on an ephemeral branch, aggregate ``audits``
+    validate the FULL would-be table state (not just the increment), and
+    only a passing batch publishes to main. Returns ``"published"``,
+    ``"skipped"`` (replay of an already published batch) or
+    ``"quarantined"`` (audit failure — main is untouched, the batch is
+    retained on branch ``wap-<batch_id>`` for triage, listed by
+    ``snapshot_branches``, and the stream KEEPS RUNNING: a bad batch must
+    not take the pipeline down, exactly the expectations-sink contract
+    upgraded from per-row rules to aggregate audits).
 
     Exactly-once: the batch id rides the staging commit's ``extra=`` and
     is carried into main's ONE atomic publish link, so the high-water
@@ -660,7 +473,7 @@ def wap_batch(
     from airflow_postgres_csv_spark.operators import branches as B
     from airflow_postgres_csv_spark.operators import snapshots as S
 
-    if batch_id <= S._max_stamp(root, "last_batch_id", -1):
+    if S._batch_replayed(root, batch_id):
         return "skipped"
     name = f"wap-{batch_id}"
     if name in B.snapshot_branches(root):
@@ -668,33 +481,12 @@ def wap_batch(
     try:
         B.write_audit_publish(
             batch_df.sparkSession, root, batch_df, audits, branch=name,
-            rebase=True, publish_retries=retries,
+            rebase=True, publish_retries=_RETRIES,
             extra={"last_batch_id": batch_id},
         )
     except B.AuditError:
         return "quarantined"
     return "published"
-
-
-def start_wap_sink(
-    stream_df: DataFrame,
-    root: str,
-    audits: dict,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Stream into a snapshot table through a write-audit-publish gate:
-    each micro-batch stages on an ephemeral branch, aggregate ``audits``
-    validate the FULL would-be table state (not just the increment), and
-    only passing batches fast-forward main — failing batches are
-    quarantined as retained branches (``snapshot_branches``) while the
-    stream keeps running. Restart-safe via ``wap_batch``'s batch-id
-    gate."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(lambda df, bid: wap_batch(df, bid, root, audits))
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def classifier_scoring_batch(
@@ -706,21 +498,23 @@ def classifier_scoring_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
     drop_rejected: bool = False,
-    retries: int = 2,
 ) -> bool:
-    """foreachBatch body of the score-on-ingest sink: score one
-    micro-batch under a FROZEN classifier generation (the model was
-    loaded once at sink start — the persisted-index discipline of the
-    ANN/BM25 sinks: serving never retrains) and append the documents
-    WITH their ``score``/``pred`` columns as one snapshot commit.
+    """foreachBatch body of score-on-ingest: score one micro-batch under
+    a FROZEN classifier generation and append the documents WITH their
+    ``score``/``pred`` columns as one snapshot commit. The caller loads
+    the model once, before the stream starts (``load_classifier``), and
+    passes it with its snapshot version — the persisted-index discipline
+    of the ANN/BM25 bodies: serving never retrains, and a retrain
+    publishes a new generation that takes effect when the caller next
+    loads it (a sink restart), never mid-stream.
 
     Exactly-once via the batch-id high-water gate, and the scoring
     model's snapshot version rides the SAME atomic publish
     (``extra={"classifier_model": ...}``) — every committed row is
     auditable to the exact model generation that scored it.
-    ``drop_rejected=True`` additionally gates ingest on ``pred = 1``
-    (quality filtering at the door; the scores of kept rows still land,
-    so thresholds can be re-tightened downstream)."""
+    ``drop_rejected=True`` turns the body into a quality GATE on
+    ``pred = 1`` (the scores of kept rows still land, so thresholds can
+    be re-tightened downstream)."""
     from pyspark.sql import functions as F
 
     from airflow_postgres_csv_spark.operators import snapshots as S
@@ -728,7 +522,7 @@ def classifier_scoring_batch(
         score_documents,
     )
 
-    if batch_id <= S._max_stamp(root, "last_batch_id", -1):
+    if S._batch_replayed(root, batch_id):
         return False
     scored = batch_df.join(
         score_documents(batch_df, model, id_col=id_col, text_col=text_col),
@@ -742,55 +536,9 @@ def classifier_scoring_batch(
             "last_batch_id": batch_id,
             "classifier_model": {"version": int(model_version)},
         },
-        retries=retries,
+        retries=_RETRIES,
     )
     return True
-
-
-def start_classifier_sink(
-    stream_df: DataFrame,
-    root: str,
-    model_root: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    model_version: int | str | None = None,
-    drop_rejected: bool = False,
-) -> StreamingQuery:
-    """Score-on-ingest (VERDICT r9 item 6): stream documents through the
-    trained quality classifier (operators/classifier.py) into a snapshot
-    table — each row lands with its ``score``/``pred`` and the scoring
-    model's version stamped inside the same atomic publish. The model
-    generation is pinned at sink START (pass ``model_version`` to pin an
-    older one); retraining publishes a new generation that takes effect
-    on the next sink (re)start, never mid-stream. Restart-safe via the
-    batch-id gate; ``drop_rejected=True`` turns it into a quality GATE
-    (predicted-bad rows never land)."""
-    from airflow_postgres_csv_spark.operators.classifier import (
-        load_classifier,
-    )
-    from airflow_postgres_csv_spark.operators.snapshots import (
-        resolve_version,
-        snapshot_versions,
-    )
-
-    spark = stream_df.sparkSession
-    v = resolve_version(model_root, model_version)
-    if v is None:
-        v = snapshot_versions(model_root)[-1]
-    model = load_classifier(spark, model_root, v)
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, bid: classifier_scoring_batch(
-                df, bid, root, model, v,
-                id_col=id_col, text_col=text_col,
-                drop_rejected=drop_rejected,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def ivm_batch(
@@ -803,10 +551,11 @@ def ivm_batch(
 ) -> bool:
     """foreachBatch body: ingest one micro-batch into the SOURCE snapshot
     table exactly once (``snapshot_batch_commit``'s batch-id gate), then
-    advance the incrementally-maintained per-group rollup to the source
-    head (``snapshot_incremental_agg`` — change-feed IVM with
+    advance the incrementally-maintained per-group (count, sum) rollup to
+    the source head (``snapshot_incremental_agg`` — change-feed IVM with
     retractions, high-water-marked on ``ivm_applied_version`` inside its
-    ONE atomic commit).
+    ONE atomic commit). Read the rollup with ``snapshot_read(dst_root)``
+    filtered to ``n > 0`` (retraction-zeroed groups persist as rows).
 
     Crash matrix, all exactly-once without idempotence tricks: a replay
     after the source commit skips the ingest (stamp) and re-runs the
@@ -841,7 +590,10 @@ def join_ivm_batch(
     incrementally-maintained join rollup over fact ⋈ dimension to both
     tables' heads (``snapshot_incremental_join_agg`` — the signed
     delta-join, high-water-marked on ``ivm_applied_a``/``_b`` inside its
-    ONE atomic commit).
+    ONE atomic commit). ``on`` / ``group_col`` / ``aggs`` follow the
+    batch operator (the group and amount columns are POST-JOIN names,
+    either side); read the rollup with ``snapshot_read(dst_root)``
+    filtered to ``n > 0``.
 
     The crash matrix is ``ivm_batch``'s: a replay after the fact commit
     skips the ingest and re-runs the rollup as a no-op catch-up; a crash
@@ -859,67 +611,3 @@ def join_ivm_batch(
         on, group_col, amount_col, aggs=aggs,
     )
     return committed
-
-
-def start_join_ivm_sink(
-    stream_df: DataFrame,
-    a_root: str,
-    b_root: str,
-    dst_root: str,
-    checkpoint_dir: str,
-    on,
-    group_col,
-    amount_col: str,
-    aggs=("count", "sum"),
-    prepare=None,
-) -> StreamingQuery:
-    """Stream facts into a snapshot table AND keep a live per-group
-    rollup over ``facts ⋈ dimension`` incrementally maintained beside it
-    — the streaming face of ``snapshot_incremental_join_agg``. ``on`` /
-    ``group_col`` / ``aggs`` follow the batch operator (the group and
-    amount columns are POST-JOIN names, either side). Read the rollup
-    with ``snapshot_read(dst_root)`` filtered to ``n > 0``."""
-
-    def body(df: DataFrame, bid: int) -> None:
-        if prepare is not None:
-            df = prepare(df)
-        join_ivm_batch(
-            df, bid, a_root, b_root, dst_root, on, group_col, amount_col,
-            aggs,
-        )
-
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def start_ivm_sink(
-    stream_df: DataFrame,
-    src_root: str,
-    dst_root: str,
-    checkpoint_dir: str,
-    group_col: str,
-    amount_col: str,
-    prepare=None,
-) -> StreamingQuery:
-    """Stream into a source snapshot table AND keep a live per-group
-    (count, sum) rollup incrementally maintained beside it — the
-    streaming face of ``snapshot_incremental_agg``. ``prepare`` optionally
-    projects each micro-batch before ingest (e.g. derive an integer
-    amount column). Read the rollup with ``snapshot_read(dst_root)``
-    filtered to ``n > 0`` (retraction-zeroed groups persist as rows)."""
-
-    def body(df: DataFrame, bid: int) -> None:
-        if prepare is not None:
-            df = prepare(df)
-        ivm_batch(df, bid, src_root, dst_root, group_col, amount_col)
-
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(body)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )

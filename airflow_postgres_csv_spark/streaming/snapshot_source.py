@@ -1,6 +1,6 @@
 """Streaming SOURCE over the versioned-snapshot subsystem: incremental,
 exactly-once consumption of snapshot commits as a Structured Streaming
-feed (the read-side counterpart of ``streaming/sinks.snapshot_stream_sink``).
+feed (the read-side counterpart of ``streaming/sinks.snapshot_batch_commit``).
 
 This is the lakehouse "table as a stream" primitive (Delta's
 ``readStream.format("delta")``, Iceberg's incremental read) expressed

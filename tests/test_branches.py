@@ -81,6 +81,34 @@ def test_publish_is_fast_forward_only(spark, tmp_path):
     assert snapshot_branches(root) == {}
 
 
+@pytest.mark.parametrize("rebase", [False, True], ids=["fast_forward", "rebase"])
+def test_publish_keeps_main_stream_stamps(spark, tmp_path, rebase):
+    """A branch starts as a clone WITHOUT main's stream stamps; both
+    publish paths merge them by max, so main's head keeps its
+    ``last_batch_id`` and a replayed batch is still dropped after
+    ``snapshot_expire`` removed every older carrier."""
+    from airflow_postgres_csv_spark.operators.snapshots import (
+        _load_manifest,
+        snapshot_expire,
+    )
+    from airflow_postgres_csv_spark.streaming.sinks import snapshot_batch_commit
+
+    root = str(tmp_path / "t")
+    for bid in range(3):
+        lo = bid * 10
+        assert snapshot_batch_commit(_df(spark, lo, lo + 10), bid, root)
+    broot = snapshot_branch(root, "b")
+    snapshot_commit(_df(spark, 30, 33), broot)
+    if rebase:
+        snapshot_commit(_df(spark, 40, 41), root)  # main moves on
+    snapshot_publish_branch(root, "b", rebase=rebase)
+    head = _load_manifest(root, snapshot_versions(root)[-1])
+    assert head.get("last_batch_id") == 2
+    snapshot_expire(root, keep_last=1)
+    assert snapshot_batch_commit(_df(spark, 10, 20), 1, root) is False
+    assert snapshot_read(spark, root).count() == 33 + rebase
+
+
 def test_branch_mor_delete_publishes_tombstones(spark, tmp_path):
     """Branch-side MOR deletes publish as tombstones: main's head hides
     the rows without a rewrite, and the key files travel with the link."""
@@ -372,14 +400,17 @@ def test_rebase_refuses_interleavable_changes(spark, tmp_path):
 
 
 def test_streaming_wap_sink_restart_and_quarantine(spark, tmp_path):
-    """start_wap_sink across a checkpointed RESTART: published batches
+    """The streaming WAP body across a checkpointed RESTART: published batches
     are exactly-once (replays skip on the batch-id stamp), a failing
     batch quarantines on its retained branch without stopping the
     stream, and the bootstrap batch creates main's v1 through the same
     gate."""
     import shutil
 
-    from airflow_postgres_csv_spark.streaming.sinks import start_wap_sink
+    from airflow_postgres_csv_spark.streaming.sinks import (
+        start_batch_sink,
+        wap_batch,
+    )
 
     src = tmp_path / "src"
     src.mkdir()
@@ -400,9 +431,14 @@ def test_streaming_wap_sink_restart_and_quarantine(spark, tmp_path):
         _df(spark, 0, 1).schema
     ).option("maxFilesPerTrigger", "1").parquet(str(src))
 
+    def wap_sink(s):
+        return start_batch_sink(
+            s, lambda df, bid: wap_batch(df, bid, root, audits), ckpt
+        )
+
     stage(0, _df(spark, 0, 10))                       # bootstrap, clean
     stage(1, _df(spark, 10, 20).withColumn("v", F.lit(-1)))  # audit fail
-    q = start_wap_sink(stream(), root, audits, ckpt)
+    q = wap_sink(stream())
     try:
         q.processAllAvailable()
     finally:
@@ -414,7 +450,7 @@ def test_streaming_wap_sink_restart_and_quarantine(spark, tmp_path):
     ).count() == 20
     # restart with a new clean file: only batch 2 lands, no replays
     stage(2, _df(spark, 20, 30))
-    q = start_wap_sink(stream(), root, audits, ckpt)
+    q = wap_sink(stream())
     try:
         q.processAllAvailable()
     finally:

@@ -138,9 +138,10 @@ def test_streaming_sink_end_to_end(spark, tmp_path):
     import shutil
     import tempfile
 
-    from airflow_postgres_csv_spark.streaming.sinks import (
-        start_catalog_expectations_sink,
+    from airflow_postgres_csv_spark.operators.expectations import (
+        catalog_write_with_expectations,
     )
+    from airflow_postgres_csv_spark.streaming.sinks import start_batch_sink
 
     cat, clean, quar = _paths(tmp_path)
     src = tempfile.mkdtemp(prefix="cat_exp_src_")
@@ -151,9 +152,13 @@ def test_streaming_sink_end_to_end(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(os.path.join(src, "b0"))
         )
-        q = start_catalog_expectations_sink(
-            stream, cat, ("clean", clean), str(tmp_path / "ckpt"), RULES,
-            quarantine=("quar", quar),
+        q = start_batch_sink(
+            stream,
+            lambda df, bid: catalog_write_with_expectations(
+                df, cat, ("clean", clean), RULES, ("quar", quar),
+                batch_id=bid, retries=2,
+            ),
+            str(tmp_path / "ckpt"),
         )
         q.processAllAvailable()
         q.stop()

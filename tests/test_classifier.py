@@ -122,12 +122,13 @@ def test_streaming_classifier_sink_scores_and_pins_generation(
 ):
     """Score-on-ingest sink: live scores equal batch scoring, each
     commit stamps the model generation it used, replayed batches are
-    no-ops, and the generation is pinned at sink start — a retrain mid-
-    stream never changes in-flight scoring (pass model_version to pin
-    an older generation explicitly)."""
+    no-ops, and the generation is the one the caller loaded before the
+    stream started — a retrain mid-stream never changes in-flight
+    scoring (load an older version to pin it explicitly)."""
     import os
 
     from airflow_postgres_csv_spark.operators.classifier import (
+        load_classifier,
         save_classifier,
     )
     from airflow_postgres_csv_spark.operators.snapshots import (
@@ -136,7 +137,8 @@ def test_streaming_classifier_sink_scores_and_pins_generation(
         snapshot_versions,
     )
     from airflow_postgres_csv_spark.streaming.sinks import (
-        start_classifier_sink,
+        classifier_scoring_batch,
+        start_batch_sink,
     )
 
     docs = load(spark, sf_dir, "documents")
@@ -153,10 +155,11 @@ def test_streaming_classifier_sink_scores_and_pins_generation(
     os.makedirs(src)
     docs.limit(40).coalesce(1).write.mode("append").parquet(src)
     root = str(tmp_path / "scored")
-    q = start_classifier_sink(
+    gen1 = load_classifier(spark, model_root, 1)
+    q = start_batch_sink(
         spark.readStream.schema(docs.schema).parquet(src),
-        root, model_root, str(tmp_path / "ckpt"),
-        model_version=1,
+        lambda df, bid: classifier_scoring_batch(df, bid, root, gen1, 1),
+        str(tmp_path / "ckpt"),
     )
     try:
         q.processAllAvailable()

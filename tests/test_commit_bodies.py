@@ -6,7 +6,9 @@ constraints, sketch backfill, the three compactions, rollback, clone and
 both branch publishes). Each resulting manifest is normalized and compared
 with ``golden/commit_bodies.json``, recorded before the writers shared one
 body assembly; the differences listed in ``_FIXED_KEYS`` are the ones that
-assembly fixed on purpose.
+assembly fixed on purpose. The golden ``last_batch_id`` of the fast-forward
+publish and the append after it was edited to 2 by hand when that publish
+started keeping main's stream stamps (it had been absent).
 """
 
 from __future__ import annotations

@@ -121,9 +121,10 @@ def test_expectations_batch_gate_per_table(spark, tmp_path):
 def test_expectations_streaming_sink_exactly_once(spark, tmp_path):
     """The streaming sink routes a micro-batch and a checkpoint-restarted
     run replays nothing."""
-    from airflow_postgres_csv_spark.streaming.sinks import (
-        start_expectations_sink,
+    from airflow_postgres_csv_spark.operators.expectations import (
+        snapshot_write_with_expectations,
     )
+    from airflow_postgres_csv_spark.streaming.sinks import start_batch_sink
 
     src = str(tmp_path / "src")
     _batch(spark).coalesce(1).write.parquet(src)
@@ -131,9 +132,12 @@ def test_expectations_streaming_sink_exactly_once(spark, tmp_path):
     root, quar, ckpt = (str(tmp_path / d) for d in ("t", "q", "ckpt"))
 
     for _ in range(2):  # second run = restart from checkpoint, must no-op
-        q = start_expectations_sink(
+        q = start_batch_sink(
             spark.readStream.schema(schema).parquet(src),
-            root, ckpt, _RULES, quar,
+            lambda df, bid: snapshot_write_with_expectations(
+                df, root, _RULES, quar, batch_id=bid, retries=2
+            ),
+            ckpt,
         )
         q.processAllAvailable()
         q.stop()

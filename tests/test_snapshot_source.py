@@ -178,7 +178,7 @@ def test_apply_changes_sink_mirrors_source_across_restarts(spark, tmp_path):
     from airflow_postgres_csv_spark.operators.snapshots import snapshot_read
     from airflow_postgres_csv_spark.streaming.sinks import (
         apply_changes_batch,
-        start_apply_changes_sink,
+        start_batch_sink,
     )
 
     root, dst, ckpt = (str(tmp_path / d) for d in ("src", "dst", "ckpt"))
@@ -193,7 +193,9 @@ def test_apply_changes_sink_mirrors_source_across_restarts(spark, tmp_path):
             .option("changeFeed", "true")
             .load()
         )
-        q = start_apply_changes_sink(stream, dst, "id", ckpt)
+        q = start_batch_sink(
+            stream, lambda df, bid: apply_changes_batch(df, bid, dst, "id"), ckpt
+        )
         try:
             q.processAllAvailable()
         finally:
@@ -300,7 +302,8 @@ def test_apply_changes_sink_applies_merge_commits(spark, tmp_path):
         snapshot_read,
     )
     from airflow_postgres_csv_spark.streaming.sinks import (
-        start_apply_changes_sink,
+        apply_changes_batch,
+        start_batch_sink,
     )
 
     root, dst, ckpt = (str(tmp_path / d) for d in ("src", "dst", "ckpt"))
@@ -314,7 +317,9 @@ def test_apply_changes_sink_applies_merge_commits(spark, tmp_path):
             .option("changeFeed", "true")
             .load()
         )
-        q = start_apply_changes_sink(stream, dst, "id", ckpt)
+        q = start_batch_sink(
+            stream, lambda df, bid: apply_changes_batch(df, bid, dst, "id"), ckpt
+        )
         try:
             q.processAllAvailable()
         finally:

@@ -273,8 +273,13 @@ def test_streaming_snapshot_sink_exactly_once(spark, tmp_path):
 
     from airflow_postgres_csv_spark.streaming.sinks import (
         snapshot_batch_commit,
-        start_snapshot_sink,
+        start_batch_sink,
     )
+
+    def snapshot_sink(stream, root, ckpt):
+        return start_batch_sink(
+            stream, lambda df, bid: snapshot_batch_commit(df, bid, root), ckpt
+        )
 
     src = str(tmp_path / "in")
     _os.makedirs(src)
@@ -298,7 +303,7 @@ def test_streaming_snapshot_sink_exactly_once(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_snapshot_sink(stream, root, ckpt)
+    q = snapshot_sink(stream, root, ckpt)
     q.processAllAvailable()
     q.stop()
     assert len(snapshot_versions(root)) == 2
@@ -308,7 +313,7 @@ def test_streaming_snapshot_sink_exactly_once(spark, tmp_path):
     assert len(snapshot_versions(root)) == 2
     # restart with the same checkpoint: nothing new -> no new versions;
     # a new file -> exactly one more version
-    q2 = start_snapshot_sink(
+    q2 = snapshot_sink(
         spark.readStream.schema("id long, v long")
         .option("maxFilesPerTrigger", 1)
         .parquet(src),
@@ -2435,7 +2440,10 @@ def test_streaming_ingestion_maintains_sketches(spark, tmp_path):
     from airflow_postgres_csv_spark.operators.snapshots import (
         snapshot_approx_distinct,
     )
-    from airflow_postgres_csv_spark.streaming.sinks import start_snapshot_sink
+    from airflow_postgres_csv_spark.streaming.sinks import (
+        snapshot_batch_commit,
+        start_batch_sink,
+    )
 
     root = str(tmp_path / "snap")
     # seed commit establishes the config (a streamed table is usually
@@ -2462,7 +2470,11 @@ def test_streaming_ingestion_maintains_sketches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_snapshot_sink(stream, root, str(tmp_path / "ckpt"))
+    q = start_batch_sink(
+        stream,
+        lambda df, bid: snapshot_batch_commit(df, bid, root),
+        str(tmp_path / "ckpt"),
+    )
     q.processAllAvailable()
     q.stop()
     assert len(snapshot_versions(root)) == 4  # seed + 3 micro-batches

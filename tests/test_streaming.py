@@ -269,13 +269,13 @@ def test_jdbc_upsert_sink_exactly_once(spark, events_stream_dir, tmp_path):
         ev = SW.stream_events(spark, events_stream_dir).select(
             "event_id", "user_id", "event_type", "value"
         )
-        q = sinks.start_jdbc_upsert_sink(
+        q = sinks.start_batch_sink(
             ev,
-            url=derby,
-            table="ev_upsert",
-            key_cols=["event_id"],
-            checkpoint_dir=str(tmp_path / checkpoint),
-            driver=DERBY,
+            lambda df, _bid: sinks.jdbc_upsert_batch(
+                df, url=derby, table="ev_upsert", key_cols=["event_id"],
+                driver=DERBY,
+            ),
+            str(tmp_path / checkpoint),
         )
         q.processAllAvailable()
         q.stop()
@@ -404,13 +404,12 @@ def test_merge_into_batch_exactly_once_and_replay(spark, tmp_path):
     assert merge_into_batch(empty, 2, root, key="id", matched_update=upd)
     assert merge_into_batch(empty, 2, root, key="id", matched_update=upd) is False
     assert {r.id: r.v for r in snapshot_read(spark, root).collect()} == got
-    # prepare hook: per-batch pre-aggregation makes the source keyed
+    # the caller's per-batch pre-aggregation makes the source keyed
     raw = spark.createDataFrame(
         [(1, 1), (1, 2), (4, 4)], "id long, v long"
     )
     assert merge_into_batch(
-        raw, 3, root, key="id",
-        prepare=lambda df: df.groupBy("id").agg(F.sum("v").alias("v")),
+        raw.groupBy("id").agg(F.sum("v").alias("v")), 3, root, key="id",
         matched_update=upd,
     )
     got = {r.id: r.v for r in snapshot_read(spark, root).collect()}
